@@ -236,9 +236,10 @@ def main() -> None:
         # echo the parallelism the run ACTUALLY used (r13, VERDICT
         # item 2): an 8-core scaling run is attributable from the JSON
         # alone, and "ignored $SPARK_GRAFT_CPUS" can never again be
-        # inferred from ambiguous ~1.0 timing ratios
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS",
-                                   os.cpu_count() or 4)),
+        # inferred from ambiguous ~1.0 timing ratios. Read off the
+        # live session, not re-parsed from $SPARK_GRAFT_CPUS: nothing
+        # after the timed passes may raise and lose this line.
+        "cpus": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
     }))

@@ -78,6 +78,14 @@ def _parse_args(argv: list[str]):
     return ap.parse_known_args(argv)
 
 
+def _db_cache_key(db_fa: str, volumes: int) -> str:
+    """Content key of a database FASTA split into ``volumes`` parts:
+    path, mtime and size (stage_volumes' freshness rule)."""
+    st = os.stat(db_fa)
+    return (f"cli_db_v1:{os.path.abspath(db_fa)}:{st.st_mtime_ns}:"
+            f"{st.st_size}:vols={volumes}")
+
+
 def main(argv: list[str] | None = None) -> int:
     args, blast_opts = _parse_args(sys.argv[1:] if argv is None else argv)
 
@@ -145,11 +153,8 @@ def main(argv: list[str] | None = None) -> int:
         # content-derived cache_key: without it every micro-batch would
         # re-stage the full subject DB and rebuild subject indexes,
         # defeating the stage-once amortization the stream exists for
-        st = os.stat(args.db)
-        db_key = (f"cli_db_v1:{os.path.abspath(args.db)}:{st.st_mtime_ns}:"
-                  f"{st.st_size}:vols={args.volumes}")
         search_query_stream(stream, subjects, cfg, out, ckpt,
-                            cache_key=db_key)
+                            cache_key=_db_cache_key(args.db, args.volumes))
         n = read_stream_hits(spark, out).count()
         print(f"{n} raw hits across committed batches -> {out}")
         return 0
@@ -183,7 +188,12 @@ def main(argv: list[str] | None = None) -> int:
         from mr_mpi_blast_spark.kernel.ncbi import run_search_ncbi
         hits = run_search_ncbi(queries, subjects, cfg).cache()
     else:
-        hits = run_search(queries, subjects, cfg, log_dir=log_dir).cache()
+        # keyed like the stream path: the database is staged (and its
+        # volumes formatted) once per content, not into a fresh dir
+        # per run that nothing removes
+        hits = run_search(queries, subjects, cfg, log_dir=log_dir,
+                          cache_key=_db_cache_key(db_fa, args.volumes)
+                          ).cache()
     n = hits.count()
 
     deflines = queries.select("qid", "defline")

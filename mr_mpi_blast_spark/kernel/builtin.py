@@ -453,6 +453,63 @@ def neighborhood_words(word: str, threshold: int) -> list[tuple[str, int]]:
     return out
 
 
+def _concat_windows(seqs: list[str], k: int):
+    """The window layout of a volume: (codepoints of every sequence
+    concatenated with k-1 separator codes after each, subject index,
+    start position and concatenation offset of every length-k window
+    that lies inside one sequence). A window spanning two sequences
+    absorbs a separator, so its hash can never equal a real word's."""
+    sep = np.full(k - 1 if k > 1 else 0, _HASH_SEP, dtype=np.uint32)
+    chunks, offs, lens = [], [], []
+    cursor = 0
+    for s in seqs:
+        codes = np.frombuffer(s.encode("utf-32-le"), dtype="<u4")
+        offs.append(cursor)
+        lens.append(len(codes))
+        chunks.append(codes)
+        chunks.append(sep)
+        cursor += len(codes) + len(sep)
+    cat = (np.concatenate(chunks) if chunks
+           else np.empty(0, dtype=np.uint32))
+    si_arr = np.repeat(np.arange(len(lens), dtype=np.int32),
+                       [max(L - k + 1, 0) for L in lens])
+    pos_parts = [np.arange(max(L - k + 1, 0), dtype=np.int32)
+                 for L in lens]
+    pos_arr = (np.concatenate(pos_parts) if pos_parts
+               else np.empty(0, dtype=np.int32))
+    gidx = (pos_arr + np.array(offs, dtype=np.int64)[si_arr]
+            if len(si_arr) else np.empty(0, dtype=np.int64))
+    return cat, si_arr, pos_arr, gidx
+
+
+def _distinct_words(cat: np.ndarray, gpos: np.ndarray, k: int) -> list[str]:
+    """One string per run of equal length-k words among the windows
+    starting at ``gpos`` (offsets into ``cat``, ordered so that equal
+    words sit together, e.g. by window hash). Every distinct word is
+    returned; a hash collision that interleaves two words can repeat
+    one, which set-building callers absorb. k vectorized compares, no
+    per-window Python work."""
+    if not len(gpos):
+        return []
+    new = np.ones(len(gpos), dtype=bool)
+    same = np.ones(len(gpos) - 1, dtype=bool)
+    for j in range(k):
+        same &= cat[gpos[1:] + j] == cat[gpos[:-1] + j]
+    new[1:] = ~same
+    words = cat[gpos[new][:, None] + np.arange(k)].astype("<u4")
+    return words.view(f"<U{k}").ravel().tolist()
+
+
+def volume_words(seqs: list[str], k: int) -> list[str]:
+    """The distinct length-k words of a volume (case as stored): every
+    window hashed in k vectorized passes, then sorted once so equal
+    words sit together. SubjectIndex.seed_words reads the same list
+    off an index build without sorting again."""
+    cat, _, _, gidx = _concat_windows(seqs, k)
+    h = _window_hashes(cat, k)[gidx]
+    return _distinct_words(cat, gidx[np.argsort(h)], k)
+
+
 class SubjectIndex:
     """k-mer -> [(subject_idx, pos)...] over one DB partition.
 
@@ -508,28 +565,8 @@ class SubjectIndex:
                       complexity: bool = False,
                       protein: bool = False) -> None:
         k = self.word_size
-        sep = np.full(k - 1 if k > 1 else 0, _HASH_SEP, dtype=np.uint32)
-        chunks, offs, lens = [], [], []
-        cursor = 0
-        for s in self.ext_seqs:
-            codes = np.frombuffer(s.encode("utf-32-le"), dtype="<u4")
-            offs.append(cursor)
-            lens.append(len(codes))
-            chunks.append(codes)
-            chunks.append(sep)
-            cursor += len(codes) + len(sep)
-        cat = (np.concatenate(chunks) if chunks
-               else np.empty(0, dtype=np.uint32))
+        cat, si_arr, pos_arr, gidx = _concat_windows(self.ext_seqs, k)
         h = _window_hashes(cat, k)
-        # keep only windows fully inside one subject
-        si_arr = np.repeat(np.arange(len(lens), dtype=np.int32),
-                           [max(L - k + 1, 0) for L in lens])
-        pos_parts = [np.arange(max(L - k + 1, 0), dtype=np.int32)
-                     for L in lens]
-        pos_arr = (np.concatenate(pos_parts) if pos_parts
-                   else np.empty(0, dtype=np.int32))
-        gidx = (pos_arr + np.array(offs, dtype=np.int64)[si_arr]
-                if len(si_arr) else np.empty(0, dtype=np.int64))
         if (soft_mask or complexity) and len(si_arr):
             # subject-side masking as a window drop filter (F3): the
             # predicates run on the ORIGINAL subject strings (case is
@@ -583,6 +620,18 @@ class SubjectIndex:
                       else np.empty(0, dtype=np.int64))
         self._sis = sis.astype(np.int64)
         self._poss = poss.astype(np.int64)
+
+    def seed_words(self) -> list[str]:
+        """The distinct words of this index's windows (case as in
+        ext_seqs), read off the build's hash-sorted window arrays —
+        volume_words without its sort. Covers every word of the volume
+        only for an unmasked build (soft_mask/complexity drop
+        windows); over-frequent words keep their windows even when
+        max_kmer_hits drops their bucket."""
+        cp = getattr(self, "_cat_protein", None)
+        cat, offs = (cp[0], cp[2]) if cp is not None else self.cat_nucl
+        return _distinct_words(cat, offs[self.sis_np] + self.poss_np,
+                               self.word_size)
 
     def query_buckets(self, q: str) -> list[int]:
         """Bucket id (-1 = no seed) for every word position of a
@@ -899,14 +948,14 @@ def ensure_index_on_disk(cache_key: str, loader, word_size: int,
     builds — measured 277 s vs ~30 s at the synthesized sf1.0). Lazy
     derived arrays (protein concat encoding, bucket-bound views) are
     materialized before publishing so loaders skip those rebuilds too.
-    Does NOT touch the capacity-1 resident cache. Returns True if it
-    built, False if the pickle already existed (or no usable cache
+    Does NOT touch the capacity-1 resident cache. Returns the index it
+    built, or None if the pickle already existed (or no usable cache
     dir)."""
     key = index_cache_key(cache_key, word_size, max_kmer_hits,
                           soft_mask, complexity, protein, fold_case)
     path = index_cache_path(key)
     if path is None or os.path.exists(path):
-        return False
+        return None
     idx = SubjectIndex(loader(), word_size, max_kmer_hits,
                        soft_mask=soft_mask, complexity=complexity,
                        protein=protein, fold_case=fold_case)
@@ -916,7 +965,7 @@ def ensure_index_on_disk(cache_key: str, loader, word_size: int,
         idx.cat_nucl
     idx.bucket_bounds_np, idx.sis_np, idx.poss_np
     _publish_index(idx, path)
-    return True
+    return idx
 
 
 def get_subject_index_lazy(cache_key: str, loader, word_size: int,

@@ -10,8 +10,13 @@ Spark translation implemented here:
   subjects.write.partitionBy(db_part)          # stage volumes ONCE,
      (distributed write to shared storage — the reference's volume
       files, doc/USERGUIDE:224-264; the driver never holds a subject
-      row)
-  blocks x db_parts                             # J1 work items
+      row; residues, sequence count and volume names ride the write
+      as observed metrics)
+  format job: one task per volume               # makeblastdb analog
+     (reads its staged volume once, publishes the content-keyed
+      index pickle, writes the volume's seed-Bloom sidecar, returns
+      the Bloom fill — the only eager job after staging)
+  blocks x db_parts [- seed-Bloom pruned pairs] # J1 work items
   .groupBy(block_id, db_part).applyInPandas(lazy kernel)   # K1/K2
      (each group lazily reads its staged volume executor-side,
       with per-worker index reuse — S7, mrblast.cpp:838-845)
@@ -41,6 +46,7 @@ import json
 import os
 import tempfile
 import uuid
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -80,29 +86,43 @@ def staged_volume_dir(cache_key: str) -> str:
         "spark_graft_volumes", digest)
 
 
+def _stage_meta(db_dir: str) -> dict | None:
+    """The staging record of a fully staged volume dir, or None. A
+    record without the volume list predates it and counts as not
+    staged, so such a dir is restaged once."""
+    meta_p = os.path.join(db_dir, _STAGE_META)
+    if not (os.path.exists(os.path.join(db_dir, "_SUCCESS"))
+            and os.path.exists(meta_p)):
+        return None
+    with open(meta_p) as fh:
+        meta = json.load(fh)
+    return meta if "volumes" in meta else None
+
+
 def stage_volumes(subjects: DataFrame, scratch_dir: str | None = None,
                   cache_key: str | None = None) -> tuple[str, int, int]:
     """Distributed write of the database as one directory per db_part
     (the reference's makeblastdb volume staging, doc/USERGUIDE:224-264).
     Returns (staged root, total residue count, sequence count). No
-    subject row touches the driver; the residue total — S8's
-    whole-database length, mrblast.cpp:404-433 — rides the write job
-    as an observed metric (A6/E16) instead of a second scan.
+    subject row touches the driver; the residue total (S8's
+    whole-database length, mrblast.cpp:404-433), the sequence count
+    and the volume names ride the write job as observed metrics
+    (A6/E16) instead of further scans, and are kept in the dir's
+    ``_stage_meta.json`` (staged_volumes/staged_parts read the names
+    back without a listing job).
 
     ``cache_key``: content key (caller includes the source's identity
     AND freshness, e.g. path+mtime+size) enabling makeblastdb-style
     reuse — if the key's volume dir is already fully staged (_SUCCESS
-    + meta sidecar present), the write is skipped entirely. The
-    reference never re-formats volumes per search; neither do we."""
+    + meta sidecar with its volume list present), the write is skipped
+    entirely. The reference never re-formats volumes per search;
+    neither do we."""
     from pyspark.sql import Observation
 
     if cache_key is not None and scratch_dir is None:
         db_dir = staged_volume_dir(cache_key)
-        meta_p = os.path.join(db_dir, _STAGE_META)
-        if (os.path.exists(os.path.join(db_dir, "_SUCCESS"))
-                and os.path.exists(meta_p)):
-            with open(meta_p) as fh:
-                meta = json.load(fh)
+        meta = _stage_meta(db_dir)
+        if meta is not None:
             return db_dir, int(meta["residues"]), int(meta["n_seqs"])
     else:
         db_dir = scratch_dir or os.path.join(
@@ -116,23 +136,39 @@ def stage_volumes(subjects: DataFrame, scratch_dir: str | None = None,
     # each emitting a sliver into every partition dir.
     (subjects.select("sid", "seq", "db_part")
      .observe(obs, F.sum(F.length("seq")).alias("residues"),
-              F.count(F.lit(1)).alias("n_seqs"))
+              F.count(F.lit(1)).alias("n_seqs"),
+              F.collect_set("db_part").alias("volumes"))
      .repartition(F.col("db_part"))
      .write.mode("overwrite").partitionBy("db_part").parquet(db_dir))
-    residues, n_seqs = int(obs.get["residues"]), int(obs.get["n_seqs"])
-    if cache_key is not None and scratch_dir is None:
-        # meta written AFTER _SUCCESS: reuse requires both, so a
-        # concurrent reader never sees a half-staged dir as complete.
-        with open(os.path.join(db_dir, _STAGE_META), "w") as fh:
-            json.dump({"residues": residues, "n_seqs": n_seqs,
-                       "key": cache_key}, fh)
-    return db_dir, residues, n_seqs
+    got = obs.get
+    meta = {"residues": int(got["residues"] or 0),
+            "n_seqs": int(got["n_seqs"]),
+            "volumes": sorted(str(v) for v in got["volumes"]),
+            "key": cache_key}
+    # meta published AFTER _SUCCESS (and atomically): reuse requires
+    # both, so a concurrent reader never sees a half-staged dir as
+    # complete.
+    tmp = os.path.join(db_dir, f".{_STAGE_META}.{os.getpid()}")
+    with open(tmp, "w") as fh:
+        json.dump(meta, fh)
+    os.replace(tmp, os.path.join(db_dir, _STAGE_META))
+    return db_dir, meta["residues"], meta["n_seqs"]
+
+
+def staged_volumes(db_dir: str) -> list[str]:
+    """The volume (db_part) names stage_volumes recorded for a staged
+    dir, sorted."""
+    meta = _stage_meta(db_dir)
+    if meta is None:
+        raise FileNotFoundError(f"no staged volumes at {db_dir}")
+    return meta["volumes"]
 
 
 def staged_parts(spark, db_dir: str) -> DataFrame:
-    """The tiny (db_part) dimension recovered from the staged layout —
-    a partition-column-only scan is a directory listing, no data read."""
-    return spark.read.parquet(db_dir).select("db_part").distinct()
+    """The tiny (db_part) dimension of a staged dir, built from its
+    recorded volume list — a local relation: no job, no listing."""
+    return spark.createDataFrame([(v,) for v in staged_volumes(db_dir)],
+                                 "db_part string")
 
 
 # ---------------------------------------------------------------------------
@@ -173,13 +209,39 @@ def _kmer_explode(seq_col: str, k: int):
         f"i -> upper(substring({seq_col}, i, {k}))) END")))
 
 
+def _bloom_dir(db_dir: str, word_size: int, bits: int) -> str:
+    """The seed-Bloom sidecar dir of a staged dir: beside the volumes,
+    keyed by everything that shapes the filter (content-addressed
+    volume dirs make it immutable too, the makeblastdb model)."""
+    return f"{db_dir}_seedbloom_k{word_size}_b{bits}_v3"
+
+
+def _bloom_file(bloom_dir: str, part: str) -> str:
+    return os.path.join(bloom_dir, f"{quote(part, safe='')}.parquet")
+
+
+def _bloom_fill(path: str) -> int | None:
+    """Set positions in a published sidecar file (its footer's row
+    count), or None when the file does not exist yet."""
+    if not os.path.exists(path):
+        return None
+    import pyarrow.parquet as pq
+    return pq.ParquetFile(path).metadata.num_rows
+
+
+def _read_blooms(spark, bloom_dir: str) -> DataFrame:
+    # explicit schema: no footer-reading inference job
+    return spark.read.schema("db_part string, pos bigint").parquet(bloom_dir)
+
+
 def volume_seed_blooms(spark, db_dir: str, word_size: int,
                        bits: int = SEED_PRUNE_BITS) -> DataFrame:
-    """(db_part, bloom_pos) — the set-bit positions of a Bloom filter
-    over each volume's distinct k-mers, staged ONCE as a sidecar
-    beside the volumes (content-addressed dirs make the sidecar
-    immutable too, the makeblastdb model). One scan of the staged
-    database, map-side-combinable distinct, output bounded at
+    """(db_part, pos) — the set-bit positions of a Bloom filter over
+    each volume's distinct (uppercased) k-mers, one sidecar file per
+    volume beside the staged dir. A missing sidecar is built by the
+    format job's per-volume task (_format_volumes; run_kernel_raw
+    builds them in the same job as the index pickles), so there is one
+    Bloom builder; present ones are reused. Output is bounded at
     ``bits`` positions per volume regardless of residue count.
 
     Sizing (r11 review): a SATURATED filter is a conservative no-op —
@@ -195,24 +257,9 @@ def volume_seed_blooms(spark, db_dir: str, word_size: int,
     (worst ~8 MB/volume broadcast when saturated); callers with many
     dense volumes should lower ``bits`` to cap the broadcast — the
     filter degrades gracefully toward no-op, never toward wrong."""
-    from mr_mpi_blast_spark.operators.profile import \
-        _bloom_positions_spark
-    path = f"{db_dir}_seedbloom_k{word_size}_b{bits}_v2"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        subs = spark.read.parquet(db_dir)
-        pos = F.array(*[F.expr(p) for p in
-                        _bloom_positions_spark("kmer", bits)])
-        # stored as DISTINCT (db_part, pos) ROWS, not per-volume
-        # arrays: the probe is a position JOIN (see prune_work_items),
-        # and Spark's array_except against a near-saturated filter
-        # array rebuilds a ~500k-element hash set PER PROBE ROW — the
-        # r11 review-pass pathology that turned a 3 s cold kernel run
-        # into 10+ minutes at sf0.1.
-        (subs.select("db_part", _kmer_explode("seq", word_size)
-                     .alias("kmer"))
-         .select("db_part", F.explode(pos).alias("pos")).distinct()
-         .write.mode("overwrite").parquet(path))
-    return spark.read.parquet(path)
+    path = _bloom_dir(db_dir, word_size, bits)
+    _format_volumes(spark, db_dir, None, (path, word_size, bits))
+    return _read_blooms(spark, path)
 
 
 def prune_work_items(blocked: DataFrame, volume_blooms: DataFrame,
@@ -266,66 +313,125 @@ def prune_work_items(blocked: DataFrame, volume_blooms: DataFrame,
             .select("db_part", "block_id").distinct())
 
 
-def _format_volumes(parts_df: DataFrame, db_dir: str, cfg: BlastConfig,
-                    gen: str) -> None:
-    """The makeblastdb pass: ONE task per volume whose content-keyed
-    index pickle is missing builds it and publishes to scratch disk,
-    BEFORE the kernel stage — so search tasks only ever unpickle
-    (~1 s) instead of racing O(volume)-cost builds. The reference
-    formats the database once (doc/USERGUIDE:224-264) and every rank
-    opens the preformatted volume; without this separation a cold run
-    had every worker that first touched a volume build it concurrently
-    — workers x volumes x O(volume) wall, measured 277 s -> ~30 s at
-    the synthesized sf1.0 (10x documents). Driver traffic is the
-    volume NAME list (metadata-sized). Warm-run skip: on a local[*]
-    master the driver and the executors share one filesystem, so a
-    driver-side pickle-presence sweep can skip the job entirely; on
-    any OTHER master that check is wrong in both directions (driver
-    has the pickle -> formatting skipped and workers race concurrent
-    builds again; driver lacks it -> only the executor that ran the
-    format task is warmed), so the job is ALWAYS submitted over all
-    volumes and each task no-ops executor-locally on a present pickle
-    (``ensure_index_on_disk`` checks before building) — one
-    metadata-cost task per volume on a warm cluster."""
-    import pandas as pd
+def _index_kw(cfg: BlastConfig) -> dict:
+    """The index-shaping config fields, named as ensure_index_on_disk
+    and index_cache_key take them."""
+    return dict(word_size=cfg.word_size, max_kmer_hits=cfg.max_kmer_hits,
+                soft_mask=cfg.subject_soft_mask,
+                complexity=cfg.complexity_filter,
+                protein=cfg.task == "blastp", fold_case=cfg.mask_fold_case)
+
+
+def _format_volume(db_dir: str, part: str, index: tuple[str, dict] | None,
+                   bloom: tuple[str, int, int] | None) -> tuple[str, int]:
+    """One volume's format task. Reads the staged volume at most once,
+    then, each only if missing: publishes the content-keyed index
+    pickle (``index`` = (gen, _index_kw)) and writes the volume's
+    seed-Bloom sidecar (``bloom`` = (sidecar dir, word size, bits)).
+    Returns (volume, set Bloom positions; 0 without ``bloom``).
+
+    The Bloom's word list comes off the index build when this task
+    built an unmasked index of the same word size (its windows are
+    already sorted by hash, SubjectIndex.seed_words), else from one
+    vectorized pass over the volume (volume_words); either way one md5
+    per distinct word and position, never per window."""
+    from functools import cache
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from mr_mpi_blast_spark.kernel.builtin import (ensure_index_on_disk,
-                                                   index_cache_key,
-                                                   index_cache_path,
-                                                   read_staged_part)
-    parts = [str(r["db_part"]) for r in parts_df.collect()]
-    missing = parts
-    if parts_df.sparkSession.sparkContext.master.startswith("local"):
-        missing = []
-        for p in parts:
-            ip = index_cache_path(index_cache_key(
-                f"{db_dir}:{p}:{gen}", cfg.word_size, cfg.max_kmer_hits,
-                cfg.subject_soft_mask, cfg.complexity_filter,
-                cfg.task == "blastp", cfg.mask_fold_case))
-            if ip is None:
-                return          # no usable cache dir: nothing to format
-            if not os.path.exists(ip):
-                missing.append(p)
-    if not missing:
-        return
+                                                   read_staged_part,
+                                                   volume_words)
+    from mr_mpi_blast_spark.operators.profile import bloom_positions_py
 
-    word_size, max_kmer_hits = cfg.word_size, cfg.max_kmer_hits
-    soft_mask, complexity = cfg.subject_soft_mask, cfg.complexity_filter
-    protein, fold_case = cfg.task == "blastp", cfg.mask_fold_case
+    load = cache(lambda: read_staged_part(db_dir, part))
+    built = None
+    if index is not None:
+        gen, kw = index
+        built = ensure_index_on_disk(f"{db_dir}:{part}:{gen}", load, **kw)
+        if kw["soft_mask"] or kw["complexity"]:
+            built = None        # its windows miss the masked words
+    if bloom is None:
+        return part, 0
+    bloom_dir, k, bits = bloom
+    path = _bloom_file(bloom_dir, part)
+    n = _bloom_fill(path)
+    if n is None:
+        if built is not None and built.word_size == k:
+            words = built.seed_words()
+        else:
+            words = volume_words([seq for _, seq in load()], k)
+        # upper() per distinct word, as the probe side's _kmer_explode
+        # folds case (soft-masked lowercase still extends)
+        pos = np.unique(bloom_positions_py({w.upper() for w in words},
+                                           bits))
+        # stored as DISTINCT (db_part, pos) ROWS, not a per-volume
+        # array: the probe is a position JOIN (see prune_work_items),
+        # and Spark's array_except against a near-saturated filter
+        # array rebuilds a ~500k-element hash set PER PROBE ROW — the
+        # r11 review-pass pathology that turned a 3 s cold kernel run
+        # into 10+ minutes at sf0.1. Dot-prefixed temp name: Spark's
+        # reader skips it.
+        os.makedirs(bloom_dir, exist_ok=True)
+        tmp = os.path.join(bloom_dir,
+                           f".{os.path.basename(path)}.{os.getpid()}")
+        pq.write_table(pa.table({
+            "db_part": pa.array([part] * len(pos), pa.string()),
+            "pos": pa.array(pos, pa.int64())}), tmp)
+        os.replace(tmp, path)
+        n = len(pos)
+    return part, n
 
-    def _fmt(pdf: pd.DataFrame) -> pd.DataFrame:
-        part = str(pdf["db_part"].iat[0])
-        built = ensure_index_on_disk(
-            f"{db_dir}:{part}:{gen}",
-            lambda: read_staged_part(db_dir, part),
-            word_size, max_kmer_hits, soft_mask=soft_mask,
-            complexity=complexity, protein=protein, fold_case=fold_case)
-        return pd.DataFrame({"db_part": [part], "built": [built]})
 
-    (parts_df.filter(F.col("db_part").isin(missing))
-     .groupBy("db_part")
-     .applyInPandas(_fmt, schema="db_part string, built boolean")
-     .collect())
+def _format_volumes(spark, db_dir: str, index: tuple[str, dict] | None,
+                    bloom: tuple[str, int, int] | None) -> dict[str, int]:
+    """The makeblastdb pass: ONE job, one task per volume
+    (_format_volume), that builds whatever the volume is missing — its
+    content-keyed index pickle and its seed-Bloom sidecar — BEFORE the
+    kernel stage, so search tasks only ever unpickle (~1 s) instead of
+    racing O(volume)-cost builds. The reference formats the database
+    once (doc/USERGUIDE:224-264) and every rank opens the preformatted
+    volume; without this separation a cold run had every worker that
+    first touched a volume build it concurrently — workers x volumes x
+    O(volume) wall, measured 277 s -> ~30 s at the synthesized sf1.0
+    (10x documents). Returns {volume: set Bloom positions}, the
+    saturation gate's input; driver traffic is that map and the
+    volume names (stage_volumes recorded them).
+
+    Warm-run skip: on a local[*] master the driver and the executors
+    share one filesystem, so a driver-side presence sweep (pickles,
+    sidecar footers) can skip the job entirely; on any OTHER master
+    that check is wrong in both directions (driver has the pickle ->
+    formatting skipped and workers race concurrent builds again;
+    driver lacks it -> only the executor that ran the format task is
+    warmed), so the job is ALWAYS submitted over all volumes and each
+    task no-ops executor-locally on what is present — one
+    metadata-cost task per volume on a warm cluster."""
+    from mr_mpi_blast_spark.kernel.builtin import (index_cache_key,
+                                                   index_cache_path)
+    sc = spark.sparkContext
+    missing, fills = staged_volumes(db_dir), {}
+    if sc.master.startswith("local"):
+        todo = []
+        for p in missing:
+            ip = None
+            if index is not None:
+                gen, kw = index
+                ip = index_cache_path(index_cache_key(f"{db_dir}:{p}:{gen}",
+                                                      **kw))
+            n = _bloom_fill(_bloom_file(bloom[0], p)) if bloom else 0
+            if n is None or (ip is not None and not os.path.exists(ip)):
+                todo.append(p)
+            else:
+                fills[p] = n
+        missing = todo
+    if missing:
+        fills.update(sc.parallelize(missing, len(missing))
+                     .map(lambda p: _format_volume(db_dir, p, index, bloom))
+                     .collect())
+    return fills
 
 
 def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
@@ -358,43 +464,11 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
                                             cache_key=cache_key)
     dbsize = cfg.dbsize if cfg.dbsize is not None else residues
     n_seqs = cfg.n_seqs if cfg.n_seqs is not None else count
+    spark = blocked.sparkSession
     # J1 work items: every block against every partition. Only the
-    # partition NAMES cross the driver (metadata, via directory
-    # listing); broadcast keeps the blocked side's partitioning.
-    parts_df = staged_parts(blocked.sparkSession, db_dir)
-    work = blocked.crossJoin(F.broadcast(parts_df))
-    if seed_prune and cfg.threshold is None:
-        # the runtime filter (see module section above): keep only
-        # (block, volume) pairs with possible exact-seed overlap.
-        # Silently a no-op under blastp -threshold (neighborhood
-        # seeding makes exact-k-mer pruning unsound — documented
-        # boundary, full work-item set is the conservative answer).
-        blooms = volume_seed_blooms(blocked.sparkSession, db_dir,
-                                    cfg.word_size)
-        # saturation gate (r11): at per-volume fill f a single k-mer
-        # false-passes with ~f^K, so a block of n k-mers passes a
-        # share-nothing volume with 1-(1-f^K)^n — ~1 for any
-        # realistically-sized block once f >= SEED_PRUNE_MAX_FILL.
-        # Probing then costs (k-mer hash + join per block) without
-        # ever pruning; skip it on the SPARSEST volume's fill, read
-        # from the sidecar's row count (metadata-sized, one tiny agg).
-        min_fill = (blooms.groupBy("db_part").count()
-                    .agg(F.min("count")).first()[0]
-                    or 0) / float(SEED_PRUNE_BITS)
-        if min_fill < SEED_PRUNE_MAX_FILL:
-            keep = prune_work_items(blocked, blooms, cfg.word_size,
-                                    both_strands=cfg.task != "blastp")
-            work = work.join(F.broadcast(keep),
-                             ["db_part", "block_id"], "left_semi")
-    # The explicit repartition (not the groupBy's own exchange) matters:
-    # the shuffle carries only query rows — a few MB even when the
-    # kernel stage is hours of compute — so AQE's size-based coalescing
-    # would shrink it to one task and serialize the kernel. A
-    # user-specified repartition is exempt from AQE coalescing, and its
-    # hash partitioning on the grouping keys satisfies applyInPandas's
-    # required distribution, so no second exchange is planned.
-    target = blocked.sparkSession.sparkContext.defaultParallelism
-    work = work.repartition(target, F.col("db_part"), F.col("block_id"))
+    # partition NAMES cross the driver (the volume list stage_volumes
+    # recorded); broadcast keeps the blocked side's partitioning.
+    work = blocked.crossJoin(F.broadcast(staged_parts(spark, db_dir)))
     if cache_key is not None:
         # content-addressed volumes are immutable, so the index cache
         # can key on (volume content, index-shaping cfg fields) and hit
@@ -406,10 +480,44 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
             cfg.mask_fold_case))).encode()).hexdigest()[:12]
     else:
         gen = str(next(_BROADCAST_GEN))
-    # content-addressed gen -> persist built indexes on scratch disk
-    # (the makeblastdb analog; a nonce gen can never be hit again)
-    if cache_key is not None:
-        _format_volumes(parts_df, db_dir, cfg, gen)
+    # the runtime filter (see module section above) keeps only (block,
+    # volume) pairs with possible exact-seed overlap. Silently a no-op
+    # under blastp -threshold (neighborhood seeding makes exact-k-mer
+    # pruning unsound — documented boundary, full work-item set is the
+    # conservative answer).
+    bloom = None
+    if seed_prune and cfg.threshold is None:
+        bloom = (_bloom_dir(db_dir, cfg.word_size, SEED_PRUNE_BITS),
+                 cfg.word_size, SEED_PRUNE_BITS)
+    # ONE format job builds what each volume lacks: the index pickle
+    # (only for a content-addressed gen — the makeblastdb analog; a
+    # nonce gen can never be hit again) and the seed-Bloom sidecar
+    index = (gen, _index_kw(cfg)) if cache_key is not None else None
+    fills = (_format_volumes(spark, db_dir, index, bloom)
+             if index or bloom else {})
+    # saturation gate (r11): at per-volume fill f a single k-mer
+    # false-passes with ~f^K, so a block of n k-mers passes a
+    # share-nothing volume with 1-(1-f^K)^n — ~1 for any
+    # realistically-sized block once f >= SEED_PRUNE_MAX_FILL.
+    # Probing then costs (k-mer hash + join per block) without ever
+    # pruning; skip it on the SPARSEST volume's fill, which the format
+    # job returned.
+    if (bloom is not None and fills
+            and min(fills.values()) / SEED_PRUNE_BITS < SEED_PRUNE_MAX_FILL):
+        keep = prune_work_items(blocked, _read_blooms(spark, bloom[0]),
+                                cfg.word_size,
+                                both_strands=cfg.task != "blastp")
+        work = work.join(F.broadcast(keep), ["db_part", "block_id"],
+                         "left_semi")
+    # The explicit repartition (not the groupBy's own exchange) matters:
+    # the shuffle carries only query rows — a few MB even when the
+    # kernel stage is hours of compute — so AQE's size-based coalescing
+    # would shrink it to one task and serialize the kernel. A
+    # user-specified repartition is exempt from AQE coalescing, and its
+    # hash partitioning on the grouping keys satisfies applyInPandas's
+    # required distribution, so no second exchange is planned.
+    target = spark.sparkContext.defaultParallelism
+    work = work.repartition(target, F.col("db_part"), F.col("block_id"))
     kernel = make_lazy_block_kernel(db_dir, cfg, gen=gen,
                                     disk_cache=cache_key is not None)
     if log_dir:
@@ -496,9 +604,10 @@ def run_search(queries: DataFrame, subjects: DataFrame,
     r12) skips work items with zero possible seed overlap —
     value-identical output by construction (one-sided Bloom, both
     strands probed), a no-op under saturation and under blastp
-    -threshold, and its cold cost is one metadata-sized aggregate per
-    volume; pass False to force the full work-item set (the escape
-    hatch, e.g. for an A/B parity replay)."""
+    -threshold, and its cold cost is one sidecar per volume written by
+    the format job that also builds the index pickles; pass False to
+    force the full work-item set (the escape hatch, e.g. for an A/B
+    parity replay)."""
     cfg = cfg or BlastConfig()
     raw, dbsize, n_seqs = run_kernel_raw(queries, subjects, cfg, scratch_dir,
                                          log_dir=log_dir, cache_key=cache_key,

@@ -7,6 +7,7 @@ and assert the hit table facts (coords 1-based inclusive, strand swap,
 identity, e-value normalization against WHOLE dbsize)."""
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -498,16 +499,16 @@ def test_seed_prune_saturation_gate_skips_probe(spark, monkeypatch):
     assert out.count() > 0
 
 
-def test_seed_prune_noop_under_neighborhood_seeding(spark, monkeypatch):
+def test_seed_prune_noop_under_neighborhood_seeding(spark, tmp_path):
     """blastp -threshold seeds on NON-exact word matches, so exact
     k-mer pruning is unsound there — the filter must not even be
-    consulted (documented conservative no-op)."""
+    built: no seed-Bloom sidecar is written (documented conservative
+    no-op). Neither with seed_prune=False. The same search with exact
+    seeding writes one, so the sidecar path checked here is live."""
+    import glob
+
     import mr_mpi_blast_spark.plans.pipeline as pl
 
-    def boom(*a, **k):
-        raise AssertionError("seed filter consulted under -threshold")
-
-    monkeypatch.setattr(pl, "volume_seed_blooms", boom)
     prot_q = spark.createDataFrame(
         [(1, "p1", "p1", "MKVLAAGGVLSRT" * 5, 65)],
         "qid long, defline string, defline_part string, seq string, "
@@ -516,7 +517,190 @@ def test_seed_prune_noop_under_neighborhood_seeding(spark, monkeypatch):
         [("sp1", "sp1", "db.00", "MKVLAAGGVLSRT" * 5 + "AAAA", 69)],
         "sid string, defline string, db_part string, seq string, "
         "length int")
-    cfg = BlastConfig(task="blastp", threshold=11, word_size=3,
-                      evalue=10.0, block_size=400)
-    out = pl.run_search(prot_q, prot_s, cfg, seed_prune=True)
+    base = dict(task="blastp", word_size=3, evalue=10.0, block_size=400)
+    out = pl.run_search(prot_q, prot_s, BlastConfig(threshold=11, **base),
+                        scratch_dir=str(tmp_path / "nb"), seed_prune=True)
     assert out.count() > 0  # ran the FULL work-item set, filter unused
+    pl.run_kernel_raw(prot_q, prot_s, BlastConfig(**base),
+                      scratch_dir=str(tmp_path / "off"), seed_prune=False)
+    pl.run_kernel_raw(prot_q, prot_s, BlastConfig(**base),
+                      scratch_dir=str(tmp_path / "exact"), seed_prune=True)
+    assert not glob.glob(str(tmp_path / "nb_seedbloom*"))
+    assert not glob.glob(str(tmp_path / "off_seedbloom*"))
+    assert glob.glob(str(tmp_path / "exact_seedbloom*/*.parquet"))
+
+
+def test_stage_meta_without_volume_list_restages(spark, tmp_path,
+                                                  monkeypatch):
+    """stage_volumes records the volume names in _stage_meta.json; a
+    meta written before that counts as not staged, so the dir is
+    restaged once and then carries the list staged_parts reads."""
+    import json
+
+    import mr_mpi_blast_spark.plans.pipeline as pl
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    db_dir, res, n = pl.stage_volumes(_subjects(spark), cache_key="old")
+    assert pl.staged_volumes(db_dir) == ["db.00", "db.01"]
+    meta_p = os.path.join(db_dir, "_stage_meta.json")
+    with open(meta_p, "w") as fh:
+        json.dump({"residues": res, "n_seqs": n, "key": "old"}, fh)
+    with pytest.raises(FileNotFoundError):
+        pl.staged_volumes(db_dir)
+    assert pl.stage_volumes(_subjects(spark), cache_key="old") \
+        == (db_dir, res, n)
+    with open(meta_p) as fh:
+        assert json.load(fh)["volumes"] == ["db.00", "db.01"]
+    assert sorted(r.db_part for r in pl.staged_parts(spark, db_dir)
+                  .collect()) == ["db.00", "db.01"]
+
+
+def _spark_sql_blooms(spark, db_dir, k, bits):
+    """The reference seed-Bloom build: every volume's distinct
+    uppercased k-mers exploded and hashed by the Spark-SQL md5
+    positions — the production build before the per-volume format
+    task replaced it."""
+    import mr_mpi_blast_spark.plans.pipeline as pl
+    from mr_mpi_blast_spark.operators.profile import _bloom_positions_spark
+    pos = F.array(*[F.expr(p) for p in _bloom_positions_spark("kmer", bits)])
+    rows = (spark.read.parquet(db_dir)
+            .select("db_part", pl._kmer_explode("seq", k).alias("kmer"))
+            .select("db_part", F.explode(pos).alias("pos")).distinct()
+            .collect())
+    return {(r.db_part, r.pos) for r in rows}
+
+
+def test_bloom_positions_py_matches_spark(spark):
+    """The Python twin hashes the same UTF-8 bytes as the Spark form:
+    lowercase, non-ASCII and empty keys included, at two widths."""
+    import numpy as np
+
+    from mr_mpi_blast_spark.operators.profile import (
+        BLOOM_K, _bloom_positions_spark, bloom_positions_py)
+    keys = ["ACGTACGTACG", "acgtNNNNacg", "MKV", "XBZ", "ÉSSé", "", "ß"]
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    for bits in (8192, 1 << 20):
+        got = bloom_positions_py(keys, bits)
+        assert got.shape == (len(keys), BLOOM_K)
+        cols = [F.expr(p).alias(f"p{i}") for i, p in
+                enumerate(_bloom_positions_spark("key", bits))]
+        want = {r.key: [r[f"p{i}"] for i in range(BLOOM_K)]
+                for r in df.select("key", *cols).collect()}
+        assert got.tolist() == [want[k] for k in keys]
+        assert np.all((got >= 0) & (got < bits))
+
+
+# seed-Bloom fixture volumes: soft-masked lowercase, sequences shorter
+# than the word (one volume holds nothing else, so its filter is
+# empty), non-ASCII residues (upper('ß') is 'SS', as in Spark) and
+# protein volumes at their own word size
+_BLOOM_VOLUMES = {
+    11: [("n1", "nt.a", _seq(120, salt=51) + "acgtacgtacgtac"
+          + _seq(40, salt=52).lower()),
+         ("n2", "nt.a", "ACGTA"),
+         ("n3", "nt.b",
+          _seq(60, salt=53) + "ÉßéACGTACGTAAC" + _seq(30, salt=54)),
+         ("n4", "nt.b", _seq(90, salt=53)),
+         ("n5", "nt.c", "ACGTACGTAC")],
+    3: [("p1", "aa.x", "MKVLAAGGVLSRTmkvlaaGGXBZW"),
+        ("p2", "aa.x", "MK"),
+        ("p3", "aa.y", "WWWWCCCHHHHmkwcPPPPQQQQ"),
+        ("p4", "aa.z", "W")],
+}
+
+
+@pytest.fixture(params=sorted(_BLOOM_VOLUMES), ids=lambda k: f"k{k}")
+def bloom_volumes(spark, tmp_path, request):
+    from mr_mpi_blast_spark.plans.pipeline import stage_volumes
+    k = request.param
+    subs = spark.createDataFrame(
+        [(sid, sid, part, seq, len(seq))
+         for sid, part, seq in _BLOOM_VOLUMES[k]],
+        "sid string, defline string, db_part string, seq string, "
+        "length int")
+    db_dir, _, _ = stage_volumes(subs, str(tmp_path / "vols"))
+    return k, db_dir
+
+
+def test_seed_bloom_sidecars_match_spark_sql(spark, bloom_volumes):
+    """volume_seed_blooms (the format job's Bloom-only run) writes one
+    sidecar per volume, an empty volume's included, holding exactly
+    the positions the Spark-SQL explode build computes."""
+    from mr_mpi_blast_spark.plans.pipeline import (SEED_PRUNE_BITS,
+                                                   _bloom_dir,
+                                                   volume_seed_blooms)
+    k, db_dir = bloom_volumes
+    want = _spark_sql_blooms(spark, db_dir, k, SEED_PRUNE_BITS)
+    got = volume_seed_blooms(spark, db_dir, k).collect()
+    assert len(got) == len(want) > 0
+    assert len(os.listdir(_bloom_dir(db_dir, k, SEED_PRUNE_BITS))) == 3
+    assert {(r.db_part, r.pos) for r in got} == want
+
+
+@pytest.mark.parametrize("route", ["index", "folded_index", "masked_index",
+                                   "no_index"])
+def test_format_task_bloom_routes_match_spark_sql(spark, bloom_volumes,
+                                                  tmp_path, monkeypatch,
+                                                  route):
+    """Every word-list route of the per-volume format task gives the
+    Spark-SQL positions: read off a freshly built unmasked index, as
+    stored or case-folded (SubjectIndex.seed_words, no second sort),
+    or from a pass of its
+    own when the index is masked (its windows miss masked words) or
+    not built at all. Each task also reports its set-position count,
+    the saturation gate's input."""
+    import mr_mpi_blast_spark.plans.pipeline as pl
+    from mr_mpi_blast_spark.kernel import builtin as B
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
+    k, db_dir = bloom_volumes
+    cfg = BlastConfig(task="blastp" if k == 3 else "blastn", word_size=k,
+                      lcase_masking=route == "folded_index",
+                      soft_masking=route == "masked_index")
+    assert pl._index_kw(cfg)["fold_case"] == (route in ("folded_index",
+                                                        "masked_index"))
+    index = None if route == "no_index" else (route, pl._index_kw(cfg))
+    bloom_dir = str(tmp_path / f"bloom_{route}")
+    seen = {}
+    for part in pl.staged_volumes(db_dir):
+        B._DB_CACHE.clear()
+        got = pl._format_volume(db_dir, part, index,
+                                (bloom_dir, k, pl.SEED_PRUNE_BITS))
+        assert got[0] == part
+        seen[part] = got[1]
+    if index is not None:     # the same task published the pickles
+        assert len(list((tmp_path / "scratch").glob("*/*.pkl"))) == len(seen)
+    rows = pl._read_blooms(spark, bloom_dir).collect()
+    want = _spark_sql_blooms(spark, db_dir, k, pl.SEED_PRUNE_BITS)
+    assert {(r.db_part, r.pos) for r in rows} == want
+    assert seen == {p: sum(1 for q, _ in want if q == p) for p in seen}
+    # a present sidecar is a no-op that still reports its count
+    assert pl._format_volume(db_dir, part, None,
+                             (bloom_dir, k, pl.SEED_PRUNE_BITS)) \
+        == (part, seen[part])
+
+
+def test_cold_kernel_build_submits_one_format_job(spark):
+    """Eager Spark jobs of a cold content-keyed run_kernel_raw, before
+    the kernel action: the block histogram (4), the staging write (2)
+    and ONE format job that builds every volume's index pickle and
+    seed-Bloom sidecar and returns the Bloom fills. The warm rerun
+    finds everything present and submits only the block jobs."""
+    import uuid
+
+    from mr_mpi_blast_spark.plans.pipeline import run_kernel_raw
+
+    sc = spark.sparkContext
+    cfg = BlastConfig(evalue=1e-6, block_size=400, word_size=11)
+    key = f"eager-jobs:{uuid.uuid4().hex}"
+    counts = []
+    for run in ("cold", "warm"):
+        group = f"{run}-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            run_kernel_raw(_queries(spark), _subjects(spark), cfg,
+                           cache_key=key)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert counts == [7, 4], counts

@@ -185,6 +185,34 @@ def test_cli_main_end_to_end(spark, tmp_path):
                              "--query", str(fa)]) == 2
 
 
+def test_cli_stages_database_once(spark, tmp_path, monkeypatch):
+    """Two CLI batch searches on one database leave ONE staged volume
+    dir under the scratch root: the run is keyed by the database's
+    content (path, mtime, size, volume count), so the second run
+    reuses the first run's volumes instead of staging into a fresh
+    dir nothing removes."""
+    import random
+
+    from mr_mpi_blast_spark.__main__ import main
+
+    scratch = tmp_path / "scratch"
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(scratch))
+    fa = tmp_path / "db.fa"
+    rng = random.Random(7)
+    with open(fa, "w") as f:
+        for i in range(4):
+            seq = "".join(rng.choice("ACGT") for _ in range(300))
+            f.write(f">rec_{i} cli stage test\n{seq}\n")
+    for run in ("first", "second"):
+        assert main(["--query", str(fa), "--out-dir", str(tmp_path / run),
+                     "--formats", "parquet", "--volumes", "2",
+                     "-task", "blastn", "-word_size", "16"]) == 0
+    assert not list(scratch.glob("blast_db_*"))
+    staged = [d for d in (scratch / "spark_graft_volumes").iterdir()
+              if "_seedbloom" not in d.name]
+    assert len(staged) == 1, staged
+
+
 def test_jsonl_roundtrip_and_corrupt_quarantine(spark, tmp_path):
     """JSONL source contract: values round-trip exactly under the
     explicit schema, a torn line lands in the quarantine column in
