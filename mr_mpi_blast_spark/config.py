@@ -76,13 +76,17 @@ class BlastConfig:
     # without it, unsupported pairs raise rather than mis-score.
     ka_gapped: tuple[float, float, float] | None = None
 
+    # the gapped DP's row-wise scan is exact only for non-negative gap
+    # costs (kernel/builtin.gotoh_local_batch), so negative ones raise
     @property
     def gap_open_eff(self) -> int:
-        return self.gap_open or (11 if self.task == "blastp" else 5)
+        return _gap_cost("-gapopen", self.gap_open,
+                         11 if self.task == "blastp" else 5)
 
     @property
     def gap_extend_eff(self) -> int:
-        return self.gap_extend or (1 if self.task == "blastp" else 2)
+        return _gap_cost("-gapextend", self.gap_extend,
+                         1 if self.task == "blastp" else 2)
 
     @property
     def gap_trigger_eff(self) -> int:
@@ -125,6 +129,13 @@ class BlastConfig:
         index keys and extension strings so masked regions still match
         during extension (the dustmasker/BLAST+ convention)."""
         return bool(self.soft_masking) or self.lcase_masking
+
+
+def _gap_cost(option: str, value: int, default: int) -> int:
+    """Effective gap cost: 0 means the task default."""
+    if value < 0:
+        raise ValueError(f"{option} must be >= 0, got {value}")
+    return value or default
 
 
 # mrblast.ini keys the MR-MPI engine consumed that Spark owns outright

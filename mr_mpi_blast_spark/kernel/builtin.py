@@ -233,17 +233,15 @@ def scoring_params(cfg: BlastConfig) -> tuple[float, float, float]:
     +1/-2 and blastp BLOSUM62 constants stay pinned to the published
     values; tests assert the solver reproduces both to 4 digits."""
     if cfg.gapped:
+        costs = (cfg.gap_open_eff, cfg.gap_extend_eff)   # raises if < 0
         if cfg.ka_gapped is not None:
             return cfg.ka_gapped
         if cfg.task == "blastp":
-            table, key = (KA_GAPPED_BLOSUM62,
-                          (cfg.gap_open_eff, cfg.gap_extend_eff))
+            table, key = KA_GAPPED_BLOSUM62, costs
         else:
             # gapped nucleotide statistics depend on reward/penalty as
             # much as the gap costs — key on the full scheme
-            table, key = (KA_GAPPED_NUCL,
-                          (cfg.reward, cfg.penalty,
-                           cfg.gap_open_eff, cfg.gap_extend_eff))
+            table, key = KA_GAPPED_NUCL, (cfg.reward, cfg.penalty) + costs
         try:
             return table[key]
         except KeyError:
@@ -1576,11 +1574,12 @@ def _batched_core(q_ext: str, index: SubjectIndex, cfg: BlastConfig,
 
     if cfg.gapped:
         # stage 2, batched across HSPs: the DP windows of EVERY
-        # triggered HSP run through one size-tiled anti-diagonal sweep
-        # (gapped_extend_batch — bit-identical to the per-HSP loop,
-        # including the pad ladder), then emission/dedupe replays the
-        # sequential visit order so first-wins semantics are
-        # unchanged. Block mode slices each HSP's own query string
+        # triggered HSP run through one size-tiled row-wise sweep whose
+        # horizontal gaps come from a per-row prefix-max scan (exact
+        # for gap_open >= 0; gapped_extend_batch — bit-identical to the
+        # per-HSP loop, including the pad ladder), then emission/dedupe
+        # replays the sequential visit order so first-wins semantics
+        # are unchanged. Block mode slices each HSP's own query string
         # (DP must never see the sentinel-joined neighbors) and
         # scopes the dedupe key per query.
         ext_seqs = index.ext_seqs
@@ -2060,17 +2059,9 @@ def _extend_rows(q: str, s: str, qpos: int, spos: int, k: int,
     return best_score, qs, qe, ss, se, best_ident
 
 
-def _pair_score_matrix(a: str, b: str, protein: bool,
-                       reward: int, penalty: int) -> np.ndarray:
-    """Substitution score for every (a_i, b_j) pair as an (m, n) int
-    matrix — BLOSUM62 for protein, reward/penalty for nucleotide."""
-    if protein:
-        _, ai = encode_protein(a)
-        _, bi = encode_protein(b)
-        return _B62[np.ix_(ai, bi)]
-    av = np.frombuffer(a.encode("utf-32-le"), dtype="<u4")
-    bv = np.frombuffer(b.encode("utf-32-le"), dtype="<u4")
-    return np.where(av[:, None] == bv[None, :], reward, penalty).astype(np.int32)
+# tile cap on gotoh_local_batch's (B, M+1, N+1) pointer cells: 3 bytes
+# a cell keeps one tile's pointers within ~24 MB
+_GOTOH_CELL_BUDGET = 8_000_000
 
 
 def gotoh_local(a: str, b: str, protein: bool, reward: int, penalty: int,
@@ -2084,166 +2075,45 @@ def gotoh_local(a: str, b: str, protein: bool, reward: int, penalty: int,
 
     Ties break deterministically: diagonal > gap-in-a > gap-in-b at
     equal score, and the traceback starts from the FIRST maximal cell
-    in row-major order (stable across runs by construction). O(m*n)
-    time/space — used only on HSP-sized windows, never whole
-    sequences.
-
-    The forward DP runs as a vectorized ANTI-DIAGONAL sweep over
-    rolling 1D buffers indexed by row (every dependency of diagonal
-    i+j=d lives on d-1 / d-2 at row i or i-1, i.e. pure slices — no
-    2D gathers); H/pointer rows are kept diagonal-major for the
-    traceback. Recurrences, pointer codes and tie-breaking are
-    bit-identical to the per-cell reference (_gotoh_local_scalar,
-    pinned by test_gapped's equivalence cases); the traceback stays a
-    scalar walk — it is O(alignment), not O(m*n)."""
-    m, n = len(a), len(b)
-    if m == 0 or n == 0:
-        return (0, 0, 0, 0, 0, 0, 0, 0)
-    sub = _pair_score_matrix(a, b, protein, reward, penalty)
-    subf = sub[:, ::-1]               # anti-diagonals become diagonals
-    NEG = np.int32(-(10 ** 6))
-    go = gap_open + gap_extend        # cost of a length-1 gap
-    ge = gap_extend
-    # rolling row-indexed buffers for diagonals d-1 / d-2; defaults ARE
-    # the DP boundary: H=0 on row 0 / col 0, E/F=-inf
-    H1 = np.zeros(m + 1, dtype=np.int32)
-    H2 = np.zeros(m + 1, dtype=np.int32)
-    E1 = np.full(m + 1, NEG, dtype=np.int32)
-    F1 = np.full(m + 1, NEG, dtype=np.int32)
-    # diagonal-major storage for traceback + argmax: per diagonal d the
-    # compact arrays cover rows lo_d..hi_d
-    hs: list = [None, None]
-    phs: list = [None, None]
-    pes: list = [None, None]
-    pfs: list = [None, None]
-    los = [0, 0]
-    best_score = 0
-    for d in range(2, m + n + 1):
-        lo = max(1, d - n)
-        hi = min(m, d - 1)
-        if lo > hi:
-            hs.append(None)
-            phs.append(None)
-            pes.append(None)
-            pfs.append(None)
-            los.append(lo)
-            continue
-        e_open = H1[lo:hi + 1] - go
-        e_ext = E1[lo:hi + 1] - ge
-        e_v = np.maximum(e_open, e_ext)
-        pe = e_open >= e_ext
-        f_open = H1[lo - 1:hi] - go
-        f_ext = F1[lo - 1:hi] - ge
-        f_v = np.maximum(f_open, f_ext)
-        pf = f_open >= f_ext
-        # sub[i-1, d-i-1] for i=lo..hi == a diagonal of the flipped
-        # matrix: subf[r, r + n - d + 1] for r = lo-1..hi-1
-        off = n - d + 1
-        r0 = max(0, -off)
-        sd = subf.diagonal(off)[lo - 1 - r0:hi - r0]
-        diag = H2[lo - 1:hi] + sd
-        best = np.where(diag >= 0, diag, 0).astype(np.int32)
-        ptr = np.where(diag >= 0, np.int8(1), np.int8(0))
-        ptr = np.where(e_v > best, np.int8(2), ptr)
-        best = np.maximum(e_v, best)
-        ptr = np.where(f_v > best, np.int8(3), ptr)
-        best = np.maximum(f_v, best)
-        hs.append(best)
-        phs.append(ptr)
-        pes.append(pe)
-        pfs.append(pf)
-        los.append(lo)
-        mx = int(best.max())
-        if mx > best_score:
-            best_score = mx
-        # rotate: new H row buffer with boundary defaults outside lo..hi
-        H2 = H1
-        H1 = np.zeros(m + 1, dtype=np.int32)
-        H1[lo:hi + 1] = best
-        E1 = np.full(m + 1, NEG, dtype=np.int32)
-        E1[lo:hi + 1] = e_v
-        F1 = np.full(m + 1, NEG, dtype=np.int32)
-        F1[lo:hi + 1] = f_v
-    if best_score <= 0:
-        return (0, 0, 0, 0, 0, 0, 0, 0)
-    # first maximal cell in ROW-MAJOR order: smallest i, then smallest
-    # j — i.e. among diagonals containing the max, the candidate with
-    # the smallest row, ties broken by smaller j = smaller d
-    bi, bj = m + 1, n + 1
-    for d in range(2, m + n + 1):
-        hv = hs[d]
-        if hv is None or len(hv) == 0:
-            continue
-        w = np.flatnonzero(hv == best_score)
-        if not len(w):
-            continue
-        i = los[d] + int(w[0])        # smallest row on this diagonal
-        j = d - i
-        if i < bi or (i == bi and j < bj):
-            bi, bj = i, j
-    return _gotoh_traceback_diag(a, b, best_score, bi, bj,
-                                 phs, pes, pfs, los)
-
-
-def _gotoh_traceback_diag(a, b, score, i, j, phs, pes, pfs, los):
-    """Scalar traceback over diagonal-major pointer rows: PH[i, j] ==
-    phs[i + j][i - los[i + j]]."""
-    a1, b1 = i - 1, j - 1
-    ident = gaps = align_len = 0
-    state = "H"
-    while i > 0 and j > 0:
-        d = i + j
-        pos = i - los[d]
-        if state == "H":
-            p = phs[d][pos]
-            if p == 0:
-                break
-            if p == 1:
-                align_len += 1
-                if a[i - 1] == b[j - 1]:
-                    ident += 1
-                i -= 1
-                j -= 1
-            elif p == 2:
-                state = "E"
-            else:
-                state = "F"
-        elif state == "E":
-            align_len += 1
-            gaps += 1
-            opened = pes[d][pos]
-            j -= 1
-            state = "H" if opened else "E"
-        else:
-            align_len += 1
-            gaps += 1
-            opened = pfs[d][pos]
-            i -= 1
-            state = "H" if opened else "F"
-    return (score, i, a1, j, b1, ident, gaps, align_len)
+    in row-major order. O(m*n) time/space — used only on HSP-sized
+    windows, never whole sequences. A batch of one through
+    gotoh_local_batch's row-wise sweep, so exact for gap_open >= 0."""
+    return gotoh_local_batch([(a, b)], protein, reward, penalty,
+                             gap_open, gap_extend)[0]
 
 
 def gotoh_local_batch(pairs, protein: bool, reward: int, penalty: int,
                       gap_open: int, gap_extend: int) -> list[tuple]:
-    """Batched gotoh_local: run MANY windows' anti-diagonal forward
-    sweeps simultaneously. Bit-identical to [gotoh_local(a, b, ...)
-    per pair] — same recurrences, same first-maximal-cell-in-row-major
-    tie-break, same scalar traceback — but the per-diagonal numpy
-    dispatch cost (which dominates on HSP-sized windows: ~200
-    diagonals x ~20 numpy ops each) is paid once per BATCH diagonal
-    instead of once per window diagonal.
+    """gotoh_local over MANY windows at once, one result per pair.
 
-    Geometry: each window w has its own band (lo_w(d)..hi_w(d)) per
-    diagonal; the batch sweeps rows 1..max(m) with a per-window
-    validity mask, and masked-out cells read the SAME boundary values
-    (H=0, E/F=-inf) the scalar rolling buffers provide. Windows are
-    size-sorted and tiled so a short window never pays a long one's
-    diagonals (and pointer storage stays cache-friendly)."""
+    The forward DP runs ROW-WISE over a (B, N) batch of rows — all
+    windows of a tile advance one row of `a` per step, so the numpy
+    dispatch cost is paid once per tile row, not once per window row.
+    Within a row (the "lazy-F" form, Farrar 2007):
+
+    - F (gap in b, vertical) is elementwise from the previous row;
+    - H' = max(0 | diag, F) is elementwise;
+    - E (gap in a, horizontal) is ONE prefix max:
+      E[j] = max_{k<j}(H'[k] + k*ge) - go - (j-1)*ge, with H'[0] = 0.
+
+    The E scan is exact when go >= ge, i.e. gap_open >= 0: a gap
+    opened from an H that itself came from E never beats extending
+    that E, so H' can stand in for H inside the scan. Pointer rows
+    (PH with diag > E > F at equal score, PE, PF) then follow
+    elementwise from the known H/E/F values, and a running
+    (score, i, j) per window keeps the FIRST maximal cell in
+    row-major order, so results equal the per-cell recurrences bit
+    for bit. Padding lanes (j > n_w, i > m_w) never enter that best.
+
+    Windows are size-sorted and tiled so a short window never pays a
+    long one's rows; the traceback is a scalar walk, O(alignment)."""
+    if gap_open < 0 or gap_extend < 0:
+        raise ValueError(
+            f"gap costs must be >= 0 (gap_open={gap_open}, "
+            f"gap_extend={gap_extend})")
     n_all = len(pairs)
     results: list = [None] * n_all
     order = sorted(range(n_all), key=lambda t: len(pairs[t][0]) + len(pairs[t][1]))
-    # tile cap: keep the (B, D, M) pointer tensors ~tens of MB
-    CELL_BUDGET = 8_000_000
     t0 = 0
     while t0 < n_all:
         t1 = t0
@@ -2252,7 +2122,7 @@ def gotoh_local_batch(pairs, protein: bool, reward: int, penalty: int,
             a, b = pairs[order[t1]]
             m2, n2 = max(mmax, len(a)), max(nmax, len(b))
             bsz = t1 - t0 + 1
-            if bsz > 1 and bsz * (m2 + n2 + 1) * (m2 + 1) > CELL_BUDGET:
+            if bsz > 1 and bsz * (m2 + 1) * (n2 + 1) > _GOTOH_CELL_BUDGET:
                 break
             mmax, nmax = m2, n2
             t1 += 1
@@ -2273,173 +2143,77 @@ def _gotoh_batch_tile(pairs, protein, reward, penalty, gap_open,
     M, N = int(ms.max(initial=0)), int(ns.max(initial=0))
     if M == 0 or N == 0:
         return [(0, 0, 0, 0, 0, 0, 0, 0)] * B
-    NEG = np.int32(-(10 ** 6))
-    go = gap_open + gap_extend
+    # residue codes plus a code x code score table: BLOSUM62 rows for
+    # protein, reward on the diagonal / penalty elsewhere for
+    # nucleotides (codes are the distinct code points of the tile)
+    seqs = [s for pair in pairs for s in pair]
+    if protein:
+        table = _B62
+        codes = [encode_protein(s)[1] for s in seqs]
+    else:
+        cps = [np.frombuffer(s.encode("utf-32-le"), dtype="<u4")
+               for s in seqs]
+        alpha, inv = np.unique(np.concatenate(cps), return_inverse=True)
+        table = np.where(np.eye(len(alpha), dtype=bool),
+                         np.int32(reward), np.int32(penalty))
+        codes = np.split(inv, np.cumsum([len(c) for c in cps])[:-1])
+    ac = np.zeros((B, M), dtype=np.intp)
+    bc = np.zeros((B, N), dtype=np.intp)
+    for w in range(B):
+        ac[w, :ms[w]] = codes[2 * w]
+        bc[w, :ns[w]] = codes[2 * w + 1]
+    go = gap_open + gap_extend        # cost of a length-1 gap
     ge = gap_extend
-    # (B, M, N) substitution tensor; out-of-range cells NEG (they are
-    # additionally masked out of every write, so the value is inert)
-    sub_t = np.full((B, M, N), NEG, dtype=np.int32)
-    for w, (a, b) in enumerate(pairs):
-        if len(a) and len(b):
-            sub_t[w, :len(a), :len(b)] = _pair_score_matrix(
-                a, b, protein, reward, penalty)
-    D = M + N
-    rows = np.arange(1, M + 1)
-    H1 = np.zeros((B, M + 1), dtype=np.int32)
-    H2 = np.zeros((B, M + 1), dtype=np.int32)
-    E1 = np.full((B, M + 1), NEG, dtype=np.int32)
-    F1 = np.full((B, M + 1), NEG, dtype=np.int32)
-    PH = np.zeros((B, D + 1, M + 1), dtype=np.int8)
-    PE = np.zeros((B, D + 1, M + 1), dtype=np.bool_)
-    PF = np.zeros((B, D + 1, M + 1), dtype=np.bool_)
+    k_ge = ge * np.arange(1, N + 1, dtype=np.int32)      # k*ge, k=1..N
+    e_off = go + ge * np.arange(N, dtype=np.int32)       # go+(j-1)*ge
+    H = np.zeros((B, N + 1), dtype=np.int32)    # row i-1; column 0 = 0
+    F = np.full((B, N), np.int32(-(10 ** 6)), dtype=np.int32)
+    A = np.zeros((B, N + 1), dtype=np.int32)    # scan buffer; A[:, 0] = 0
+    PH = np.zeros((B, M + 1, N + 1), dtype=np.int8)
+    PE = np.zeros((B, M + 1, N + 1), dtype=np.bool_)
+    PF = np.zeros((B, M + 1, N + 1), dtype=np.bool_)
+    PE[:, :, 1] = True                # E at j=1 always opens from H[i, 0]
+    col_ok = np.arange(1, N + 1)[None, :] <= ns[:, None]
     best_score = np.zeros(B, dtype=np.int64)
-    best_i = np.full(B, M + 1, dtype=np.int64)
-    best_j = np.full(B, N + 1, dtype=np.int64)
-    for d in range(2, D + 1):
-        lo = np.maximum(1, d - ns)          # (B,)
-        hi = np.minimum(ms, d - 1)
-        valid = (rows[None, :] >= lo[:, None]) & (rows[None, :] <= hi[:, None])
-        if not valid.any():
-            continue
-        e_open = H1[:, 1:] - go             # cell (i, j-1), diagonal d-1
-        e_ext = E1[:, 1:] - ge
-        e_v = np.maximum(e_open, e_ext)
-        pe = e_open >= e_ext
-        f_open = H1[:, :-1] - go            # cell (i-1, j), diagonal d-1
-        f_ext = F1[:, :-1] - ge
-        f_v = np.maximum(f_open, f_ext)
-        pf = f_open >= f_ext
-        j_idx = np.clip(d - rows - 1, 0, N - 1)   # (M,)
-        sd = sub_t[:, rows - 1, j_idx]            # (B, M)
-        diag = H2[:, :-1] + sd
-        best = np.where(diag >= 0, diag, 0).astype(np.int32)
-        ptr = np.where(diag >= 0, np.int8(1), np.int8(0))
-        ptr = np.where(e_v > best, np.int8(2), ptr)
-        best = np.maximum(e_v, best)
-        ptr = np.where(f_v > best, np.int8(3), ptr)
-        best = np.maximum(f_v, best)
-        # masked writes: outside the band the stored pointer stays 0
-        # and the rolled buffers keep boundary values
-        PH[:, d, 1:] = np.where(valid, ptr, np.int8(0))
-        PE[:, d, 1:] = pe & valid
-        PF[:, d, 1:] = pf & valid
-        bm = np.where(valid, best, np.int32(-1))
-        rowmax = bm.max(axis=1)
-        # first row achieving the diagonal max (rows ascending == i
-        # ascending == row-major-first on a fixed diagonal)
-        cand_i = 1 + np.argmax(bm == rowmax[:, None], axis=1)
-        cand_j = d - cand_i
-        upd = (rowmax > best_score) | (
-            (rowmax == best_score) & (rowmax > 0) & (
-                (cand_i < best_i) | ((cand_i == best_i) & (cand_j < best_j))))
-        best_score = np.where(upd, rowmax, best_score)
-        best_i = np.where(upd, cand_i, best_i)
-        best_j = np.where(upd, cand_j, best_j)
-        H2 = H1
-        H1 = np.zeros((B, M + 1), dtype=np.int32)
-        H1[:, 1:] = np.where(valid, best, np.int32(0))
-        E1 = np.full((B, M + 1), NEG, dtype=np.int32)
-        E1[:, 1:] = np.where(valid, e_v, NEG)
-        F1 = np.full((B, M + 1), NEG, dtype=np.int32)
-        F1[:, 1:] = np.where(valid, f_v, NEG)
-    out = []
-    for w, (a, b) in enumerate(pairs):
-        sc = int(best_score[w])
-        if sc <= 0:
-            out.append((0, 0, 0, 0, 0, 0, 0, 0))
-            continue
-        out.append(_gotoh_traceback_full(
-            a, b, sc, int(best_i[w]), int(best_j[w]),
-            PH[w], PE[w], PF[w]))
-    return out
+    best_i = np.zeros(B, dtype=np.int64)
+    best_j = np.zeros(B, dtype=np.int64)
+    for i in range(1, M + 1):
+        diag = H[:, :-1] + table[ac[:, i - 1, None], bc]
+        f_open = H[:, 1:] - go
+        f_ext = F - ge
+        PF[:, i, 1:] = f_open >= f_ext
+        F = np.maximum(f_open, f_ext)
+        best0 = np.maximum(diag, 0)
+        np.add(np.maximum(best0, F), k_ge, out=A[:, 1:])
+        np.maximum.accumulate(A, axis=1, out=A)
+        E = A[:, :-1] - e_off
+        e_win = E > best0
+        best1 = np.maximum(best0, E)
+        f_win = F > best1
+        np.maximum(best1, F, out=H[:, 1:])
+        # pointer codes 1|0 (diag|stop) < 2 (E) < 3 (F): a win flag is
+        # set only where its source is strictly best, so max picks it
+        ph = np.maximum((diag >= 0).view(np.int8),
+                        e_win.view(np.int8) * np.int8(2))
+        np.maximum(ph, f_win.view(np.int8) * np.int8(3), out=PH[:, i, 1:])
+        PE[:, i, 2:] = H[:, 1:-1] - E[:, :-1] >= gap_open
+        hm = np.where(col_ok, H[:, 1:], -1)
+        rowmax = hm.max(axis=1)
+        upd = (rowmax > best_score) & (i <= ms)
+        if upd.any():
+            best_score[upd] = rowmax[upd]
+            best_i[upd] = i
+            best_j[upd] = hm[upd].argmax(axis=1) + 1
+    return [_gotoh_traceback(a, b, int(best_score[w]), int(best_i[w]),
+                             int(best_j[w]), PH[w], PE[w], PF[w])
+            for w, (a, b) in enumerate(pairs)]
 
 
-def _gotoh_traceback_full(a, b, score, i, j, PHd, PEd, PFd):
-    """Scalar traceback over full-row diagonal-major pointer arrays:
-    PH[i, j] == PHd[i + j, i] (the batch tile's storage layout)."""
-    a1, b1 = i - 1, j - 1
-    ident = gaps = align_len = 0
-    state = "H"
-    while i > 0 and j > 0:
-        d = i + j
-        if state == "H":
-            p = PHd[d, i]
-            if p == 0:
-                break
-            if p == 1:
-                align_len += 1
-                if a[i - 1] == b[j - 1]:
-                    ident += 1
-                i -= 1
-                j -= 1
-            elif p == 2:
-                state = "E"
-            else:
-                state = "F"
-        elif state == "E":
-            align_len += 1
-            gaps += 1
-            opened = PEd[d, i]
-            j -= 1
-            state = "H" if opened else "E"
-        else:
-            align_len += 1
-            gaps += 1
-            opened = PFd[d, i]
-            i -= 1
-            state = "H" if opened else "F"
-    return (score, i, a1, j, b1, ident, gaps, align_len)
-
-
-def gapped_extend_batch(items, cfg: BlastConfig) -> list[tuple]:
-    """Batched gapped_extend: identical to [gapped_extend(q, s, qs,
-    qe, ss, se, cfg) per item] including the geometric pad ladder —
-    every pending window at a given pad level runs in ONE batched
-    forward sweep; windows whose optimal alignment touches a growable
-    edge re-enter the next pad level, exactly like the scalar loop."""
-    n = len(items)
-    results: list = [None] * n
-    pads = [_GAP_PAD] * n
-    pending = list(range(n))
-    protein = cfg.task == "blastp"
-    while pending:
-        metas = []
-        pairs = []
-        for t in pending:
-            q, s, qs, qe, ss, se = items[t]
-            p = pads[t]
-            q0, q1 = max(0, qs - p), min(len(q), qe + 1 + p)
-            s0, s1 = max(0, ss - p), min(len(s), se + 1 + p)
-            metas.append((t, q0, q1, s0, s1))
-            pairs.append((q[q0:q1], s[s0:s1]))
-        res = gotoh_local_batch(pairs, protein, cfg.reward, cfg.penalty,
-                                cfg.gap_open_eff, cfg.gap_extend_eff)
-        nxt = []
-        for (t, q0, q1, s0, s1), r in zip(metas, res):
-            score, a0, a1, b0, b1, ident, gaps, align_len = r
-            q, s, _qs, _qe, _ss, _se = items[t]
-            touches = ((a0 == 0 and q0 > 0)
-                       or (a1 == q1 - q0 - 1 and q1 < len(q))
-                       or (b0 == 0 and s0 > 0)
-                       or (b1 == s1 - s0 - 1 and s1 < len(s)))
-            if touches and pads[t] < _GAP_PAD_MAX:
-                pads[t] *= 2
-                nxt.append(t)
-            else:
-                results[t] = (score, q0 + a0, q0 + a1, s0 + b0, s0 + b1,
-                              ident, gaps, align_len)
-        pending = nxt
-    return results
-
-
-def _gotoh_traceback(a, b, H, PH, PE, PF, m, n):
-    """Shared scalar traceback over filled pointer matrices —
-    O(alignment length), no need to vectorize."""
-    score = int(H.max())
+def _gotoh_traceback(a, b, score, i, j, PH, PE, PF):
+    """Scalar traceback from cell (i, j) over row-major pointer
+    matrices — O(alignment length), no need to vectorize."""
     if score <= 0:
         return (0, 0, 0, 0, 0, 0, 0, 0)
-    flat = int(np.argmax(H))          # first maximal cell, row-major
-    i, j = divmod(flat, n + 1)
     a1, b1 = i - 1, j - 1
     ident = gaps = align_len = 0
     state = "H"
@@ -2473,53 +2247,46 @@ def _gotoh_traceback(a, b, H, PH, PE, PF, m, n):
     return (score, i, a1, j, b1, ident, gaps, align_len)
 
 
-def _gotoh_local_scalar(a: str, b: str, protein: bool, reward: int,
-                        penalty: int, gap_open: int, gap_extend: int,
-                        ) -> tuple[int, int, int, int, int, int, int, int]:
-    """The readable per-cell reference implementation of gotoh_local,
-    kept as the parity oracle for the anti-diagonal sweep
-    (test_gapped equivalence + hypothesis property)."""
-    m, n = len(a), len(b)
-    if m == 0 or n == 0:
-        return (0, 0, 0, 0, 0, 0, 0, 0)
-    sub = _pair_score_matrix(a, b, protein, reward, penalty)
-    NEG = -(10 ** 6)
-    H = np.zeros((m + 1, n + 1), dtype=np.int32)
-    E = np.full((m + 1, n + 1), NEG, dtype=np.int32)  # gap in a (left)
-    Fv = np.full((m + 1, n + 1), NEG, dtype=np.int32)  # gap in b (up)
-    # pointers: H: 0 stop, 1 diag, 2 from E, 3 from F; E/F: 1 = opened
-    PH = np.zeros((m + 1, n + 1), dtype=np.int8)
-    PE = np.zeros((m + 1, n + 1), dtype=np.int8)
-    PF = np.zeros((m + 1, n + 1), dtype=np.int8)
-    go = gap_open + gap_extend   # cost of a length-1 gap
-    for i in range(1, m + 1):
-        Hi, Hp = H[i], H[i - 1]
-        Ei, Fi, Fp = E[i], Fv[i], Fv[i - 1]
-        # F column-independent across j: vectorized for the whole row
-        open_f = Hp - go
-        ext_f = Fp - gap_extend
-        np.maximum(open_f, ext_f, out=Fi[0:])
-        PF[i] = np.where(open_f >= ext_f, 1, 0)
-        subrow = sub[i - 1]
-        for j in range(1, n + 1):
-            e_open = Hi[j - 1] - go
-            e_ext = Ei[j - 1] - gap_extend
-            if e_open >= e_ext:
-                Ei[j] = e_open
-                PE[i, j] = 1
+def gapped_extend_batch(items, cfg: BlastConfig) -> list[tuple]:
+    """Batched gapped_extend: identical to [gapped_extend(q, s, qs,
+    qe, ss, se, cfg) per item] including the geometric pad ladder —
+    every pending window at a given pad level runs in ONE row-wise
+    batched sweep (gotoh_local_batch); windows whose optimal alignment
+    touches a growable edge re-enter the next pad level, exactly like
+    the scalar loop."""
+    n = len(items)
+    results: list = [None] * n
+    pads = [_GAP_PAD] * n
+    pending = list(range(n))
+    protein = cfg.task == "blastp"
+    while pending:
+        metas = []
+        pairs = []
+        for t in pending:
+            q, s, qs, qe, ss, se = items[t]
+            p = pads[t]
+            q0, q1 = max(0, qs - p), min(len(q), qe + 1 + p)
+            s0, s1 = max(0, ss - p), min(len(s), se + 1 + p)
+            metas.append((t, q0, q1, s0, s1))
+            pairs.append((q[q0:q1], s[s0:s1]))
+        res = gotoh_local_batch(pairs, protein, cfg.reward, cfg.penalty,
+                                cfg.gap_open_eff, cfg.gap_extend_eff)
+        nxt = []
+        for (t, q0, q1, s0, s1), r in zip(metas, res):
+            score, a0, a1, b0, b1, ident, gaps, align_len = r
+            q, s, _qs, _qe, _ss, _se = items[t]
+            touches = ((a0 == 0 and q0 > 0)
+                       or (a1 == q1 - q0 - 1 and q1 < len(q))
+                       or (b0 == 0 and s0 > 0)
+                       or (b1 == s1 - s0 - 1 and s1 < len(s)))
+            if touches and pads[t] < _GAP_PAD_MAX:
+                pads[t] *= 2
+                nxt.append(t)
             else:
-                Ei[j] = e_ext
-            diag = Hp[j - 1] + subrow[j - 1]
-            best, ptr = 0, 0
-            if diag >= best:
-                best, ptr = diag, 1
-            if Ei[j] > best:
-                best, ptr = Ei[j], 2
-            if Fi[j] > best:
-                best, ptr = Fi[j], 3
-            Hi[j] = best
-            PH[i, j] = ptr
-    return _gotoh_traceback(a, b, H, PH, PE, PF, m, n)
+                results[t] = (score, q0 + a0, q0 + a1, s0 + b0, s0 + b1,
+                              ident, gaps, align_len)
+        pending = nxt
+    return results
 
 
 # initial pad around the ungapped HSP for the stage-2 DP window; the

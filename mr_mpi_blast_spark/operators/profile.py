@@ -79,7 +79,7 @@ def table_profile(df: DataFrame, cols: list[str] | None = None,
     aggs = [F.count(F.lit(1)).alias("n_rows")]
     for i, c in enumerate(cols):
         aggs += [
-            F.sum(F.col(c).isNull().cast("long")).alias(f"_nn{i}"),
+            F.count(F.when(F.col(c).isNull(), 1)).alias(f"_nn{i}"),
             F.approx_count_distinct(F.col(c)).alias(f"_nd{i}"),
             F.min(c).cast("string").alias(f"_mn{i}"),
             F.max(c).cast("string").alias(f"_mx{i}"),
@@ -160,7 +160,13 @@ def _table_profile_exact(df, cols: list[str],
     import functools
     anynn = functools.reduce(
         lambda x, y: x | y, [F.col(v).isNotNull() for v in vcols])
-    prof = lvl1.groupBy("gid").agg(
+    # one all-NULL cnt=0 row per gid: every column reports (all counts
+    # 0, min/max NULL) even on empty input, and the counts are unmoved
+    col_rows = df.sparkSession.range(n).select(
+        F.col("id").cast("int").alias("gid"),
+        *[F.lit(None).cast(types[c]).alias(v) for c, v in zip(cols, vcols)],
+        F.lit(0).cast("long").alias("cnt"))
+    prof = lvl1.unionByName(col_rows).groupBy("gid").agg(
         F.sum("cnt").alias("n_rows"),
         F.coalesce(F.sum(F.when(~anynn, F.col("cnt"))),
                    F.lit(0)).alias("n_nulls"),
@@ -181,7 +187,7 @@ def _table_profile_exact(df, cols: list[str],
         F.coalesce(*[F.col(f"_mx{j}").cast("string") for j in range(n)])
         .alias("max_val"))
     if not quantile_cols:
-        return base
+        return base.orderBy("col_name")
     qarms = " ".join(
         f"WHEN gid = {cols.index(c)} "
         f"THEN {_hdr_profile_bucket(f'v{cols.index(c)}')}"

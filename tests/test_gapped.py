@@ -2,11 +2,15 @@
 and the stage-2 hookup in align_query. No Spark session needed."""
 import dataclasses
 
+import numpy as np
 import pytest
 
 from mr_mpi_blast_spark.config import BlastConfig
 from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _B62, _B62_IDX,
-                                               align_query, gotoh_local)
+                                               _gotoh_traceback, align_query,
+                                               gapped_extend,
+                                               gapped_extend_batch,
+                                               gotoh_local, gotoh_local_batch)
 
 # 20 distinct residues inside the BLOSUM62 alphabet
 RES = "ARNDCQEGHILKMFPSTWYV"
@@ -168,15 +172,83 @@ def test_ka_gapped_explicit_override():
         == KA_GAPPED_BLOSUM62[(11, 1)]
 
 
+def _pair_score_matrix(a: str, b: str, protein: bool,
+                       reward: int, penalty: int) -> np.ndarray:
+    """Substitution score for every (a_i, b_j) pair as an (m, n) int
+    matrix — BLOSUM62 for protein, reward/penalty for nucleotide."""
+    if protein:
+        ai, bi = ([_B62_IDX[ord(c) if ord(c) < 256 else ord("X")]
+                   for c in s] for s in (a, b))
+        return _B62[np.ix_(ai, bi)]
+    av = np.array([ord(c) for c in a])
+    bv = np.array([ord(c) for c in b])
+    return np.where(av[:, None] == bv[None, :], reward, penalty)
+
+
+def _gotoh_local_scalar(a: str, b: str, protein: bool, reward: int,
+                        penalty: int, gap_open: int, gap_extend: int,
+                        ) -> tuple[int, int, int, int, int, int, int, int]:
+    """The readable per-cell reference for gotoh_local: full H/E/F
+    matrices, one Python step per cell, the first maximal cell in
+    row-major order by argmax over H. The parity oracle of the kernel's
+    row-wise batched sweep."""
+    m, n = len(a), len(b)
+    if m == 0 or n == 0:
+        return (0, 0, 0, 0, 0, 0, 0, 0)
+    sub = _pair_score_matrix(a, b, protein, reward, penalty)
+    NEG = -(10 ** 6)
+    H = np.zeros((m + 1, n + 1), dtype=np.int64)
+    E = np.full((m + 1, n + 1), NEG, dtype=np.int64)   # gap in a (left)
+    Fv = np.full((m + 1, n + 1), NEG, dtype=np.int64)  # gap in b (up)
+    # pointers: H: 0 stop, 1 diag, 2 from E, 3 from F; E/F: 1 = opened
+    PH = np.zeros((m + 1, n + 1), dtype=np.int8)
+    PE = np.zeros((m + 1, n + 1), dtype=np.int8)
+    PF = np.zeros((m + 1, n + 1), dtype=np.int8)
+    go = gap_open + gap_extend   # cost of a length-1 gap
+    for i in range(1, m + 1):
+        for j in range(1, n + 1):
+            f_open = H[i - 1, j] - go
+            f_ext = Fv[i - 1, j] - gap_extend
+            Fv[i, j] = max(f_open, f_ext)
+            PF[i, j] = f_open >= f_ext
+            e_open = H[i, j - 1] - go
+            e_ext = E[i, j - 1] - gap_extend
+            E[i, j] = max(e_open, e_ext)
+            PE[i, j] = e_open >= e_ext
+            diag = H[i - 1, j - 1] + sub[i - 1, j - 1]
+            best, ptr = 0, 0
+            if diag >= best:
+                best, ptr = diag, 1
+            if E[i, j] > best:
+                best, ptr = E[i, j], 2
+            if Fv[i, j] > best:
+                best, ptr = Fv[i, j], 3
+            H[i, j] = best
+            PH[i, j] = ptr
+    i, j = divmod(int(np.argmax(H)), n + 1)   # first maximal, row-major
+    return _gotoh_traceback(a, b, int(H[i, j]), i, j, PH, PE, PF)
+
+
+def _random_pairs(rng, alpha: str, count: int, max_len: int):
+    """Random pairs, half of them sharing a planted block (so the
+    optimum carries gaps), plus the empty and one-residue edge cases."""
+    pairs = [("", ""), ("", alpha[0]), (alpha[0], ""), (alpha[0], alpha[0])]
+    for _ in range(count):
+        a, b = ("".join(rng.choice(list(alpha),
+                                   size=int(rng.integers(0, max_len))))
+                for _ in range(2))
+        if rng.random() < 0.5 and len(a) > 10:
+            b = b[:int(rng.integers(0, 15))] + a[2:min(len(a), 40)] + b[:20]
+        pairs.append((a, b))
+    return pairs
+
+
 def test_gotoh_vectorized_equals_scalar_reference():
-    """The anti-diagonal sweep must reproduce the per-cell reference
-    exactly — score, coordinates, identity/gap counts — on random
-    protein and DNA pairs with planted homologies, across gap costs."""
-    import numpy as np
-    from mr_mpi_blast_spark.kernel.builtin import (_gotoh_local_scalar,
-                                                   gotoh_local)
+    """The row-wise sweep must reproduce the per-cell reference exactly
+    — score, coordinates, identity/gap counts — on random protein and
+    DNA pairs with planted homologies, across gap costs including
+    gap_open = 0 (go == ge, the edge of the prefix-scan's exactness)."""
     rng = np.random.default_rng(11)
-    RES = "ARNDCQEGHILKMFPSTWYV"
     for t in range(150):
         protein = t % 2 == 0
         alpha = RES if protein else "ACGT"
@@ -185,27 +257,72 @@ def test_gotoh_vectorized_equals_scalar_reference():
         b = "".join(rng.choice(list(alpha), size=int(rng.integers(0, 70))))
         if rng.random() < 0.5 and la > 10:
             b = a[2:min(la, 40)] + b[:20]      # shared block -> gaps
-        go = int(rng.integers(1, 12))
+        go = int(rng.integers(0, 12))
         ge = int(rng.integers(1, 4))
         assert gotoh_local(a, b, protein, 1, -2, go, ge) == \
-            _gotoh_local_scalar(a, b, protein, 1, -2, go, ge), (a, b)
+            _gotoh_local_scalar(a, b, protein, 1, -2, go, ge), (a, b, go, ge)
 
 
-@pytest.mark.slow
-def test_gotoh_batch_equals_per_window():
-    """The cross-window batched forward sweep (gotoh_local_batch) must
-    be bit-identical to per-window gotoh_local — scores, coordinates,
-    identity/gap counts, and the row-major first-maximal tie-break —
-    for mixed-size batches, empty strings, protein and DNA alphabets,
-    and both gap-cost regimes. Also pins the tile split (batches
-    larger than one tile) and gapped_extend_batch's pad ladder."""
-    import numpy as np
-    from mr_mpi_blast_spark.kernel.builtin import (gapped_extend,
-                                                   gapped_extend_batch,
-                                                   gotoh_local,
-                                                   gotoh_local_batch)
+@pytest.mark.parametrize("protein,rew,pen,go,ge", [
+    (True, 1, -2, 11, 1), (True, 1, -2, 0, 1),
+    (False, 2, -3, 5, 2), (False, 1, -2, 0, 2)])
+def test_gotoh_batch_equals_scalar_reference(monkeypatch, protein, rew, pen,
+                                             go, ge):
+    """Mixed-size batches: every window but the largest runs with
+    padding lanes (j > n_w, i > m_w), which must never leak into its
+    score or coordinates. A small cell budget forces many tiles of
+    mixed shapes."""
+    from mr_mpi_blast_spark.kernel import builtin
+    rng = np.random.default_rng(29 + go + ge)
+    pairs = _random_pairs(rng, RES if protein else "ACGTN", 40, 60)
+    want = [_gotoh_local_scalar(a, b, protein, rew, pen, go, ge)
+            for a, b in pairs]
+    assert gotoh_local_batch(pairs, protein, rew, pen, go, ge) == want
+    monkeypatch.setattr(builtin, "_GOTOH_CELL_BUDGET", 6000)
+    assert gotoh_local_batch(pairs, protein, rew, pen, go, ge) == want
+
+
+@pytest.mark.parametrize("a,b,want", [
+    # same row: "ACGT" ends at (4, 4) and at (4, 12); j=4 comes first
+    ("ACGT", "ACGTCCCCACGT", (4, 0, 3, 0, 3, 4, 0, 4)),
+    # same anti-diagonal, different rows: (4, 8) precedes (8, 4)
+    ("AAAACCCC", "CCCCAAAA", (4, 0, 3, 4, 7, 4, 0, 4)),
+])
+def test_gotoh_tie_takes_first_maximal_cell_row_major(a, b, want):
+    """Two cells share the maximal score: the traceback starts from the
+    first one in row-major order, in a batch (next to a longer window,
+    so this one has padding lanes) and alone."""
+    assert _gotoh_local_scalar(a, b, False, 1, -2, 5, 2) == want
+    assert gotoh_local(a, b, False, 1, -2, 5, 2) == want
+    longer = ("ACGT" * 10, "ACGT" * 12)
+    assert gotoh_local_batch([(a, b), longer], False, 1, -2, 5, 2)[0] \
+        == want
+
+
+def test_gapped_extend_batch_pad_ladder():
+    """gapped_extend_batch runs every pending window of a pad level in
+    one batch; results equal the per-item ladder (gapped_extend),
+    including windows that must grow past the first pad."""
     rng = np.random.default_rng(23)
-    RES = "ARNDCQEGHILKMFPSTWYV"
+    cfg = BlastConfig(task="blastp", gapped=True)
+    items = []
+    for _ in range(60):
+        q = "".join(rng.choice(list(RES), size=int(rng.integers(40, 300))))
+        s = "".join(rng.choice(list(RES), size=int(rng.integers(40, 300))))
+        if len(q) > 70 and len(s) > 70:
+            s = s[:5] + q[10:60] + s[55:]      # forces pad growth
+        qs = int(rng.integers(0, len(q) - 10))
+        ss = int(rng.integers(0, len(s) - 10))
+        items.append((q, s, qs, min(len(q) - 1, qs + 8),
+                      ss, min(len(s) - 1, ss + 8)))
+    assert gapped_extend_batch(items, cfg) == \
+        [gapped_extend(*it, cfg) for it in items]
+
+
+def test_gotoh_batch_equals_per_window():
+    """Larger mixed-size batches (up to 150 x 150, one tile) equal
+    per-window gotoh_local for both alphabets and gap-cost regimes."""
+    rng = np.random.default_rng(23)
     for protein, (go, ge) in [(True, (11, 1)), (False, (5, 2))]:
         alpha = list(RES if protein else "ACGT")
         rew, pen = (1, -2) if protein else (2, -3)
@@ -225,17 +342,58 @@ def test_gotoh_batch_equals_per_window():
                 for a, b in pairs]
         assert got == want
 
-    from mr_mpi_blast_spark.config import BlastConfig
-    cfg = BlastConfig(task="blastp", gapped=True)
-    items = []
-    for _ in range(60):
-        q = "".join(rng.choice(list(RES), size=int(rng.integers(40, 300))))
-        s = "".join(rng.choice(list(RES), size=int(rng.integers(40, 300))))
-        if len(q) > 70 and len(s) > 70:
-            s = s[:5] + q[10:60] + s[55:]      # forces pad growth
-        qs = int(rng.integers(0, len(q) - 10))
-        ss = int(rng.integers(0, len(s) - 10))
-        items.append((q, s, qs, min(len(q) - 1, qs + 8),
-                      ss, min(len(s) - 1, ss + 8)))
-    assert gapped_extend_batch(items, cfg) == \
-        [gapped_extend(*it, cfg) for it in items]
+
+def _sibling_dna() -> tuple[str, str]:
+    """Two 900-bp copies of one random ancestor: scattered
+    substitutions in both, and in the second a 7-bp insertion, a 5-bp
+    and a 2-bp deletion and a 1-bp insertion."""
+    rng = np.random.default_rng(5)
+    base = "".join(rng.choice(list("ACGT"), size=900))
+
+    def mutate(s, sites):
+        s = list(s)
+        for p in sites:
+            s[p] = "ACGT"[("ACGT".index(s[p]) + 1) % 4]
+        return "".join(s)
+    a = mutate(base, range(37, 900, 97))
+    b = mutate(base, range(61, 900, 113))
+    b = (b[:150] + "GATTACA" + b[150:400] + b[405:620] + "T" + b[620:780]
+         + b[782:])
+    return a, b
+
+
+def test_align_block_gapped_blastn_golden():
+    """Pinned md5 of align_block's RAW_HITS frame for an all-vs-all of
+    two sibling sequences under gapped blastn (+2/-3, gaps 5/2): the
+    gapped DP's scores, coordinates, ident/gaps/align_len and the
+    emission/dedupe order must not move."""
+    import hashlib
+    from mr_mpi_blast_spark.kernel.builtin import align_block
+    a, b = _sibling_dna()
+    cfg = BlastConfig(task="blastn", reward=2, penalty=-3, gapped=True,
+                      gap_open=5, gap_extend=2, word_size=11)
+    idx = SubjectIndex([("a", a), ("b", b)], cfg.word_size, cfg.max_kmer_hits)
+    df = align_block([(1, a), (2, b)], idx, cfg)
+    assert len(df) == 8 and df["gaps"].max() == 15
+    assert hashlib.md5(df.to_csv(index=False).encode()).hexdigest() \
+        == "c35025f70e237b4be3790d8d935519e0"
+
+
+@pytest.mark.parametrize("opt", ["-gapopen", "-gapextend"])
+def test_negative_gap_costs_rejected(opt):
+    """The row-wise scan is exact only for non-negative gap costs: a
+    negative -gapopen/-gapextend raises a ValueError naming the option
+    as soon as the effective costs are resolved — also with explicit
+    gapped statistics, which skip the table lookup."""
+    from mr_mpi_blast_spark.config import apply_blast_cli_opts
+    from mr_mpi_blast_spark.kernel.builtin import scoring_params
+    cfg = apply_blast_cli_opts(
+        BlastConfig(task="blastn", ka_gapped=(0.625, 0.41, 0.78)),
+        [opt, "-1"])
+    assert cfg.gapped
+    with pytest.raises(ValueError, match=opt):
+        scoring_params(cfg)
+    with pytest.raises(ValueError, match=opt):
+        gapped_extend_batch([("ACGT" * 10, "ACGT" * 10, 0, 10, 0, 10)], cfg)
+    with pytest.raises(ValueError, match="gap costs"):
+        gotoh_local("ACGT", "ACGT", False, 1, -2, -1, 2)

@@ -199,6 +199,36 @@ def test_table_profile_exact_counts_and_validation(spark):
         table_profile(df, [])
 
 
+def test_table_profile_reports_in_sorted_column_order(spark):
+    """Both paths, with and without quantile columns, report the
+    columns in sorted name order — also when the exact path's per-
+    column aggregate comes back through a shuffle."""
+    from mr_mpi_blast_spark.operators.profile import table_profile
+
+    names = [f"c{i:02d}" for i in range(12)]
+    df = spark.createDataFrame(
+        [tuple(i * (j + 1) for j in range(12)) for i in range(20)],
+        ", ".join(f"{c} long" for c in reversed(names)))
+    for kw in ({}, {"exact": False}, {"quantile_cols": ["c03", "c07"]}):
+        assert [r.col_name for r in table_profile(df, **kw).collect()] \
+            == names, kw
+
+
+def test_table_profile_empty_input_shape(spark):
+    """An empty table still gets one row per profiled column, counts 0
+    and min/max NULL — the exact path matches the approx path."""
+    from mr_mpi_blast_spark.operators.profile import table_profile
+
+    df = spark.createDataFrame([], "id long, s string, v long")
+    want = [(c, 0, 0, 0, None, None) for c in ("id", "s", "v")]
+    for exact in (True, False):
+        got = [tuple(r) for r in table_profile(df, exact=exact).collect()]
+        assert got == want, exact
+    q = table_profile(df, quantile_cols=["v"]).collect()
+    assert [(r.col_name, r.n_rows, r.p500_est) for r in q] == \
+        [("id", 0, None), ("s", 0, None), ("v", 0, None)]
+
+
 def test_ccnet_buckets_ordering_and_sizes(spark):
     """ccnet_buckets semantics on the real table: within each lang,
     every head doc scores >= every middle doc >= every tail doc (on
