@@ -1,11 +1,9 @@
-"""Deterministic cross-engine hashing primitives.
+"""Deterministic cross-engine text primitives.
 
-Everything downstream of these (MinHash, SimHash, fingerprints) must
-hash identically in Spark and in the DuckDB oracle. The one hash both
-engines implement bit-identically is md5 — so signatures are built on
-md5 hex strings: MinHash components are lexicographic minima of salted
-md5s (strings order the same everywhere), and SimHash bits come from
-md5 nibbles decoded with instr('0123456789abcdef', ...) arithmetic.
+Everything downstream of these (MinHash, SimHash, fingerprints in
+operators/dedup.py and functions/text.py) must hash identically in
+Spark and in the DuckDB oracle, so the inputs they hash — character
+shingles and the canonical text form — are defined once here.
 
 All pure column expressions — JVM-side, codegen-friendly, no UDFs.
 """
@@ -22,80 +20,6 @@ def char_shingles(col: Column, n: int) -> Column:
     idx = F.sequence(F.lit(0), F.greatest(F.length(col) - n, F.lit(0)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.substring(col, i + 1, n)))
-
-
-def char_shingles_sql(expr: str, n: int) -> str:
-    """DuckDB rendering of char_shingles (same semantics)."""
-    return (f"list_distinct(list_transform("
-            f"range(0, greatest(length({expr}) - {n}, 0) + 1), "
-            f"i -> substring({expr}, i + 1, {n})))")
-
-
-def minhash_signature(shingles: Column, num_hashes: int) -> Column:
-    """MinHash signature as an array of lexicographic-min salted md5
-    hex strings. min(md5(i || ':' || s)) is an order-preserving
-    stand-in for min over the i-th hash family member."""
-    return F.array(*[
-        F.array_min(F.transform(
-            shingles, lambda s: F.md5(F.concat(F.lit(f"{i}:"), s))))
-        for i in range(num_hashes)
-    ])
-
-
-def minhash_signature_sql(shingles_expr: str, num_hashes: int) -> str:
-    parts = ", ".join(
-        f"list_min(list_transform({shingles_expr}, s -> md5('{i}:' || s)))"
-        for i in range(num_hashes))
-    return f"[{parts}]"
-
-
-def _seeded_hash(i: int):
-    # Factory keeps the lambda arity at 1: a two-parameter lambda
-    # (e.g. ``lambda s, i=i: ...``) would be bound by F.transform as
-    # the (element, index) form, silently replacing the seed with the
-    # array position.
-    return lambda s: F.xxhash64(F.lit(i), s)
-
-
-def minhash_signature_fast(shingles: Column, num_hashes: int) -> Column:
-    """MinHash signature as an array of xxhash64 minima — the scale
-    path. xxhash64 is JVM-native and codegen-friendly (no hex-string
-    materialization, ~10x cheaper than the md5 form). Not replayable
-    in the DuckDB oracle — use only where the *output* (candidate
-    pairs after exact verification), not the signature, is compared."""
-    return F.array(*[
-        F.array_min(F.transform(shingles, _seeded_hash(i)))
-        for i in range(num_hashes)
-    ])
-
-
-def lsh_band_keys_from_shingles(shingles: Column, bands: int,
-                                rows_per_band: int) -> Column:
-    """Band keys computed directly from the shingle array: band b's key
-    hashes its own rows_per_band minhash minima. Avoids materializing a
-    shared signature column — Catalyst's CollapseProject would inline
-    such a column into every band expression, and higher-order
-    functions get no codegen subexpression elimination, turning b bands
-    into b full signature computations per row (measured 8x at sf0.1).
-    Total work here is exactly bands*rows_per_band min-passes."""
-    return F.array(*[
-        F.xxhash64(F.array(*[
-            F.array_min(F.transform(
-                shingles, _seeded_hash(b * rows_per_band + r)))
-            for r in range(rows_per_band)
-        ]))
-        for b in range(bands)
-    ])
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Band the signature: band key b = hash of the slice (xxhash64
-    hashes array columns natively). Docs sharing any band key are LSH
-    candidates."""
-    return F.array(*[
-        F.xxhash64(F.slice(signature, b * rows_per_band + 1, rows_per_band))
-        for b in range(bands)
-    ])
 
 
 def normalized_text(col: Column) -> Column:

@@ -87,9 +87,3 @@ def project_hits(raw: DataFrame, dbsize: int,
         else F.lit(None).cast("double").alias("perc_cover"),
     )
     return out
-
-
-def format_g3(col: Column) -> Column:
-    """P10: converters print floats as %.3g (load_csv.py:144-147) —
-    used only in the CSV sink."""
-    return F.format_string("%.3g", col)

@@ -19,7 +19,7 @@ Faithful semantics kept from the reference:
 - ultra-frequent seeds are skipped (max_kmer_hits), the low-complexity
   masking analog (F3 -dust);
 - F3 masking options (doc/USERGUIDE:47-50) as seeding-level analogs:
-  -dust/-seg -> word_low_complexity seed drop, -soft_masking ->
+  -dust/-seg -> low-complexity seed drop, -soft_masking ->
   lowercase subject words excluded from the index, -lcase_masking ->
   lowercase query words skipped, -window_size -> two-hit seeding.
   All default off (None) so they never perturb runs that don't ask
@@ -34,9 +34,9 @@ scheme (matrix/reward/penalty + gap costs; unknown schemes raise,
 calibratable via the kernel/ka_sim.py island estimator).
 The gapped DP runs on a window around the ungapped HSP rather than
 BLAST+'s unbounded X-drop extension; the window doubles whenever the
-alignment touches a growable edge (gapped_extend), so results are not
-truncated, but pathological alignments wider than _GAP_PAD_MAX per
-side are. blastp seeding defaults to exact word matches; BLAST's
+alignment touches a growable edge (gapped_extend_batch), so results
+are not truncated, but pathological alignments wider than _GAP_PAD_MAX
+per side are. blastp seeding defaults to exact word matches; BLAST's
 neighborhood-word seeding (words scoring >= T against the query word
 under BLOSUM62) is available via BlastConfig(threshold=T), the real
 -threshold semantics for short protein words.
@@ -58,7 +58,7 @@ import os
 import numpy as np
 import pandas as pd
 
-from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType,
+from pyspark.sql.types import (IntegerType, LongType, StringType,
                                StructField, StructType)
 
 from mr_mpi_blast_spark.config import BlastConfig
@@ -123,9 +123,6 @@ KA_GAPPED_NUCL: dict[tuple[int, int, int, int],
 # kept as a named constant for round-3 callers
 KA_BLOSUM62_G111 = KA_GAPPED_BLOSUM62[(11, 1)]
 
-# kept as module constants for blastn compatibility with round-1 users
-LAMBDA, KAPPA = KA_NUCL_1_2[0], KA_NUCL_1_2[1]
-
 # BLOSUM62 (Henikoff & Henikoff 1992), the standard 24-letter table as
 # shipped with NCBI BLAST (data/BLOSUM62). Row/col order below:
 _B62_ALPHA = "ARNDCQEGHILKMFPSTWYVBZX*"
@@ -185,30 +182,6 @@ _B62_SENT = len(_B62_ALPHA)                   # 24
 _B62_NEG = -(4 * 10 ** 6)
 _B62E = np.full((_B62_SENT + 1, _B62_SENT + 1), _B62_NEG, dtype=np.int32)
 _B62E[:_B62_SENT, :_B62_SENT] = _B62
-
-
-def _b62_row_maps() -> list[dict[str, int]]:
-    """One {char: score} dict per matrix row, covering all 256 byte
-    chars (unknowns pre-resolved to the X column) — the kernel's inner
-    loop is a single dict hit per pair, no numpy scalar indexing
-    (~20x faster than per-pair ndarray lookups in CPython)."""
-    return [{chr(c): int(_B62_ROWS[ri][_B62_IDX[c]]) for c in range(256)}
-            for ri in range(len(_B62_ALPHA))]
-
-
-_B62_ROWMAP = _b62_row_maps()
-_B62_X_ROW = _B62_ROWMAP[_B62_X]
-
-
-def _b62_row(ch: str) -> dict[str, int]:
-    o = ord(ch)
-    return _B62_ROWMAP[_B62_IDX[o]] if o < 256 else _B62_X_ROW
-
-
-def blosum62_score(a: str, b: str) -> int:
-    """Pairwise BLOSUM62 score; non-residue characters score as X."""
-    row = _b62_row(a)
-    return row[b] if ord(b) < 256 else row["X"]
 
 
 def scoring_params(cfg: BlastConfig) -> tuple[float, float, float]:
@@ -288,33 +261,11 @@ def revcomp(seq: str) -> str:
     return seq.translate(_COMPLEMENT)[::-1]
 
 
-def word_is_lowercase_masked(word: str) -> bool:
-    """True when the word overlaps a soft-masked (lowercase) region —
-    the FASTA convention dustmasker/segmasker emit and
-    -soft_masking/-lcase_masking consume (doc/USERGUIDE:47-50)."""
-    return any(c.islower() for c in word)
-
-
-def word_low_complexity(word: str, protein: bool) -> bool:
-    """Builtin dust/seg analog: a seed word is low-complexity when its
-    distinct-character count collapses (homopolymer/dimer repeats for
-    nucleotides, homopolymer for the k=3 protein words). Far simpler
-    than NCBI's DUST/SEG scoring but catches the same seed explosions,
-    and only ever *drops seeds* — extension is untouched, matching
-    soft-masking semantics.
-
-    Case-folds per codepoint (fold_case_str semantics — a char whose
-    str.upper() is multi-char, e.g. eszett, stays itself) so this
-    scalar form agrees with the vectorized masked-index build
-    (_low_complexity_windows_np) for EVERY input, not just biological
-    alphabets."""
-    return len(set(fold_case_str(word))) <= (1 if protein else 2)
-
-
-# vectorized forms of the two word predicates above, evaluated over a
-# whole subject's codepoints at once (the masked index build): tables
-# cover the Latin-1 range the biological alphabets live in; rarer
-# codepoints fall back to the exact per-char predicate
+# the subject-side seed-word predicates (lowercase = soft-masked, low
+# complexity = -dust/-seg analog), evaluated over a whole subject's
+# codepoints at once (the masked index build): tables cover the
+# Latin-1 range the biological alphabets live in; rarer codepoints
+# fall back to the exact per-char predicate
 _LOWER_TBL = np.array([chr(i).islower() for i in range(256)], dtype=bool)
 _UPPER_TBL = np.array(
     [ord(chr(i).upper()) if len(chr(i).upper()) == 1
@@ -359,10 +310,13 @@ def fold_case_str(s: str) -> str:
 
 def _low_complexity_windows_np(codes: np.ndarray, k: int,
                                protein: bool) -> np.ndarray:
-    """word_low_complexity for every length-k window of a codepoint
-    array: distinct (case-folded) count <= 1 for protein words, <= 2
-    for nucleotide words — k-1 vectorized passes tracking the first
-    and (for nucleotides) second distinct value."""
+    """The builtin dust/seg analog for every length-k window of a
+    codepoint array: a seed word is low-complexity when its distinct
+    (case-folded, per codepoint) character count collapses to <= 1 for
+    protein words, <= 2 for nucleotide words (homopolymer/dimer
+    repeats). Far simpler than NCBI's DUST/SEG but catches the same
+    seed explosions, and only ever drops seeds. k-1 vectorized passes
+    tracking the first and (for nucleotides) second distinct value."""
     nw = len(codes) - k + 1
     if nw <= 0:
         return np.zeros(0, dtype=bool)
@@ -511,9 +465,6 @@ def volume_words(seqs: list[str], k: int) -> list[str]:
 class SubjectIndex:
     """k-mer -> [(subject_idx, pos)...] over one DB partition.
 
-    ``encoded`` (ord + BLOSUM row-index arrays per subject) is built
-    lazily on first protein search so nucleotide indexes pay nothing.
-
     soft_mask drops seed words overlapping lowercase (masked) subject
     regions; complexity drops low-complexity words (F3 -dust/-seg
     analogs). Both affect seeding only — extension still scores
@@ -525,17 +476,14 @@ class SubjectIndex:
     fold_case_str) so a masked region still *matches* during
     extension. Off by default so unmasked runs stay byte-identical.
 
-    One physical form: the hashed build — all subjects are
-    concatenated (with separators) into one codepoint array, every
-    window hashed in k vectorized passes, buckets grouped by a single
-    argsort; subject-side masking (soft_mask/complexity) is a
-    vectorized window-drop filter inside the same build. Hash
-    collisions cannot corrupt results: seed consumers re-verify the
-    exact word before extending. ``hashed`` is always True in
-    production; tests force it False (with a hand-built _str_index)
-    only to drive the sequential oracle's dict route for equivalence
-    checks. The string-keyed ``index`` mapping is materialized lazily
-    from the hashed form for callers that introspect it.
+    The build: all subjects are concatenated (with separators) into
+    one codepoint array, every window hashed in k vectorized passes,
+    buckets grouped by a single argsort; subject-side masking
+    (soft_mask/complexity) is a vectorized window-drop filter inside
+    the same build. Hash collisions cannot corrupt results: seed
+    consumers re-verify the exact word before extending. The
+    concatenated encodings the batched extension reads (cat_protein,
+    cat_nucl) are built lazily on first touch.
     """
 
     def __init__(self, subjects: list[tuple[str, str]], word_size: int,
@@ -546,16 +494,8 @@ class SubjectIndex:
         self.word_size = word_size
         self.fold_case = fold_case
         self.max_kmer_hits = max_kmer_hits
-        self._encoded: list[tuple[np.ndarray, np.ndarray]] | None = None
-        self._str_index: dict[str, list[tuple[int, int]]] | None = None
         self.ext_seqs = ([fold_case_str(seq) for _, seq in subjects] if fold_case
                          else [seq for _, seq in subjects])
-        # every config builds the hashed form: subject-side masking
-        # (soft_mask / complexity) is a vectorized per-window drop
-        # filter inside the build, so masked configs run the same
-        # batched hot path as everything else (the per-window dict
-        # build this replaced was the one remaining sequential route)
-        self.hashed = True
         self._build_hashed(soft_mask=soft_mask, complexity=complexity,
                            protein=protein)
 
@@ -631,14 +571,6 @@ class SubjectIndex:
         return _distinct_words(cat, offs[self.sis_np] + self.poss_np,
                                self.word_size)
 
-    def query_buckets(self, q: str) -> list[int]:
-        """Bucket id (-1 = no seed) for every word position of a
-        (case-resolved) query: hash all windows, then one vectorized
-        searchsorted against the sorted key array."""
-        codes = np.frombuffer(q.encode("utf-32-le"), dtype="<u4")
-        qh = _window_hashes(codes, self.word_size)
-        return self.buckets_for_hashes(qh).tolist()
-
     def buckets_for_hashes(self, qh: np.ndarray) -> np.ndarray:
         """Bucket id (-1 = miss) for an arbitrary array of window
         hashes — the block-batched path hashes a whole query block's
@@ -650,12 +582,6 @@ class SubjectIndex:
         iic = np.minimum(ii, len(self._ukeys) - 1)
         found = self._ukeys[iic] == qh
         return np.where(found, iic, -1)
-
-    def bucket_pairs(self, bi: int) -> zip:
-        """(subject_idx, pos) pairs of one bucket, in (si asc, pos asc)
-        order."""
-        s0, e0 = self._bstart[bi], self._bend[bi]
-        return zip(self._sis[s0:e0], self._poss[s0:e0])
 
     @property
     def bucket_bounds_np(self) -> tuple[np.ndarray, np.ndarray]:
@@ -687,57 +613,17 @@ class SubjectIndex:
                                      dtype=object)
         return self._sids_np
 
-    def lookup_word(self, word: str) -> list[tuple[int, int]]:
-        """Exact occurrences of an ARBITRARY word (not necessarily a
-        query window) — the probe neighborhood seeding needs. Hashed
-        form: one hash + searchsorted + exact re-verify; dict form:
-        direct get."""
-        if not self.hashed:
-            return self._str_index.get(word, []) if self._str_index else []
-        codes = np.frombuffer(word.encode("utf-32-le"), dtype="<u4")
-        h = _window_hashes(codes, self.word_size)
-        if not len(h) or not len(self._ukeys):
-            return []
-        ii = int(np.searchsorted(self._ukeys, h[0]))
-        if ii >= len(self._ukeys) or self._ukeys[ii] != h[0]:
-            return []
-        k = self.word_size
-        return [(si, spos) for si, spos in self.bucket_pairs(ii)
-                if self.ext_seqs[si][spos:spos + k] == word]
-
-    def neighborhood_hits(self, word: str, threshold: int,
-                          ) -> list[tuple[list[tuple[int, int]], int, int]]:
-        """Seeding candidates for one query word under -threshold
-        semantics: [(occurrences, seed_score, seed_ident)] over every
-        neighborhood word present in this partition. Memoized on the
-        index instance (it is cached per worker across query blocks,
-        so the neighborhood of a repeated word is computed once per
-        volume, the lookup-table reuse real BLAST gets from its
-        per-search word table)."""
-        cache = getattr(self, "_nb_cache", None)
-        if cache is None:
-            cache = self._nb_cache = {}
-        key = (word, threshold)
-        got = cache.get(key)
-        if got is None:
-            got = []
-            for w2, sc in neighborhood_words(word, threshold):
-                hits = self.lookup_word(w2)
-                if hits:
-                    ident = sum(a == b for a, b in zip(word, w2))
-                    got.append((hits, sc, ident))
-            cache[key] = got
-        return got
-
     def neighborhood_arrays(self, word: str, threshold: int,
                             ) -> tuple[np.ndarray, np.ndarray,
                                        np.ndarray, np.ndarray] | None:
-        """neighborhood_hits flattened to numpy columns
-        (si, spos, seed_score, seed_ident) in visit order — neighbor
-        enumeration order then bucket (si, spos) order — for the
-        batched seeding path: per-qpos collection becomes O(1) array
-        appends instead of a per-seed Python loop. Cached per
-        (word, T) like neighborhood_hits."""
+        """Seeding candidates for one query word under -threshold
+        semantics, as numpy columns (si, spos, seed_score, seed_ident)
+        over every neighborhood word present in this partition, in
+        visit order — neighbor enumeration order then bucket (si, spos)
+        order — or None when there are none. Memoized per (word, T) on
+        the index instance (it is cached per worker across query
+        blocks, so the neighborhood of a repeated word is computed once
+        per volume, the word-table reuse real BLAST gets)."""
         cache = getattr(self, "_nb_np_cache", None)
         if cache is None:
             cache = self._nb_np_cache = {}
@@ -748,11 +634,9 @@ class SubjectIndex:
         # cold path, fully vectorized: hash EVERY neighbor word at
         # once, resolve all buckets in one searchsorted, expand, and
         # exact-verify against the volume's concatenated ords in k
-        # passes — the per-neighbor lookup_word loop with its
-        # per-occurrence Python string compare is gone. Order is
-        # identical to neighborhood_hits: neighbor enumeration order,
-        # then bucket (si, spos) order (expansion is neighbor-major
-        # and the verify filter preserves order).
+        # passes. Expansion is neighbor-major and the verify filter
+        # preserves order, so rows come in neighbor enumeration order,
+        # then bucket (si, spos) order.
         nbrs = neighborhood_words(word, threshold)
         out = None
         if nbrs and len(self._ukeys):
@@ -792,25 +676,6 @@ class SubjectIndex:
                         out = (si, sp, scs, idvec[wi])
         cache[key] = out
         return out
-
-    @property
-    def index(self) -> dict[str, list[tuple[int, int]]]:
-        """String-keyed view (lazy for the hashed form)."""
-        if self._str_index is None:
-            out: dict[str, list[tuple[int, int]]] = {}
-            k = self.word_size
-            for s0, e0 in zip(self._bstart, self._bend):
-                for si, pos in zip(self._sis[s0:e0], self._poss[s0:e0]):
-                    word = self.ext_seqs[si][pos:pos + k]
-                    out.setdefault(word, []).append((si, pos))
-            self._str_index = out
-        return self._str_index
-
-    @property
-    def encoded(self) -> list[tuple[np.ndarray, np.ndarray]]:
-        if self._encoded is None:
-            self._encoded = [encode_protein(s) for s in self.ext_seqs]
-        return self._encoded
 
     @property
     def cat_protein(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -868,19 +733,6 @@ class SubjectIndex:
                      else np.empty(0, dtype=np.int32))
             self._cat_nucl = (cat_o, offs)
         return self._cat_nucl
-
-
-def get_subject_index(cache_key: str, subjects, word_size: int,
-                      max_kmer_hits: int, soft_mask: bool = False,
-                      complexity: bool = False, protein: bool = False,
-                      fold_case: bool = False) -> SubjectIndex:
-    """DB-handle reuse (mrblast.cpp:838-845): build the partition index
-    once per Python worker, reuse across query-block tasks."""
-    return get_subject_index_lazy(cache_key, lambda: list(subjects),
-                                  word_size, max_kmer_hits,
-                                  soft_mask=soft_mask,
-                                  complexity=complexity, protein=protein,
-                                  fold_case=fold_case)
 
 
 def index_cache_key(cache_key: str, word_size: int, max_kmer_hits: int,
@@ -1013,66 +865,6 @@ def get_subject_index_lazy(cache_key: str, loader, word_size: int,
     return idx
 
 
-def pair_scorer(cfg: BlastConfig):
-    """char-pair -> score for the config's scoring system: BLOSUM62
-    lookups for blastp, reward/penalty for blastn. (Reference surface
-    for tests/tools; the kernel's hot loops use the specialized
-    _extend_rp/_extend_rows below.)"""
-    if cfg.task == "blastp":
-        return blosum62_score
-    reward, penalty = cfg.reward, cfg.penalty
-
-    def sc(a: str, b: str) -> int:
-        return reward if a == b else penalty
-    return sc
-
-
-def _extend_rp(q: str, s: str, qpos: int, spos: int, k: int,
-               reward: int, penalty: int, xdrop: int):
-    """Ungapped X-drop extension, reward/penalty scoring (blastn).
-    Returns (score, qs, qe, ss, se, ident) with 0-based inclusive
-    ends."""
-    qlen, slen = len(q), len(s)
-    # seed scores k matches
-    score = k * reward
-    ident = k
-    # extend right from end of word
-    best_score, best_qe, best_ident = score, qpos + k - 1, ident
-    i, j, cur, cur_ident = qpos + k, spos + k, score, ident
-    while i < qlen and j < slen:
-        if q[i] == s[j]:
-            cur += reward
-            cur_ident += 1
-        else:
-            cur += penalty
-        if cur > best_score:
-            best_score, best_qe, best_ident = cur, i, cur_ident
-        elif best_score - cur > xdrop:
-            break
-        i += 1
-        j += 1
-    score, qe, ident = best_score, best_qe, best_ident
-    # extend left from start of word
-    best_score, best_qs, best_ident = score, qpos, ident
-    i, j, cur, cur_ident = qpos - 1, spos - 1, score, ident
-    while i >= 0 and j >= 0:
-        if q[i] == s[j]:
-            cur += reward
-            cur_ident += 1
-        else:
-            cur += penalty
-        if cur > best_score:
-            best_score, best_qs, best_ident = cur, i, cur_ident
-        elif best_score - cur > xdrop:
-            break
-        i -= 1
-        j -= 1
-    qs = best_qs
-    ss = spos - (qpos - qs)
-    se = ss + (qe - qs)
-    return best_score, qs, qe, ss, se, best_ident
-
-
 _B62_IDX_NP = _B62_IDX.astype(np.intp)
 
 
@@ -1083,102 +875,6 @@ def encode_protein(seq: str) -> tuple[np.ndarray, np.ndarray]:
     ords = np.fromiter(map(ord, seq), dtype=np.int32, count=len(seq))
     safe = np.where(ords < 256, ords, ord("X"))
     return ords, _B62_IDX_NP[safe]
-
-
-def _extend_dir(qi: np.ndarray, si: np.ndarray, xdrop: int,
-                chunk: int = 256, base: int = 0, best: int = 0,
-                best_at: int = 0, t0: int = 0) -> tuple[int, int]:
-    """One direction of X-drop extension over pre-gathered index
-    arrays; processes in chunks so multi-megabase subjects don't pay
-    for tails the drop test would never reach. base/best/best_at/t0
-    carry state when a sequential prefix walk hands over mid-stream.
-    Returns (best gain, chars extended)."""
-    n = min(len(qi), len(si))
-    qi, si = qi[:n], si[:n]
-    for start in range(0, n, chunk):
-        steps = _B62[qi[start:start + chunk], si[start:start + chunk]]
-        c = base + np.cumsum(steps)
-        run = np.maximum.accumulate(np.maximum(c, best))
-        drop = (run - c) > xdrop
-        stopped = bool(drop.any())
-        upto = int(np.argmax(drop)) if stopped else len(c) - 1
-        chunk_best = int(run[upto])
-        if chunk_best > best:
-            bidx = int(np.argmax(c[:upto + 1] == chunk_best))
-            best, best_at = chunk_best, t0 + start + bidx + 1
-        if stopped:
-            return best, best_at
-        base = int(c[-1])
-    return best, best_at
-
-
-# Sequential-prefix length before handing a still-live extension to the
-# numpy chunks: random/unrelated text X-drops out well inside this many
-# chars (the common case, ~7 us in the dict walk), while genuinely
-# homologous stretches continue vectorized (~3 us per 256 chars).
-_SEQ_PREFIX = 40
-
-
-def _extend_dir_hybrid(q: str, s: str, qrows: list, i0: int, j0: int,
-                       step: int, qi: np.ndarray, si: np.ndarray,
-                       xdrop: int) -> tuple[int, int]:
-    """One direction, hybrid: walk up to _SEQ_PREFIX chars with dict
-    lookups (early-exit friendly), then continue on index arrays. i0/j0
-    are the first positions in this direction; step is +1 or -1; qi/si
-    are this direction's index arrays starting at the same positions."""
-    qlen, slen = len(q), len(s)
-    cur, best, best_at = 0, 0, 0
-    t = 0
-    i, j = i0, j0
-    while t < _SEQ_PREFIX:
-        if not (0 <= i < qlen and 0 <= j < slen):
-            return best, best_at
-        row = qrows[i]
-        v = row.get(s[j])
-        cur += v if v is not None else row["X"]
-        t += 1
-        if cur > best:
-            best, best_at = cur, t
-        elif best - cur > xdrop:
-            return best, best_at
-        i += step
-        j += step
-    return _extend_dir(qi[t:], si[t:], xdrop,
-                       base=cur, best=best, best_at=best_at, t0=t)
-
-
-def _extend_vec(qo: np.ndarray, qi: np.ndarray, so: np.ndarray,
-                si: np.ndarray, qpos: int, spos: int, k: int,
-                seed_score: int, xdrop: int,
-                q: str | None = None, s: str | None = None,
-                qrows: list | None = None, seed_ident: int | None = None):
-    """Vectorized ungapped X-drop extension (blastp hot path): exact
-    same semantics as the sequential walk — first-maximum tie-breaking,
-    strict improvement, break when best-cur > xdrop — scored by numpy
-    gathers over precomputed row indices. When the string forms and
-    row dicts are supplied, each direction walks a short sequential
-    prefix first (most extensions die there) before vectorizing."""
-    if qrows is not None:
-        gain_r, ext_r = _extend_dir_hybrid(
-            q, s, qrows, qpos + k, spos + k, 1,
-            qi[qpos + k:], si[spos + k:], xdrop)
-        gain_l, ext_l = _extend_dir_hybrid(
-            q, s, qrows, qpos - 1, spos - 1, -1,
-            qi[:qpos][::-1], si[:spos][::-1], xdrop)
-    else:
-        gain_r, ext_r = _extend_dir(qi[qpos + k:], si[spos + k:], xdrop)
-        gain_l, ext_l = _extend_dir(qi[:qpos][::-1], si[:spos][::-1], xdrop)
-    qs, qe = qpos - ext_l, qpos + k - 1 + ext_r
-    ident = seed_ident if seed_ident is not None else k
-    if ext_r:
-        ident += int(np.count_nonzero(
-            qo[qpos + k:qpos + k + ext_r] == so[spos + k:spos + k + ext_r]))
-    if ext_l:
-        ident += int(np.count_nonzero(
-            qo[qpos - ext_l:qpos] == so[spos - ext_l:spos]))
-    ss = spos - (qpos - qs)
-    se = ss + (qe - qs)
-    return seed_score + gain_r + gain_l, qs, qe, ss, se, ident
 
 
 # Seed-tile width for _extend_batch: keeps each 2D temporary around
@@ -1205,8 +901,9 @@ def _extend_batch(qrow: np.ndarray | None, qord: np.ndarray,
     = reward when ords are equal, penalty otherwise, _B62_NEG at
     out-of-range or subject-separator positions.
 
-    Semantics are exactly the sequential walk's (_extend_dir): running
-    best with first-maximum tie-breaking, strict improvement, stop
+    Semantics are exactly the sequential walk's (the per-seed X-drop
+    loops of the test oracle): running best with first-maximum
+    tie-breaking, strict improvement, stop
     when best - cur > xdrop — evaluated chunk-wise with 2D gathers, so
     the per-seed Python loop disappears. Out-of-range and
     subject-boundary positions score _B62_NEG, which trips the X-drop
@@ -1303,172 +1000,48 @@ def _extend_batch(qrow: np.ndarray | None, qord: np.ndarray,
     return best, best_at, best_m
 
 
-def _align_protein_batched_arrays(qid: int, q_ext: str,
-                                  index: SubjectIndex, cfg: BlastConfig,
-                                  lcase_src: str | None,
-                                  qlen: int) -> dict[str, np.ndarray]:
-    """The blastp hot path with the per-seed Python loop removed: seed
-    collection, exact-word verification, X-drop extension, and row
-    emission are all vectorized over the volume's concatenated
-    encoding (cat_protein); output is one numpy column per RAW_HITS
-    field, ready for zero-copy DataFrame assembly (align_block).
-
-    Rows are IDENTICAL to the sequential branch's (pinned by
-    test_batched_parity): seeds are processed per (subject, diagonal)
-    in qpos order with the same coverage dedupe (a seed starting
-    inside the previous extension's query extent on its diagonal is
-    skipped, and coverage updates even below min_raw_score), and
-    emissions are sorted to the sequential (qpos, si, spos) visit
-    order. Rounds = longest surviving seed chain on any diagonal (1-2
-    in practice), each a fully vectorized batch."""
-    k = cfg.word_size
-    qo, qi_arr = encode_protein(q_ext)
-    prefnp = np.concatenate(([0], np.cumsum(_B62[qi_arr, qi_arr],
-                                            dtype=np.int64)))
-    cord, crow, offs = index.cat_protein
-    nb_threshold = cfg.threshold
-    masked = None
-    if lcase_src is not None:
-        # -lcase_masking inspects the ORIGINAL query casing (q_ext may
-        # be case-folded when masking options are in play)
-        low = np.array([c.islower() for c in lcase_src], dtype=np.int32)
-        lowc = np.concatenate(([0], np.cumsum(low)))
-        masked = (lowc[k:] - lowc[:-k]) > 0       # window has lowercase
-
-    if nb_threshold is not None:
-        # --- neighborhood (-threshold) seed collection: probe every
-        # neighbor word's occurrences per live query position. The
-        # probes stay a (memoized) per-word loop — BLAST's word-table
-        # build — but every seed they yield joins the SAME batched
-        # extension below, with its own (seed_score, seed_ident)
-        # carried per seed; the per-seed extension loop is gone.
-        # Visit order matches the sequential branch exactly:
-        # qpos-major, then neighbor-word enumeration order, then
-        # bucket (si, spos) order. One (si, spos) can only match ONE
-        # neighbor word (the subject word itself), so within a
-        # (subject, diagonal) group qpos still strictly ascends.
-        n_words = len(q_ext) - k + 1
-        qp_parts: list[np.ndarray] = []
-        parts: list[tuple[np.ndarray, np.ndarray, np.ndarray,
-                          np.ndarray]] = []
-        for qpos in range(max(n_words, 0)):
-            if masked is not None and masked[qpos]:
-                continue
-            arrs = index.neighborhood_arrays(
-                q_ext[qpos:qpos + k], nb_threshold)
-            if arrs is None:
-                continue
-            qp_parts.append(np.full(len(arrs[0]), qpos, dtype=np.int64))
-            parts.append(arrs)
-        if not parts:
-            return _empty_raw_cols()
-        sq = np.concatenate(qp_parts)
-        ssi = np.concatenate([a[0] for a in parts])
-        ssp = np.concatenate([a[1] for a in parts])
-        gpos = offs[ssi] + ssp
-        seed_sc_all = np.concatenate([a[2] for a in parts])
-        seed_id_all = np.concatenate([a[3] for a in parts])
-    else:
-        qb = np.asarray(index.query_buckets(q_ext), dtype=np.int64)
-        if masked is not None:
-            qb = np.where(masked, -1, qb)
-
-        # --- seed collection: expand every live word position's bucket ---
-        qpos_list = np.flatnonzero(qb >= 0)
-        if not len(qpos_list):
-            return _empty_raw_cols()
-        bis = qb[qpos_list]
-        bstart, bend = index.bucket_bounds_np
-        counts = bend[bis] - bstart[bis]
-        total = int(counts.sum())
-        if total == 0:
-            return _empty_raw_cols()
-        sq = np.repeat(qpos_list, counts)
-        cum = np.concatenate(([0], np.cumsum(counts)))[:-1]
-        within = np.arange(total, dtype=np.int64) - np.repeat(cum, counts)
-        flat = np.repeat(bstart[bis], counts) + within
-        ssi = index.sis_np[flat]
-        ssp = index.poss_np[flat]
-        # exact-word re-verify, vectorized: the hash routes, the ord
-        # compare decides (collisions can never fabricate a seed)
-        gpos = offs[ssi] + ssp
-        ok = np.ones(total, dtype=bool)
-        for j in range(k):
-            ok &= cord[gpos + j] == qo[sq + j]
-        if not ok.all():
-            sq, ssi, ssp, gpos = sq[ok], ssi[ok], ssp[ok], gpos[ok]
-        if not len(sq):
-            return _empty_raw_cols()
-        seed_sc_all = prefnp[sq + k] - prefnp[sq]
-        seed_id_all = np.full(len(sq), k, dtype=np.int64)
-
-    core = _batched_core(q_ext, index, cfg, k, sq, ssi, ssp, gpos,
-                         seed_sc_all, seed_id_all,
-                         (qi_arr, qo, crow, cord, None),
-                         narrow=nb_threshold is not None)
-    if core is None:
-        return _empty_raw_cols()
-    return _raw_cols_from_core(qid, qlen, index, core, qstrand=1)
-
-
-def _batched_core(q_ext: str, index: SubjectIndex, cfg: BlastConfig,
-                  k: int, sq, ssi, ssp, gpos, seed_sc_all, seed_id_all,
-                  ext_args, narrow: bool = False,
-                  qoffs: np.ndarray | None = None,
-                  q_strs: list[str] | None = None):
-    """Shared batched stage for one query strand: group seeds by
-    (subject, diagonal), replay the sequential coverage dedupe in
-    whole-array rounds, extend every round's survivors in one 2D
-    X-drop batch, optionally run the per-HSP gapped stage, and return
-    the emitted rows in sequential visit order as
+def _batched_core(index: SubjectIndex, cfg: BlastConfig, k: int,
+                  sq, ssi, ssp, gpos, seed_sc_all, seed_id_all, ext_args,
+                  qoffs: np.ndarray, q_strs: list[str],
+                  narrow: bool = False):
+    """Shared batched stage for one strand of a query block: group
+    seeds by (query, subject, diagonal), replay the sequential
+    coverage dedupe in whole-array rounds, extend every round's
+    survivors in one 2D X-drop batch, optionally run the gapped stage,
+    and return the emitted rows in sequential visit order as
     (si, score, align_len, ident, gaps, qs, qe, ss, se) arrays — or
     None when nothing clears min_raw_score. ``ext_args`` =
     (qrow, qord, crow, cord, rp) selects BLOSUM (rp=None) or
     reward/penalty scoring for the extension batches.
 
-    Block mode (qoffs/q_strs given): the query side is a whole
-    BLOCK's concatenation (sentinel-separated, exactly like the
-    volume's cat_protein/cat_nucl) and ``sq`` carries GLOBAL
-    positions. Grouping then keys on (query, subject, diagonal-in-
-    query-local-coords) so two queries can never share a coverage
+    The query side is the whole BLOCK's concatenation
+    (sentinel-separated, exactly like the volume's
+    cat_protein/cat_nucl): ``sq`` carries GLOBAL positions and
+    ``qoffs`` each query's start in it. Diagonals are taken in
+    query-local coordinates, so two queries never share a coverage
     group, and the gapped stage slices each HSP's own query string
-    back out via qoffs. Returned q coords stay GLOBAL; callers map
+    (``q_strs``) back out. Returned q coords stay GLOBAL; callers map
     them back per row."""
     qrow, qord, crow, cord, rp = ext_args
-    # --- group by (subject, diagonal); within a group qpos ascends
-    # (collection order is qpos-major, bucket order si/spos asc) ---
-    seed_rank = None
-    if qoffs is not None:
-        qidx_all = np.searchsorted(qoffs, sq, side="right") - 1
-        diag = ssp - (sq - qoffs[qidx_all])
-        # lexsort (stable): groups ordered by (qidx, ssi, diag); the
-        # original collection order is global-qpos-major, so within
-        # each group sq still ascends — same invariant as the
-        # single-query argsort path, no int64 key packing needed
-        order = np.lexsort((diag, ssi, qidx_all))
-        qidx_s = qidx_all[order]
-        sq, ssi, ssp = sq[order], ssi[order], ssp[order]
-        gpos, diag_s = gpos[order], diag[order]
-        seed_sc = seed_sc_all[order]
-        seed_idb = seed_id_all[order]
-        seed_rank = order
-        chg = ((qidx_s[1:] != qidx_s[:-1]) | (ssi[1:] != ssi[:-1])
-               | (diag_s[1:] != diag_s[:-1]))
-        bounds = np.flatnonzero(chg) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(sq)]))
-    else:
-        diag = ssp - sq
-        dkey = ssi * np.int64(2 ** 32) + (diag + np.int64(2 ** 31))
-        order = np.argsort(dkey, kind="stable")
-        sq, ssi, ssp = sq[order], ssi[order], ssp[order]
-        gpos, dkey = gpos[order], dkey[order]
-        seed_sc = seed_sc_all[order]
-        seed_idb = seed_id_all[order]
-        seed_rank = order                 # original visit rank
-        bounds = np.flatnonzero(dkey[1:] != dkey[:-1]) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(dkey)]))
+    # --- group by (query, subject, diagonal); within a group qpos
+    # ascends (collection order is global-qpos-major, bucket order
+    # si/spos asc) ---
+    qidx_all = np.searchsorted(qoffs, sq, side="right") - 1
+    diag = ssp - (sq - qoffs[qidx_all])
+    # lexsort is stable, so within each (qidx, ssi, diag) group sq
+    # still ascends
+    order = np.lexsort((diag, ssi, qidx_all))
+    qidx_s = qidx_all[order]
+    sq, ssi, ssp = sq[order], ssi[order], ssp[order]
+    gpos, diag_s = gpos[order], diag[order]
+    seed_sc = seed_sc_all[order]
+    seed_idb = seed_id_all[order]
+    seed_rank = order                     # original visit rank
+    chg = ((qidx_s[1:] != qidx_s[:-1]) | (ssi[1:] != ssi[:-1])
+           | (diag_s[1:] != diag_s[:-1]))
+    bounds = np.flatnonzero(chg) + 1
+    starts = np.concatenate(([0], bounds))
+    ends = np.concatenate((bounds, [len(sq)]))
     n_groups = len(starts)
     # group-augmented seed key: globally ascending because sq ascends
     # within each group — one searchsorted jumps every group's pointer
@@ -1574,33 +1147,26 @@ def _batched_core(q_ext: str, index: SubjectIndex, cfg: BlastConfig,
 
     if cfg.gapped:
         # stage 2, batched across HSPs: the DP windows of EVERY
-        # triggered HSP run through one size-tiled row-wise sweep whose
-        # horizontal gaps come from a per-row prefix-max scan (exact
-        # for gap_open >= 0; gapped_extend_batch — bit-identical to the
-        # per-HSP loop, including the pad ladder), then emission/dedupe
-        # replays the sequential visit order so first-wins semantics
-        # are unchanged. Block mode slices each HSP's own query string
-        # (DP must never see the sentinel-joined neighbors) and
-        # scopes the dedupe key per query.
+        # triggered HSP run through gapped_extend_batch (one size-tiled
+        # row-wise sweep per pad level), then emission/dedupe replays
+        # the sequential visit order so first-wins semantics hold. Each
+        # HSP's DP sees only its own query string (never the
+        # sentinel-joined neighbors); dedupe keys on GLOBAL query
+        # coordinates, which never coincide across queries.
         ext_seqs = index.ext_seqs
         trig = cfg.gap_trigger_eff
         gap_items = []
-        gap_meta = {}                 # t -> (batch position, qi_t, off)
+        gap_meta = {}                 # t -> (batch position, query offset)
         for t in range(len(r_sc)):
             if int(r_sc[t]) < trig:
                 continue
             qs_v, qe_v = int(r_qs[t]), int(r_qe[t])
-            if qoffs is not None:
-                qi_t = int(np.searchsorted(qoffs, qs_v, "right")) - 1
-                off = int(qoffs[qi_t])
-                gap_items.append((q_strs[qi_t], ext_seqs[int(r_si[t])],
-                                  qs_v - off, qe_v - off,
-                                  int(r_ss[t]), int(r_se[t])))
-                gap_meta[t] = (len(gap_items) - 1, qi_t, off)
-            else:
-                gap_items.append((q_ext, ext_seqs[int(r_si[t])],
-                                  qs_v, qe_v, int(r_ss[t]), int(r_se[t])))
-                gap_meta[t] = (len(gap_items) - 1, None, 0)
+            qi_t = int(np.searchsorted(qoffs, qs_v, "right")) - 1
+            off = int(qoffs[qi_t])
+            gap_items.append((q_strs[qi_t], ext_seqs[int(r_si[t])],
+                              qs_v - off, qe_v - off,
+                              int(r_ss[t]), int(r_se[t])))
+            gap_meta[t] = (len(gap_items) - 1, off)
         gap_res = gapped_extend_batch(gap_items, cfg) if gap_items else []
 
         rows = []
@@ -1612,12 +1178,11 @@ def _batched_core(q_ext: str, index: SubjectIndex, cfg: BlastConfig,
             gaps_n, align_len = 0, qe_v - qs_v + 1
             si_t = int(r_si[t])
             if t in gap_meta:
-                pos, qi_t, off = gap_meta[t]
+                pos, off = gap_meta[t]
                 (gscore, gqs, gqe, gss, gse, gident, gg, galn
                  ) = gap_res[pos]
                 gqs, gqe = gqs + off, gqe + off
-                key = ((qi_t, si_t, gqs, gqe, gss, gse)
-                       if qi_t is not None else (si_t, gqs, gqe, gss, gse))
+                key = (si_t, gqs, gqe, gss, gse)
                 if gscore < min_raw:
                     continue
                 score, qs_v, qe_v, ss_v, se_v = gscore, gqs, gqe, gss, gse
@@ -1637,99 +1202,6 @@ def _batched_core(q_ext: str, index: SubjectIndex, cfg: BlastConfig,
     return (r_si, r_sc, al, r_id, gp, r_qs, r_qe, r_ss, r_se)
 
 
-def _raw_cols_from_core(qid: int, qlen: int, index: SubjectIndex,
-                        core, qstrand: int) -> dict[str, np.ndarray]:
-    """RAW_HITS column dict from a _batched_core result. For the minus
-    strand the query coords are mapped back to the forward
-    orientation, exactly like the sequential branch (after the gapped
-    stage)."""
-    r_si, r_sc, al, r_id, gp, r_qs, r_qe, r_ss, r_se = core
-    if qstrand == -1:
-        r_qs, r_qe = qlen - r_qe - 1, qlen - r_qs - 1
-    n = len(r_sc)
-    i32 = np.int32
-    return {
-        "qid": np.full(n, qid, dtype=np.int64),
-        "sid": index.sids_np[r_si],
-        "score": r_sc.astype(i32),
-        "align_len": al.astype(i32),
-        "ident_count": r_id.astype(i32),
-        "gaps": gp.astype(i32),
-        "qstart0": r_qs.astype(i32),
-        "qend0": r_qe.astype(i32),
-        "sstart0": r_ss.astype(i32),
-        "send0": r_se.astype(i32),
-        "qstrand": np.full(n, qstrand, dtype=i32),
-        "sstrand": np.ones(n, dtype=i32),
-        "qlen": np.full(n, qlen, dtype=i32),
-    }
-
-
-def _align_nucl_batched_arrays(qid: int, seq: str, index: SubjectIndex,
-                               cfg: BlastConfig,
-                               qlen: int) -> dict[str, np.ndarray]:
-    """The blastn batched path: the sequential per-seed loop replaced
-    by the same vectorized stages as blastp — per strand: hashed seed
-    collection over the query's word buckets, vectorized exact-word
-    verification against the volume's concatenated codepoints
-    (cat_nucl), (subject, diagonal) coverage dedupe in whole-array
-    rounds, batched reward/penalty X-drop extension, optional gapped
-    stage. Both strands run the full stage (forward first, then the
-    reverse complement with coordinates mapped back), matching the
-    sequential branch's strand-major emission order; rows are pinned
-    identical by test_batched_parity's blastn cases."""
-    k = cfg.word_size
-    cord, offs = index.cat_nucl
-    fold = index.fold_case
-    parts: list[dict[str, np.ndarray]] = []
-    strands = [(seq, 1), (revcomp(seq), -1)]
-    for q, qstrand in strands:
-        q_ext = fold_case_str(q) if fold else q
-        qo = np.frombuffer(q_ext.encode("utf-32-le"),
-                           dtype="<u4").astype(np.int32)
-        qb = np.asarray(index.query_buckets(q_ext), dtype=np.int64)
-        if cfg.lcase_masking:
-            low = np.array([c.islower() for c in q], dtype=np.int32)
-            lowc = np.concatenate(([0], np.cumsum(low)))
-            qb = np.where((lowc[k:] - lowc[:-k]) > 0, -1, qb)
-        qpos_list = np.flatnonzero(qb >= 0)
-        if not len(qpos_list):
-            continue
-        bis = qb[qpos_list]
-        bstart, bend = index.bucket_bounds_np
-        counts = bend[bis] - bstart[bis]
-        total = int(counts.sum())
-        if total == 0:
-            continue
-        sq = np.repeat(qpos_list, counts)
-        cum = np.concatenate(([0], np.cumsum(counts)))[:-1]
-        within = np.arange(total, dtype=np.int64) - np.repeat(cum, counts)
-        flat = np.repeat(bstart[bis], counts) + within
-        ssi = index.sis_np[flat]
-        ssp = index.poss_np[flat]
-        gpos = offs[ssi] + ssp
-        ok = np.ones(total, dtype=bool)
-        for j in range(k):
-            ok &= cord[gpos + j] == qo[sq + j]
-        if not ok.all():
-            sq, ssi, ssp, gpos = sq[ok], ssi[ok], ssp[ok], gpos[ok]
-        if not len(sq):
-            continue
-        seed_sc_all = np.full(len(sq), k * cfg.reward, dtype=np.int64)
-        seed_id_all = np.full(len(sq), k, dtype=np.int64)
-        core = _batched_core(q_ext, index, cfg, k, sq, ssi, ssp, gpos,
-                             seed_sc_all, seed_id_all,
-                             (None, qo, None, cord,
-                              (cfg.reward, cfg.penalty)))
-        if core is not None:
-            parts.append(_raw_cols_from_core(qid, qlen, index, core,
-                                             qstrand=qstrand))
-    if not parts:
-        return _empty_raw_cols()
-    names = [f.name for f in RAW_HITS.fields]
-    return {nm: np.concatenate([p[nm] for p in parts]) for nm in names}
-
-
 def _empty_raw_cols() -> dict[str, np.ndarray]:
     out = {}
     for f in RAW_HITS.fields:
@@ -1746,7 +1218,7 @@ def _raw_cols_from_core_block(core, index: SubjectIndex,
                               qoffs: np.ndarray, qids_np: np.ndarray,
                               qlens_np: np.ndarray, qstrand: int,
                               ) -> tuple[dict[str, np.ndarray], np.ndarray]:
-    """RAW_HITS columns from a BLOCK-mode _batched_core result: each
+    """RAW_HITS columns from a _batched_core result: each
     row's query is recovered from its global start offset, coords map
     back to that query's local (and, for the minus strand, forward)
     orientation. Also returns the per-row query index so the blastn
@@ -1804,10 +1276,8 @@ def _align_block_protein_batched(items: list[tuple[int, str]],
     mirror of the volume's cat_protein), so seed collection, exact-word
     verification, the coverage-dedupe rounds and the X-drop extension
     batches each run ONCE per (block, volume) task instead of once per
-    query — the per-query fixed overhead that made seed-sparse
-    workloads slower batched than sequential disappears. Rows are
-    identical to align_query per query, concatenated in block order
-    (pinned by test_batched_parity's block cases)."""
+    query. Rows are identical to the sequential oracle's per query,
+    concatenated in block order (pinned by test_batched_parity)."""
     k = cfg.word_size
     fold = index.fold_case
     sepw = max(k - 1, 1)
@@ -1833,8 +1303,7 @@ def _align_block_protein_batched(items: list[tuple[int, str]],
         if nw > 0:
             v = cursor + np.arange(nw, dtype=np.int64)
             if cfg.lcase_masking:
-                # original casing decides, exactly like the per-query
-                # path's lcase_src
+                # the original casing decides (q_strs may be folded)
                 low = np.array([ch.islower() for ch in seq],
                                dtype=np.int32)
                 lowc = np.concatenate(([0], np.cumsum(low)))
@@ -1901,7 +1370,7 @@ def _align_block_protein_batched(items: list[tuple[int, str]],
             _B62E[qi_arr, qi_arr], dtype=np.int64)))
         seed_sc_all = prefnp[sq + k] - prefnp[sq]
         seed_id_all = np.full(len(sq), k, dtype=np.int64)
-    core = _batched_core(None, index, cfg, k, sq, ssi, ssp, gpos,
+    core = _batched_core(index, cfg, k, sq, ssi, ssp, gpos,
                          seed_sc_all, seed_id_all,
                          (qi_arr, qo, crow, cord, None),
                          narrow=nb_threshold is not None,
@@ -1981,7 +1450,7 @@ def _align_block_nucl_batched(items: list[tuple[int, str]],
             continue
         seed_sc_all = np.full(len(sq), k * cfg.reward, dtype=np.int64)
         seed_id_all = np.full(len(sq), k, dtype=np.int64)
-        core = _batched_core(None, index, cfg, k, sq, ssi, ssp, gpos,
+        core = _batched_core(index, cfg, k, sq, ssi, ssp, gpos,
                              seed_sc_all, seed_id_all,
                              (None, qo, None, cord,
                               (cfg.reward, cfg.penalty)),
@@ -2001,90 +1470,22 @@ def _align_block_nucl_batched(items: list[tuple[int, str]],
             for nm in names}
 
 
-def _align_protein_batched(qid: int, q_ext: str, index: SubjectIndex,
-                           cfg: BlastConfig, lcase_src: str | None,
-                           qlen: int) -> list[tuple]:
-    """Tuple-form adapter over the arrays implementation (align_query
-    API compatibility; kernels use align_block's column path)."""
-    cols = _align_protein_batched_arrays(qid, q_ext, index, cfg,
-                                         lcase_src, qlen)
-    names = [f.name for f in RAW_HITS.fields]
-    seqs = [cols[nm].tolist() for nm in names]
-    return list(zip(*seqs)) if len(seqs[0]) else []
-
-
-def _extend_rows(q: str, s: str, qpos: int, spos: int, k: int,
-                 qrows: list, seed_score: int, xdrop: int):
-    """Ungapped X-drop extension, matrix scoring (blastp): ``qrows``
-    holds one precomputed {subject char: score} dict per query
-    position (row maps cover all byte chars; rare non-Latin-1 subject
-    chars fall back to the X column), and the seed score arrives
-    precomputed from the diagonal prefix sums — one dict hit per
-    extended pair is the entire scoring cost."""
-    qlen, slen = len(q), len(s)
-    score = seed_score
-    ident = k
-    best_score, best_qe, best_ident = score, qpos + k - 1, ident
-    i, j, cur, cur_ident = qpos + k, spos + k, score, ident
-    while i < qlen and j < slen:
-        ch = s[j]
-        if q[i] == ch:
-            cur_ident += 1
-        v = qrows[i].get(ch)
-        cur += v if v is not None else qrows[i]["X"]
-        if cur > best_score:
-            best_score, best_qe, best_ident = cur, i, cur_ident
-        elif best_score - cur > xdrop:
-            break
-        i += 1
-        j += 1
-    score, qe, ident = best_score, best_qe, best_ident
-    best_score, best_qs, best_ident = score, qpos, ident
-    i, j, cur, cur_ident = qpos - 1, spos - 1, score, ident
-    while i >= 0 and j >= 0:
-        ch = s[j]
-        if q[i] == ch:
-            cur_ident += 1
-        v = qrows[i].get(ch)
-        cur += v if v is not None else qrows[i]["X"]
-        if cur > best_score:
-            best_score, best_qs, best_ident = cur, i, cur_ident
-        elif best_score - cur > xdrop:
-            break
-        i -= 1
-        j -= 1
-    qs = best_qs
-    ss = spos - (qpos - qs)
-    se = ss + (qe - qs)
-    return best_score, qs, qe, ss, se, best_ident
-
-
 # tile cap on gotoh_local_batch's (B, M+1, N+1) pointer cells: 3 bytes
 # a cell keeps one tile's pointers within ~24 MB
 _GOTOH_CELL_BUDGET = 8_000_000
 
 
-def gotoh_local(a: str, b: str, protein: bool, reward: int, penalty: int,
-                gap_open: int, gap_extend: int,
-                ) -> tuple[int, int, int, int, int, int, int, int]:
-    """Affine-gap Smith-Waterman (Gotoh) with traceback over two
-    windowed strings. A gap of length L costs gap_open + L*gap_extend
-    (NCBI's convention). Returns (score, a0, a1, b0, b1, ident, gaps,
-    align_len) with 0-based inclusive local coordinates; all-zero
-    score returns (0, ...) and callers skip.
-
-    Ties break deterministically: diagonal > gap-in-a > gap-in-b at
-    equal score, and the traceback starts from the FIRST maximal cell
-    in row-major order. O(m*n) time/space — used only on HSP-sized
-    windows, never whole sequences. A batch of one through
-    gotoh_local_batch's row-wise sweep, so exact for gap_open >= 0."""
-    return gotoh_local_batch([(a, b)], protein, reward, penalty,
-                             gap_open, gap_extend)[0]
-
-
 def gotoh_local_batch(pairs, protein: bool, reward: int, penalty: int,
                       gap_open: int, gap_extend: int) -> list[tuple]:
-    """gotoh_local over MANY windows at once, one result per pair.
+    """Affine-gap Smith-Waterman (Gotoh) with traceback over MANY
+    pairs of windowed strings, one result per pair: (score, a0, a1,
+    b0, b1, ident, gaps, align_len), 0-based inclusive local
+    coordinates; an all-zero score returns (0, ...) and callers skip.
+    A gap of length L costs gap_open + L*gap_extend (NCBI's
+    convention). Ties break deterministically: diagonal > gap-in-a >
+    gap-in-b at equal score, and the traceback starts from the FIRST
+    maximal cell in row-major order. O(m*n) per pair — used only on
+    HSP-sized windows, never whole sequences.
 
     The forward DP runs ROW-WISE over a (B, N) batch of rows — all
     windows of a tile advance one row of `a` per step, so the numpy
@@ -2247,13 +1648,25 @@ def _gotoh_traceback(a, b, score, i, j, PH, PE, PF):
     return (score, i, a1, j, b1, ident, gaps, align_len)
 
 
+# initial pad around the ungapped HSP for the stage-2 DP window; the
+# window doubles (to _GAP_PAD_MAX) whenever the alignment reaches an
+# edge that has sequence beyond it, so the bound never truncates.
+_GAP_PAD = 24
+_GAP_PAD_MAX = 4096
+
+
 def gapped_extend_batch(items, cfg: BlastConfig) -> list[tuple]:
-    """Batched gapped_extend: identical to [gapped_extend(q, s, qs,
-    qe, ss, se, cfg) per item] including the geometric pad ladder —
-    every pending window at a given pad level runs in ONE row-wise
-    batched sweep (gotoh_local_batch); windows whose optimal alignment
-    touches a growable edge re-enter the next pad level, exactly like
-    the scalar loop."""
+    """BLAST's stage-2 for many ungapped HSPs: items are (q, s, qs, qe,
+    ss, se); each result is (score, qs, qe, ss, se, ident, gaps,
+    align_len) in absolute (q, s) coordinates.
+
+    Unlike BLAST+'s unbounded X-drop gapped extension, the affine-gap
+    DP is windowed (the HSP extent padded by _GAP_PAD per side) — but
+    the window GROWS: whenever the optimal local alignment touches a
+    window edge with more sequence beyond it, the pad doubles (up to
+    _GAP_PAD_MAX) and that item reruns, so no alignment is truncated by
+    the initial window. Every pending window at a given pad level runs
+    in ONE row-wise batched sweep (gotoh_local_batch)."""
     n = len(items)
     results: list = [None] * n
     pads = [_GAP_PAD] * n
@@ -2289,238 +1702,37 @@ def gapped_extend_batch(items, cfg: BlastConfig) -> list[tuple]:
     return results
 
 
-# initial pad around the ungapped HSP for the stage-2 DP window; the
-# window doubles (to _GAP_PAD_MAX) whenever the alignment reaches an
-# edge that has sequence beyond it, so the bound never truncates.
-_GAP_PAD = 24
-_GAP_PAD_MAX = 4096
-
-
-def gapped_extend(q: str, s: str, qs: int, qe: int, ss: int, se: int,
-                  cfg: BlastConfig) -> tuple[int, int, int, int, int,
-                                             int, int, int]:
-    """BLAST's stage-2: affine-gap local DP on a window around an
-    ungapped HSP (the HSP extent padded by _GAP_PAD on each side).
-
-    Unlike BLAST+'s unbounded X-drop gapped extension, the DP is
-    windowed — but the window GROWS: whenever the optimal local
-    alignment touches a window edge that could still extend (more
-    sequence exists beyond it), the pad doubles and the DP reruns, so
-    no alignment is truncated by the initial window choice. Geometric
-    growth keeps the total cost within ~4x of the final window's DP.
-    Returns absolute coordinates in (q, s)."""
-    pad = _GAP_PAD
-    while True:
-        q0, q1 = max(0, qs - pad), min(len(q), qe + 1 + pad)
-        s0, s1 = max(0, ss - pad), min(len(s), se + 1 + pad)
-        (score, a0, a1, b0, b1, ident, gaps, align_len) = gotoh_local(
-            q[q0:q1], s[s0:s1], cfg.task == "blastp", cfg.reward,
-            cfg.penalty, cfg.gap_open_eff, cfg.gap_extend_eff)
-        touches = ((a0 == 0 and q0 > 0) or (a1 == q1 - q0 - 1 and q1 < len(q))
-                   or (b0 == 0 and s0 > 0) or (b1 == s1 - s0 - 1 and s1 < len(s)))
-        if not touches or pad >= _GAP_PAD_MAX:
-            return (score, q0 + a0, q0 + a1, s0 + b0, s0 + b1,
-                    ident, gaps, align_len)
-        pad *= 2
-
-
 def align_query(qid: int, seq: str, index: SubjectIndex,
                 cfg: BlastConfig) -> list[tuple]:
-    """All HSPs of one query against one indexed partition, both strands."""
-    out = []
-    k = cfg.word_size
-    if k != index.word_size:
-        raise ValueError(
-            f"config word_size={k} does not match the subject index's "
-            f"word_size={index.word_size}; rebuild the index with the "
-            f"config's k (stage gen keys on word_size for this reason)")
-    qlen = len(seq)
-    is_protein = cfg.task == "blastp"
-    # hot paths: any hashed-index config — blastp (exact-word AND
-    # neighborhood -threshold) and blastn (both strands), one-hit AND
-    # two-hit (-window_size) seeding: the per-seed Python loop is
-    # replaced by batched 2D extension with identical outputs
-    # (test_batched_parity; threshold configs carry per-seed
-    # (score, ident) arrays through the batch; two-hit replays the
-    # pending-seed scan with a precomputed next-trigger table).
-    if index.hashed:
-        if is_protein:
-            q_ext = fold_case_str(seq) if index.fold_case else seq
-            return _align_protein_batched(
-                qid, q_ext, index, cfg,
-                seq if cfg.lcase_masking else None, qlen)
-        cols = _align_nucl_batched_arrays(qid, seq, index, cfg, qlen)
-        names = [f.name for f in RAW_HITS.fields]
-        return list(zip(*(cols[nm] for nm in names))) \
-            if len(cols["qid"]) else []
-    return _align_query_sequential(qid, seq, index, cfg)
-
-
-def _align_query_sequential(qid: int, seq: str, index: SubjectIndex,
-                            cfg: BlastConfig) -> list[tuple]:
-    """The reference implementation of the seed-and-extend loop: one
-    Python iteration per seed — the semantic oracle every batched path
-    is pinned against (test_batched_parity). Never the production
-    route (production indexes are always hashed); its dict branch runs
-    only when tests force ``hashed = False`` with a hand-built
-    _str_index for equivalence checks."""
-    out = []
-    k = cfg.word_size
-    qlen = len(seq)
-    is_protein = cfg.task == "blastp"
-    strands = [(seq, 1)]
-    if cfg.task == "blastn":
-        strands.append((revcomp(seq), -1))
-    fold = index.fold_case
-    for q, qstrand in strands:
-        q_ext = fold_case_str(q) if fold else q
-        if is_protein:
-            # encode once; seeds are exact word matches, so a seed's
-            # score is a diagonal prefix-sum difference — O(1) per seed
-            qo, qi_arr = encode_protein(q_ext)
-            q_rowdicts = [_b62_row(c) for c in q_ext]
-            pref = np.concatenate(
-                ([0], np.cumsum(_B62[qi_arr, qi_arr]))).tolist()
-            enc = index.encoded
-        lcase = cfg.lcase_masking
-        two_hit = int(cfg.window_size or 0)
-        # neighborhood seeding (-threshold) is a blastp concept: short
-        # protein words seed on near matches scoring >= T; nucleotide
-        # seeding is exact-match by definition in BLAST
-        nb_threshold = cfg.threshold if is_protein else None
-        seen: dict[tuple[int, int], int] = {}   # (si, diag) -> covered qend
-        pending: dict[tuple[int, int], int] = {}  # (si, diag) -> last seed qpos
-        emitted: set[tuple] = set()   # gapped-alignment dedupe per strand
-        hashed = index.hashed
-        if hashed and nb_threshold is None:
-            qb = index.query_buckets(q_ext)
-            ext = index.ext_seqs
-        for qpos in range(0, len(q) - k + 1):
-            word = q[qpos:qpos + k]
-            if lcase and word_is_lowercase_masked(word):
-                continue
-            if nb_threshold is not None:
-                # each candidate carries its own seed score/identity
-                # (the neighbor word generally differs from the query
-                # word); the query word's own exact hits participate
-                # only when its self-score clears T — BLAST semantics
-                cand = index.neighborhood_hits(
-                    q_ext[qpos:qpos + k], nb_threshold)
-            elif hashed:
-                bi = qb[qpos]
-                if bi < 0:
-                    continue
-                wkey = q_ext[qpos:qpos + k]
-                # exact-word re-verify: the hash routes, the compare
-                # decides (collisions can never fabricate a seed)
-                hits = [(si, spos) for si, spos in index.bucket_pairs(bi)
-                        if ext[si][spos:spos + k] == wkey]
-                cand = [(hits, None, None)]
-            else:
-                hits = index.index.get(
-                    fold_case_str(word) if fold else word)
-                cand = [(hits, None, None)]
-            for hits, nb_score, nb_ident in cand:
-                if not hits:
-                    continue
-                for si, spos in hits:
-                    diag = spos - qpos
-                    if seen.get((si, diag), -1) >= qpos:
-                        continue
-                    if two_hit:
-                        # two-hit seeding analog (-window_size): extend only
-                        # when a second seed lands on the same diagonal
-                        # within the window; single seeds stay pending
-                        prev = pending.get((si, diag))
-                        pending[(si, diag)] = qpos
-                        if prev is None or qpos - prev > two_hit:
-                            continue
-                    if is_protein:
-                        so, si_arr = enc[si]
-                        score, qs, qe, ss, se, ident = _extend_vec(
-                            qo, qi_arr, so, si_arr, qpos, spos, k,
-                            (nb_score if nb_score is not None
-                             else pref[qpos + k] - pref[qpos]), cfg.xdrop,
-                            q=q_ext, s=index.ext_seqs[si], qrows=q_rowdicts,
-                            seed_ident=nb_ident)
-                    else:
-                        score, qs, qe, ss, se, ident = _extend_rp(
-                            q_ext, index.ext_seqs[si], qpos, spos, k,
-                            cfg.reward, cfg.penalty, cfg.xdrop)
-                    seen[(si, diag)] = qe
-                    if score < cfg.min_raw_score:
-                        continue
-                    gaps_n, align_len = 0, qe - qs + 1
-                    if cfg.gapped and score >= cfg.gap_trigger_eff:
-                        # stage 2 (BLAST's model): affine-gap DP around the
-                        # ungapped HSP; several seeds of one homology can
-                        # converge to the same gapped alignment — dedupe
-                        (gscore, gqs, gqe, gss, gse, gident, gg, galn
-                         ) = gapped_extend(q_ext, index.ext_seqs[si],
-                                           qs, qe, ss, se, cfg)
-                        if gscore < cfg.min_raw_score:
-                            continue
-                        score, qs, qe, ss, se = gscore, gqs, gqe, gss, gse
-                        ident, gaps_n, align_len = gident, gg, galn
-                        key = (si, qs, qe, ss, se)
-                        if key in emitted:
-                            continue
-                        emitted.add(key)
-                    if qstrand == -1:
-                        # map coords back to the forward query orientation
-                        qs, qe = qlen - qe - 1, qlen - qs - 1
-                    out.append((qid, index.subjects[si][0], score,
-                                align_len, ident, gaps_n,
-                                qs, qe, ss, se, qstrand, 1, qlen))
-    return out
+    """All HSPs of one query against one indexed partition, both
+    strands, as RAW_HITS tuples: a block of one through align_block."""
+    return list(align_block([(qid, seq)], index, cfg)
+                .itertuples(index=False, name=None))
 
 
 def align_block(items, index: SubjectIndex, cfg: BlastConfig,
                 ) -> pd.DataFrame:
     """K2 batch loop over one query block -> RAW_HITS DataFrame.
 
-    For the hashed one-hit hot paths — blastp (exact or neighborhood
-    seeding) AND blastn (both strands) — the WHOLE block runs as one
-    sentinel-concatenated batch (block-level batching: seed
-    collection, coverage rounds and extension batches happen once per
-    task, not once per query), and the frame is assembled column-wise;
-    no per-hit Python tuple ever exists. The sequential rows fallback
-    below is unreachable in production (indexes are always hashed);
-    it serves tests that force a dict-backed index."""
-    names = [f.name for f in RAW_HITS.fields]
-    if index.hashed:
-        qitems = [(int(qid), seq) for qid, seq in items]
-        if cfg.task == "blastp":
-            cols = _align_block_protein_batched(qitems, index, cfg)
-        else:
-            cols = _align_block_nucl_batched(qitems, index, cfg)
-        return pd.DataFrame(cols, columns=names)
-    rows: list[tuple] = []
-    for qid, seq in items:
-        rows.extend(align_query(int(qid), seq, index, cfg))
-    return pd.DataFrame(rows, columns=names)
-
-
-def make_block_kernel(subjects_bc, cfg: BlastConfig, cache_key: str):
-    """Kernel factory for applyInPandas over query blocks (K1/K2).
-
-    subjects_bc: Spark broadcast of list[(sid, seq)] for ONE db
-    partition — the Spark analog of every rank having the partition's
-    volume files on local disk. Kept for small-DB callers; the scale
-    path is make_lazy_block_kernel, which never routes subject rows
-    through the driver.
-    """
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        index = get_subject_index(cache_key, subjects_bc.value,
-                                  cfg.word_size, cfg.max_kmer_hits,
-                                  soft_mask=cfg.subject_soft_mask,
-                                  complexity=cfg.complexity_filter,
-                                  protein=cfg.task == "blastp",
-                                  fold_case=cfg.mask_fold_case)
-        # K2 batch loop: all queries of the block through align_block
-        return align_block(zip(pdf["qid"].to_numpy(),
-                               pdf["seq"].to_numpy()), index, cfg)
-    return kernel
+    The kernel's only alignment path, for every config — blastp (exact
+    or neighborhood seeding) and blastn (both strands), one-hit or
+    two-hit, gapped or not: the WHOLE block runs as one
+    sentinel-concatenated batch (seed collection, coverage rounds and
+    extension batches happen once per task, not once per query), and
+    the frame is assembled column-wise; no per-hit Python tuple ever
+    exists. Rows equal the per-seed sequential oracle's
+    (tests/kernel_oracle.py) query by query, in block order."""
+    if cfg.word_size != index.word_size:
+        raise ValueError(
+            f"config word_size={cfg.word_size} does not match the subject "
+            f"index's word_size={index.word_size}; rebuild the index with "
+            f"the config's k (stage gen keys on word_size for this reason)")
+    qitems = [(int(qid), seq) for qid, seq in items]
+    if cfg.task == "blastp":
+        cols = _align_block_protein_batched(qitems, index, cfg)
+    else:
+        cols = _align_block_nucl_batched(qitems, index, cfg)
+    return pd.DataFrame(cols, columns=[f.name for f in RAW_HITS.fields])
 
 
 def read_staged_part(db_dir: str, part: str) -> list[tuple[str, str]]:

@@ -208,12 +208,3 @@ def block_bounds(queries_with_blocks: DataFrame,
                  F.max(id_col).alias("qid_end"),
                  F.count(F.lit(1)).alias("n_queries"),
                  F.sum("length").alias("total_bp")))
-
-
-def work_items(blocks: DataFrame, db_parts: DataFrame) -> DataFrame:
-    """Cross product blocks x DB partitions (mrblast.cpp:167-183).
-
-    Both sides are plan-sized (thousands of rows), so the cross join is
-    trivially broadcast; each output row becomes one kernel task.
-    """
-    return blocks.crossJoin(F.broadcast(db_parts))

@@ -8,10 +8,15 @@ thin facades, not re-implementations — Spark already ships the shuffle
 (aggregate/E4), spill (out-of-core pages), and sort (sort_keys/O1) the
 reference hand-rolls.
 
-Reference locations: aggregate mapreduce.cpp:406-570, convert 857-887,
-collate 712-741, compress 743-855, clone 630-660, collapse 682-710,
-gather 889-1045, broadcast 572-637, scrunch 2346-2374, add 374-404,
-sort_keys 2381-2433, map 1047-1934, reduce 2054-2150, scan 2207-2344.
+Reference locations: aggregate mapreduce.cpp:406-570,
+collate 712-741, clone 630-660, collapse 682-710, gather 889-1045,
+scrunch 2346-2374, add 374-404, sort_keys 2381-2433, map 1047-1934,
+scan 2207-2344. Ops whose Spark form is the bare call carry no
+facade: convert (857-887) is ``groupBy``, reduce (2054-2150) is
+``groupBy(...).applyInPandas``, compress (743-855) is ``groupBy.agg``
+(Catalyst's partial aggregate is the local combiner), broadcast
+(572-637) is ``F.broadcast``, and the row-balanced aggregate is
+``repartitionByRange``.
 """
 
 from __future__ import annotations
@@ -34,48 +39,16 @@ def aggregate_by(df: DataFrame, *keys: str, num_partitions: int | None = None) -
     return df.repartition(num_partitions, *cols) if num_partitions else df.repartition(*cols)
 
 
-def aggregate_balanced(df: DataFrame, key: str, num_partitions: int) -> DataFrame:
-    """E4 exact-parity variant: range exchange equalizing rows per task.
-
-    ``repartitionByRange`` samples the key distribution at runtime — the
-    declarative analog of the reference's hit-histogram + equal-fill
-    bucket plan (mrblast.cpp:556-575,684-692).
-    """
-    return df.repartitionByRange(num_partitions, F.col(key))
-
-
 def sort_keys(df: DataFrame, *order: Column) -> DataFrame:
     """O1 ``sort_keys`` — per-partition (per-rank) sort, no exchange
     (mapreduce.cpp:2381-2433; out-of-core merge handled by Tungsten)."""
     return df.sortWithinPartitions(*order)
 
 
-def convert_group(df: DataFrame, *keys: str):
-    """E5 ``convert`` — KV -> KMV grouping (mapreduce.cpp:857-887).
-    Returns a GroupedData; the reduce (E7) applies to it."""
-    return df.groupBy(*keys)
-
-
 def collate(df: DataFrame, *keys: str):
     """E6 ``collate`` = aggregate + convert (mapreduce.cpp:712-741).
     Spark's groupBy already implies the exchange, so this is convert."""
     return df.groupBy(*keys)
-
-
-def reduce_groups(df: DataFrame, keys: Sequence[str], fn: Callable,
-                  schema) -> DataFrame:
-    """E7 ``reduce`` — user function per (key, multivalue)
-    (mapreduce.cpp:2054-2150). Arrow-batched via applyInPandas; Spark's
-    spillable group iterators replace the multi-page block API."""
-    return df.groupBy(*keys).applyInPandas(fn, schema=schema)
-
-
-def compress_local(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """E8 ``compress`` — local combiner before the exchange
-    (mapreduce.cpp:743-855). Catalyst hash aggregation is always
-    two-phase (partial_ + final), so a plain groupBy.agg gets the
-    map-side combine automatically; this facade just documents it."""
-    return df.groupBy(*keys).agg(*aggs)
 
 
 def collapse(df: DataFrame, aggs: Sequence[Column]) -> DataFrame:
@@ -88,12 +61,6 @@ def gather(df: DataFrame, num_partitions: int) -> DataFrame:
     """E11 ``gather(p)`` — concentrate onto p tasks without a full
     shuffle (mapreduce.cpp:889-1045) = coalesce."""
     return df.coalesce(num_partitions)
-
-
-def broadcast_dim(df: DataFrame) -> DataFrame:
-    """E12 ``broadcast`` — replicate a small table to every worker
-    (mapreduce.cpp:572-637) = broadcast join hint."""
-    return F.broadcast(df)
 
 
 def scrunch(df: DataFrame, num_partitions: int, aggs: Sequence[Column]) -> DataFrame:

@@ -1,25 +1,26 @@
 """Batched-vs-sequential kernel parity.
 
-`_align_protein_batched_arrays` is the DEFAULT blastp execution path
-(hashed index, no -threshold, no -window_size); its contract is
-bit-identical rows, in identical order, to `_align_query_sequential` —
-the readable per-seed loop that serves as the semantic oracle
-(kernel/builtin.py docstrings name these tests). Randomized corpora
+`align_block` is the kernel's only alignment path: a whole query block
+runs as one sentinel-concatenated batch, and `align_query` is a block
+of one. Its contract is bit-identical rows, in identical order, to
+`_align_query_sequential` (tests/kernel_oracle.py) — the readable
+per-seed loop that serves as the semantic oracle. Randomized corpora
 with planted homologies exercise the cases where the two
 implementations could plausibly diverge: multi-seed diagonals
 (coverage dedupe), seeds below min_raw_score (coverage must still
 update), gapped stage-2 convergence dedupe, lowercase query masking,
-and case folding.
+and case folding — per query through `align_query`, and per block
+through `align_block`.
 """
 
 import numpy as np
 import pytest
 
 from mr_mpi_blast_spark.config import BlastConfig
-from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex,
-                                               _align_query_sequential,
-                                               _extend_batch, _extend_vec,
+from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _extend_batch,
                                                align_query, encode_protein)
+
+from kernel_oracle import _align_query_sequential, _extend_vec, encoded
 
 RES20 = "ARNDCQEGHILKMFPSTWYV"
 
@@ -59,7 +60,6 @@ def _corpus(seed: int, n_subjects: int = 8, sub_len: int = 120,
 def _run_both(subjects, queries, cfg, fold_case=False, lcase=None):
     idx = SubjectIndex(subjects, cfg.word_size, 4096, protein=True,
                        fold_case=fold_case)
-    assert idx.hashed, "parity target is the hashed fast path"
     batched, sequential = [], []
     for qid, q in queries:
         if lcase is not None:
@@ -148,8 +148,9 @@ def test_batched_extension_parity(seed):
                                        sq + k, gpos + k, +1, xdrop)
     gain_l, ext_l, m_l = _extend_batch(qi_arr, qo, crow, cord,
                                        sq - 1, gpos - 1, -1, xdrop)
+    enc = encoded(idx)
     for t, (qpos, si, spos) in enumerate(seeds):
-        so, si_arr2 = idx.encoded[si]
+        so, si_arr2 = enc[si]
         score, qs, qe, ss, se, ident = _extend_vec(
             qo, qi_arr, so, si_arr2, qpos, spos, k, 0, xdrop)
         assert int(gain_r[t] + gain_l[t]) == score, seeds[t]
@@ -255,7 +256,6 @@ def _corpus_dna(seed: int, n_subjects: int = 8, sub_len: int = 160,
 def _run_both_dna(subjects, queries, cfg, fold_case=False, lcase=None):
     idx = SubjectIndex(subjects, cfg.word_size, 4096, protein=False,
                        fold_case=fold_case)
-    assert idx.hashed
     batched, sequential = [], []
     for qid, q in queries:
         if lcase is not None:
@@ -327,7 +327,6 @@ def _block_vs_sequential(subjects, queries, cfg, protein,
                          fold_case=False, lcase=None):
     idx = SubjectIndex(subjects, cfg.word_size, 4096, protein=protein,
                        fold_case=fold_case)
-    assert idx.hashed, "block batching is the hashed-path contract"
     if lcase is not None:
         queries = [(qid, lcase(q)) for qid, q in queries]
     df = align_block(queries, idx, cfg)
@@ -464,3 +463,19 @@ def test_block_parity_two_hit_threshold():
     got, exp = _block_vs_sequential(subjects, queries, cfg, protein=True)
     assert got == exp
     assert got
+
+
+def test_align_block_rejects_word_size_mismatch():
+    """An index built with one word size cannot serve a config with
+    another: its buckets hold k-mers of the wrong length, so seeding
+    would silently find nothing. align_block (and align_query, a block
+    of one) raise instead of returning an empty frame."""
+    subjects, queries = _corpus(83)
+    idx = SubjectIndex(subjects, 4, 4096, protein=True)
+    cfg = BlastConfig(task="blastp", word_size=3)
+    with pytest.raises(ValueError, match="word_size=3 does not match"):
+        align_block(queries, idx, cfg)
+    with pytest.raises(ValueError, match="word_size=3 does not match"):
+        align_query(0, queries[0][1], idx, cfg)
+    assert len(align_block(queries, idx,
+                           BlastConfig(task="blastp", word_size=4)))

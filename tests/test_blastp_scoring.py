@@ -12,9 +12,10 @@ from pyspark.sql import functions as F
 from mr_mpi_blast_spark.config import BlastConfig
 from mr_mpi_blast_spark.kernel import ncbi
 from mr_mpi_blast_spark.kernel.builtin import (KA_BLOSUM62, KA_NUCL_1_2,
-                                               blosum62_score,
                                                karlin_altschul_bitscore,
-                                               pair_scorer, scoring_params)
+                                               scoring_params)
+
+from kernel_oracle import blosum62_score, pair_scorer
 
 # spot values straight from the published BLOSUM62 table
 #   (Henikoff & Henikoff 1992; NCBI data/BLOSUM62)
@@ -113,10 +114,8 @@ def test_vectorized_extension_equals_sequential():
     break) — including across chunk boundaries."""
     import random
 
-    from mr_mpi_blast_spark.kernel.builtin import (_extend_dir,
-                                                   _extend_rows,
-                                                   _extend_vec, _b62_row,
-                                                   encode_protein)
+    from kernel_oracle import _b62_row, _extend_dir, _extend_rows, _extend_vec
+    from mr_mpi_blast_spark.kernel.builtin import encode_protein
     rng = random.Random(7)
     alpha = "ARNDCQEGHILKMFPSTWYVBZX abcdefg!?"
     for _ in range(800):

@@ -1,5 +1,6 @@
 """Gapped (affine) extension: exact-arithmetic checks of the Gotoh DP
-and the stage-2 hookup in align_query. No Spark session needed."""
+and the stage-2 hookup in align_query (a block of one through
+align_block). No Spark session needed."""
 import dataclasses
 
 import numpy as np
@@ -8,9 +9,10 @@ import pytest
 from mr_mpi_blast_spark.config import BlastConfig
 from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _B62, _B62_IDX,
                                                _gotoh_traceback, align_query,
-                                               gapped_extend,
                                                gapped_extend_batch,
-                                               gotoh_local, gotoh_local_batch)
+                                               gotoh_local_batch)
+
+from kernel_oracle import gapped_extend, gotoh_local
 
 # 20 distinct residues inside the BLOSUM62 alphabet
 RES = "ARNDCQEGHILKMFPSTWYV"

@@ -13,9 +13,10 @@ import pandas as pd
 import pytest
 
 from mr_mpi_blast_spark.config import BlastConfig
-from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, align_query,
-                                               word_is_lowercase_masked,
-                                               word_low_complexity)
+from mr_mpi_blast_spark.kernel.builtin import SubjectIndex, align_query
+
+from kernel_oracle import (word_index, word_is_lowercase_masked,
+                           word_low_complexity)
 
 CFG = BlastConfig(task="blastn", word_size=8, xdrop=20, min_score=8)
 
@@ -156,7 +157,8 @@ def test_masking_off_is_byte_identical():
     assert not idx.fold_case
     assert idx.ext_seqs[0] == subj[0][1]
     # lowercase and uppercase words are distinct seeds
-    assert UNIQ[:8] in idx.index and UNIQ[:8].lower() in idx.index
+    words = word_index(idx)
+    assert UNIQ[:8] in words and UNIQ[:8].lower() in words
 
 
 @pytest.mark.parametrize("seed", [3, 4])
@@ -182,7 +184,6 @@ def test_masked_hashed_index_equals_reference_build(seed, protein):
     for soft, comp in [(True, False), (False, True), (True, True)]:
         idx = SubjectIndex(subs, k, 64, soft_mask=soft, complexity=comp,
                            protein=protein)
-        assert idx.hashed
         ref: dict = {}
         for si, (_, seq) in enumerate(subs):
             for pos in range(len(seq) - k + 1):
@@ -193,7 +194,7 @@ def test_masked_hashed_index_equals_reference_build(seed, protein):
                     continue
                 ref.setdefault(w, []).append((si, pos))
         ref = {w: v for w, v in ref.items() if len(v) <= 64}
-        assert idx.index == ref
+        assert word_index(idx) == ref
 
 
 def test_fold_case_length_preserving_multichar_upper():
@@ -208,13 +209,14 @@ def test_fold_case_length_preserving_multichar_upper():
     assert len(fold_case_str("ARNDßCQEG")) == 9
     idx = SubjectIndex([("s0", "ARNDßCQEG"), ("s1", "arndcqeg")], 3, 64,
                        soft_mask=True, protein=True, fold_case=True)
-    assert idx.hashed
     # s1 is fully lowercase -> every word soft-masked out; s0's
     # eszett is ITSELF lowercase, so its windows are soft-masked too
     # (the scalar predicate agrees: word_is_lowercase_masked('NDß'))
-    assert all(si == 0 for hits in idx.index.values() for si, _ in hits)
-    assert set(idx.index) == {"ARN", "RND", "CQE", "QEG"}
+    words = word_index(idx)
+    assert all(si == 0 for hits in words.values() for si, _ in hits)
+    assert set(words) == {"ARN", "RND", "CQE", "QEG"}
     # without soft-masking the eszett windows survive, folded in place
     idx2 = SubjectIndex([("s0", "ARNDßCQEG")], 3, 64, complexity=True,
                         protein=True, fold_case=True)
-    assert "NDß" in idx2.index and "ßCQ" in idx2.index
+    words2 = word_index(idx2)
+    assert "NDß" in words2 and "ßCQ" in words2

@@ -17,6 +17,8 @@ from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _B62, _B62_IDX,
                                                align_query,
                                                neighborhood_words)
 
+from kernel_oracle import neighborhood_hits
+
 RES20 = "ARNDCQEGHILKMFPSTWYV"
 
 
@@ -124,20 +126,18 @@ def test_neighborhood_hits_dict_and_hashed_forms_agree():
     """Neighborhood candidates from the masked index (complexity
     filter on — low-complexity words dropped at build time) must be a
     subset of the unmasked index's, with identical entries for every
-    word both forms keep. Both forms are hashed since the masked build
-    went vectorized."""
+    word both forms keep."""
     rng = np.random.default_rng(7)
     s = "".join(rng.choice(list(RES20), 200))
-    hashed = SubjectIndex([("s1", s)], 3, 64, protein=True)
-    dicted = SubjectIndex([("s1", s)], 3, 64, protein=True,
-                          complexity=True)   # masked build
-    assert hashed.hashed and dicted.hashed
+    plain = SubjectIndex([("s1", s)], 3, 64, protein=True)
+    masked = SubjectIndex([("s1", s)], 3, 64, protein=True,
+                          complexity=True)
     for word in ("WCH", "AKE", "LIV"):
         h1 = sorted((tuple(sorted(h)), sc, idn)
-                    for h, sc, idn in hashed.neighborhood_hits(word, 11))
-        # dict form drops low-complexity words from the index; compare
-        # only words both forms index
+                    for h, sc, idn in neighborhood_hits(plain, word, 11))
+        # the masked build drops low-complexity words from the index;
+        # compare only words both forms index
         h2 = sorted((tuple(sorted(h)), sc, idn)
-                    for h, sc, idn in dicted.neighborhood_hits(word, 11))
+                    for h, sc, idn in neighborhood_hits(masked, word, 11))
         for entry in h2:
             assert entry in h1

@@ -17,6 +17,8 @@ from mr_mpi_blast_spark.kernel.builtin import (SubjectIndex, _window_hashes,
                                                karlin_altschul_evalue,
                                                revcomp)
 
+from kernel_oracle import _align_query_sequential, word_index
+
 _DNA = st.text(alphabet="ACGT", min_size=0, max_size=80)
 _PROSE = st.text(
     alphabet=st.characters(min_codepoint=32, max_codepoint=0x2FF),
@@ -63,7 +65,7 @@ def test_hashed_index_equals_dict_index(seqs, k, cap):
     shorter-than-k sequences."""
     subjects = [(f"s{i}", s) for i, s in enumerate(seqs)]
     fast = SubjectIndex(subjects, k, cap)
-    assert fast.index == _reference_index(subjects, k, cap)
+    assert word_index(fast) == _reference_index(subjects, k, cap)
 
 
 @given(_DNA, st.lists(_DNA, min_size=1, max_size=4))
@@ -71,14 +73,11 @@ def test_hashed_index_equals_dict_index(seqs, k, cap):
 def test_align_results_identical_across_index_forms(q, seqs):
     cfg = BlastConfig(task="blastn", word_size=4, min_score=4)
     subjects = [(f"s{i}", s) for i, s in enumerate(seqs)]
-    fast = SubjectIndex(subjects, 4, 128)
-    # force the sequential dict route: hashed off + reference mapping
-    # (the per-word dict build is no longer a production path, but the
-    # sequential oracle still knows how to walk one)
-    slow = SubjectIndex(subjects, 4, 128)
-    slow.hashed = False
-    slow._str_index = _reference_index(subjects, 4, 128)
-    assert align_query(1, q, fast, cfg) == align_query(1, q, slow, cfg)
+    idx = SubjectIndex(subjects, 4, 128)
+    # the production path on the hashed index vs the sequential oracle
+    # walking the per-window reference dict instead of the hash buckets
+    assert align_query(1, q, idx, cfg) == _align_query_sequential(
+        1, q, idx, cfg, str_index=_reference_index(subjects, 4, 128))
 
 
 @given(st.integers(1, 500), st.integers(2, 499))
@@ -100,7 +99,7 @@ def test_gotoh_invariants_and_symmetry(a, b):
     """Affine SW invariants for any inputs: bounded counts, and the
     optimal SCORE is symmetric under operand swap (BLOSUM62 is a
     symmetric matrix; tie-broken paths may differ, the score cannot)."""
-    from mr_mpi_blast_spark.kernel.builtin import gotoh_local
+    from kernel_oracle import gotoh_local
     s1 = gotoh_local(a, b, True, 1, -2, 11, 1)
     s2 = gotoh_local(b, a, True, 1, -2, 11, 1)
     score, a0, a1, b0, b1, ident, gaps, aln = s1
@@ -183,13 +182,11 @@ def test_blastn_batched_equals_sequential(subject_seqs, query_seqs, k,
     identical order, to the sequential per-seed oracle for ANY DNA
     corpus — both strands, mixed case, arbitrary word size, gapped or
     not."""
-    from mr_mpi_blast_spark.kernel.builtin import _align_query_sequential
     subjects = [(f"s{i}", s) for i, s in enumerate(subject_seqs)]
     cfg = BlastConfig(task="blastn", word_size=k, min_score=k,
                       gapped=gapped,
                       ka_gapped=(1.3, 0.5, 1.0) if gapped else None)
     idx = SubjectIndex(subjects, k, 4096, protein=False)
-    assert idx.hashed
     for qid, q in enumerate(query_seqs):
         got = [tuple(int(v) if not isinstance(v, str) else v for v in r)
                for r in align_query(qid, q, idx, cfg)]
@@ -211,8 +208,9 @@ def test_vectorized_mask_predicates_match_scalar(s, k):
     surrogates, unencodable in utf-32), including multi-char-uppercase
     codepoints (eszett, ŉ, ligatures) and astral-plane chars that take
     the exact fallback path. No excluded codepoint class."""
+    from kernel_oracle import word_low_complexity
     from mr_mpi_blast_spark.kernel.builtin import (
-        _islower_np, _low_complexity_windows_np, word_low_complexity)
+        _islower_np, _low_complexity_windows_np)
     codes = np.frombuffer(s.encode("utf-32-le"),
                           dtype="<u4").astype(np.int64)
     low = _islower_np(codes)
@@ -243,14 +241,12 @@ def test_blastp_block_equals_sequential(subject_seqs, query_seqs, k,
     per-seed oracle concatenated per query — for ANY protein corpus,
     mixed case with fold_case + lcase_masking on, gapped or not,
     one-hit or two-hit seeding."""
-    from mr_mpi_blast_spark.kernel.builtin import (_align_query_sequential,
-                                                   align_block)
+    from mr_mpi_blast_spark.kernel.builtin import align_block
     subjects = [(f"s{i}", s) for i, s in enumerate(subject_seqs)]
     cfg = BlastConfig(task="blastp", word_size=k, min_score=k,
                       gapped=gapped, lcase_masking=True,
                       window_size=20 if two_hit else None)
     idx = SubjectIndex(subjects, k, 4096, protein=True, fold_case=True)
-    assert idx.hashed
     queries = list(enumerate(query_seqs))
     df = align_block(queries, idx, cfg)
     got = [tuple(v if isinstance(v, str) else int(v) for v in r)
