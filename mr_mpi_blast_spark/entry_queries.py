@@ -2797,8 +2797,8 @@ def q_blast_tail(spark, sf_dir):
 # (nonzero gaps column, gap-aware mismatches, (11,1) e-values), the
 # evidence the ungapped flagship cannot provide.
 _BLAST_RAW_GAPPED_PATH = "/tmp/spark_graft_blast_raw_gapped_current.parquet"
-from mr_mpi_blast_spark.kernel.builtin import KA_BLOSUM62_G111 as _KAG  # noqa: E402
-_GLAM, _GK, _GH = _KAG
+from mr_mpi_blast_spark.kernel.builtin import KA_GAPPED_BLOSUM62  # noqa: E402
+_GLAM, _GK, _GH = KA_GAPPED_BLOSUM62[(11, 1)]
 
 
 def _blast_gapped_cfg():

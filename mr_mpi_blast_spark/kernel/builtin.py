@@ -73,7 +73,7 @@ KERNEL_SPEC = "k6"
 # cache path ALONGSIDE KERNEL_SPEC, so a storage-layout change (e.g.
 # r8's list->numpy window arrays) invalidates published index pickles
 # WITHOUT pretending RAW_HITS values changed (KERNEL_SPEC's contract).
-INDEX_FORMAT_SPEC = "i2"
+INDEX_FORMAT_SPEC = "i3"
 
 # ungapped Karlin-Altschul (lambda, K, H) per scoring system
 KA_NUCL_1_2 = (1.33, 0.621, 1.12)         # blastn +1/-2
@@ -120,8 +120,6 @@ KA_GAPPED_NUCL: dict[tuple[int, int, int, int],
                      tuple[float, float, float]] = {
     (2, -3, 5, 2): (0.625, 0.41, 0.78),  # NCBI blastn task defaults
 }
-# kept as a named constant for round-3 callers
-KA_BLOSUM62_G111 = KA_GAPPED_BLOSUM62[(11, 1)]
 
 # BLOSUM62 (Henikoff & Henikoff 1992), the standard 24-letter table as
 # shipped with NCBI BLAST (data/BLOSUM62). Row/col order below:
@@ -159,7 +157,7 @@ _B62_X = _B62_ALPHA.index("X")
 
 def _b62_index_table() -> np.ndarray:
     """256-entry char-code -> BLOSUM62 row index (unknown -> X)."""
-    tbl = np.full(256, _B62_X, dtype=np.int8)
+    tbl = np.full(256, _B62_X, dtype=np.intp)
     for i, ch in enumerate(_B62_ALPHA):
         tbl[ord(ch)] = i
         tbl[ord(ch.lower())] = i
@@ -182,6 +180,14 @@ _B62_SENT = len(_B62_ALPHA)                   # 24
 _B62_NEG = -(4 * 10 ** 6)
 _B62E = np.full((_B62_SENT + 1, _B62_SENT + 1), _B62_NEG, dtype=np.int32)
 _B62E[:_B62_SENT, :_B62_SENT] = _B62
+
+
+def _b62_rows(ords: np.ndarray) -> np.ndarray:
+    """BLOSUM62 row index of each codepoint: -1 (a separator, see
+    _ext_ords) -> _B62_SENT, codepoints outside Latin-1 -> X."""
+    rows = _B62_IDX[np.where((ords >= 0) & (ords < 256), ords, ord("X"))]
+    rows[ords < 0] = _B62_SENT
+    return rows
 
 
 def scoring_params(cfg: BlastConfig) -> tuple[float, float, float]:
@@ -261,11 +267,11 @@ def revcomp(seq: str) -> str:
     return seq.translate(_COMPLEMENT)[::-1]
 
 
-# the subject-side seed-word predicates (lowercase = soft-masked, low
-# complexity = -dust/-seg analog), evaluated over a whole subject's
-# codepoints at once (the masked index build): tables cover the
-# Latin-1 range the biological alphabets live in; rarer codepoints
-# fall back to the exact per-char predicate
+# the seed-word predicates (lowercase = soft-masked, low complexity =
+# -dust/-seg analog), evaluated over a whole concatenation at once:
+# tables cover the Latin-1 range the biological alphabets live in;
+# rarer codepoints fall back to the exact per-char predicate, and
+# separators (_HASH_SEP) are neither lowercase nor folded
 _LOWER_TBL = np.array([chr(i).islower() for i in range(256)], dtype=bool)
 _UPPER_TBL = np.array(
     [ord(chr(i).upper()) if len(chr(i).upper()) == 1
@@ -277,7 +283,7 @@ def _islower_np(codes: np.ndarray) -> np.ndarray:
     out = np.zeros(len(codes), dtype=bool)
     small = codes < 256
     out[small] = _LOWER_TBL[codes[small]]
-    for i in np.flatnonzero(~small).tolist():
+    for i in np.flatnonzero(~small & (codes < _HASH_SEP)).tolist():
         out[i] = chr(int(codes[i])).islower()
     return out
 
@@ -286,7 +292,7 @@ def _upper_np(codes: np.ndarray) -> np.ndarray:
     out = codes.copy()
     small = codes < 256
     out[small] = _UPPER_TBL[codes[small]]
-    for i in np.flatnonzero(~small).tolist():
+    for i in np.flatnonzero(~small & (codes < _HASH_SEP)).tolist():
         u = chr(int(codes[i])).upper()
         if len(u) == 1:
             out[i] = ord(u)
@@ -381,11 +387,7 @@ def neighborhood_words(word: str, threshold: int) -> list[tuple[str, int]]:
     default T=11, k=3), not 20^k. Results are memoized per (word, T)
     at the call sites (query vocabularies repeat heavily)."""
     k = len(word)
-    qrows = []
-    for c in word:
-        o = ord(c)
-        ri = _B62_IDX[o] if o < 256 else _B62_X
-        qrows.append(_B62[ri][_STD_RES_IDX])
+    qrows = _B62[_b62_rows(np.array([ord(c) for c in word]))][:, _STD_RES_IDX]
     suffix_max = [0] * (k + 1)
     for i in range(k - 1, -1, -1):
         suffix_max[i] = suffix_max[i + 1] + int(qrows[i].max())
@@ -405,33 +407,42 @@ def neighborhood_words(word: str, threshold: int) -> list[tuple[str, int]]:
     return out
 
 
-def _concat_windows(seqs: list[str], k: int):
-    """The window layout of a volume: (codepoints of every sequence
-    concatenated with k-1 separator codes after each, subject index,
-    start position and concatenation offset of every length-k window
-    that lies inside one sequence). A window spanning two sequences
-    absorbs a separator, so its hash can never equal a real word's."""
-    sep = np.full(k - 1 if k > 1 else 0, _HASH_SEP, dtype=np.uint32)
-    chunks, offs, lens = [], [], []
-    cursor = 0
-    for s in seqs:
-        codes = np.frombuffer(s.encode("utf-32-le"), dtype="<u4")
-        offs.append(cursor)
-        lens.append(len(codes))
-        chunks.append(codes)
-        chunks.append(sep)
-        cursor += len(codes) + len(sep)
-    cat = (np.concatenate(chunks) if chunks
-           else np.empty(0, dtype=np.uint32))
-    si_arr = np.repeat(np.arange(len(lens), dtype=np.int32),
-                       [max(L - k + 1, 0) for L in lens])
-    pos_parts = [np.arange(max(L - k + 1, 0), dtype=np.int32)
-                 for L in lens]
-    pos_arr = (np.concatenate(pos_parts) if pos_parts
-               else np.empty(0, dtype=np.int32))
-    gidx = (pos_arr + np.array(offs, dtype=np.int64)[si_arr]
-            if len(si_arr) else np.empty(0, dtype=np.int64))
-    return cat, si_arr, pos_arr, gidx
+def _concat(seqs: list[str], k: int):
+    """The one layout of every kernel array, volume and query block
+    alike: (codepoints of the sequences concatenated with max(k-1, 1)
+    _HASH_SEP separators after each, start offset of each sequence,
+    then sequence index, in-sequence position and concatenation offset
+    of every length-k window that lies inside one sequence). A window
+    spanning two sequences absorbs a separator, so its hash can never
+    equal a real word's; an extension reaching one stops there (see
+    _ext_ords)."""
+    sepw = max(k - 1, 1)
+    sep = np.full(sepw, _HASH_SEP, dtype=np.uint32)
+    cat = np.concatenate([np.empty(0, dtype=np.uint32)] + [
+        c for s in seqs
+        for c in (np.frombuffer(s.encode("utf-32-le"), dtype="<u4"), sep)])
+    lens = np.array([len(s) for s in seqs], dtype=np.int64)
+    offs = np.cumsum(lens + sepw) - (lens + sepw)
+    nw = np.maximum(lens - k + 1, 0)
+    si = np.repeat(np.arange(len(seqs), dtype=np.int64), nw)
+    pos = (np.arange(len(si), dtype=np.int64)
+           - np.repeat(np.cumsum(nw) - nw, nw))
+    return cat, offs, si, pos, offs[si] + pos
+
+
+def _ext_ords(cat: np.ndarray) -> np.ndarray:
+    """The extension's view of a _concat array: int32 codepoints with
+    -1 at separators (never equal to a real character, and scored as
+    a stop by both alphabets' extension)."""
+    return np.where(cat == _HASH_SEP, -1, cat).astype(np.int32)
+
+
+def _lower_windows(cat: np.ndarray, win: np.ndarray, k: int) -> np.ndarray:
+    """Whether each length-k window of ``cat`` starting at ``win``
+    holds a lowercase character: soft-masked subject words and
+    -lcase_masking query words."""
+    c = np.concatenate(([0], np.cumsum(_islower_np(cat))))
+    return (c[win + k] - c[win]) > 0
 
 
 def _distinct_words(cat: np.ndarray, gpos: np.ndarray, k: int) -> list[str]:
@@ -457,7 +468,7 @@ def volume_words(seqs: list[str], k: int) -> list[str]:
     window hashed in k vectorized passes, then sorted once so equal
     words sit together. SubjectIndex.seed_words reads the same list
     off an index build without sorting again."""
-    cat, _, _, gidx = _concat_windows(seqs, k)
+    cat, _, _, _, gidx = _concat(seqs, k)
     h = _window_hashes(cat, k)[gidx]
     return _distinct_words(cat, gidx[np.argsort(h)], k)
 
@@ -476,14 +487,16 @@ class SubjectIndex:
     fold_case_str) so a masked region still *matches* during
     extension. Off by default so unmasked runs stay byte-identical.
 
-    The build: all subjects are concatenated (with separators) into
-    one codepoint array, every window hashed in k vectorized passes,
-    buckets grouped by a single argsort; subject-side masking
-    (soft_mask/complexity) is a vectorized window-drop filter inside
-    the same build. Hash collisions cannot corrupt results: seed
-    consumers re-verify the exact word before extending. The
-    concatenated encodings the batched extension reads (cat_protein,
-    cat_nucl) are built lazily on first touch.
+    The build: all subjects are laid out by _concat, every window
+    hashed in k vectorized passes, buckets grouped by a single
+    argsort; subject-side masking (soft_mask/complexity) is a
+    vectorized window-drop filter inside the same build. Hash
+    collisions cannot corrupt results: seed consumers re-verify the
+    exact word before extending. Plain arrays, all built here: the
+    extension ords of that layout (``ords``, -1 at separators), each
+    subject's start in it (``offs``), its BLOSUM row indices (``rows``,
+    protein only), the subject ids (``sids``) and the hash buckets
+    (``_ukeys``, ``_bstart``/``_bend`` into ``_sis``/``_poss``).
     """
 
     def __init__(self, subjects: list[tuple[str, str]], word_size: int,
@@ -491,55 +504,36 @@ class SubjectIndex:
                  complexity: bool = False, protein: bool = False,
                  fold_case: bool = False):
         self.subjects = subjects
-        self.word_size = word_size
+        self.word_size = k = word_size
         self.fold_case = fold_case
         self.max_kmer_hits = max_kmer_hits
         self.ext_seqs = ([fold_case_str(seq) for _, seq in subjects] if fold_case
                          else [seq for _, seq in subjects])
-        self._build_hashed(soft_mask=soft_mask, complexity=complexity,
-                           protein=protein)
-
-    def _build_hashed(self, soft_mask: bool = False,
-                      complexity: bool = False,
-                      protein: bool = False) -> None:
-        k = self.word_size
-        cat, si_arr, pos_arr, gidx = _concat_windows(self.ext_seqs, k)
-        h = _window_hashes(cat, k)
-        if (soft_mask or complexity) and len(si_arr):
+        self.sids = np.array([sid for sid, _ in subjects], dtype=object)
+        cat, self.offs, si_arr, pos_arr, gidx = _concat(self.ext_seqs, k)
+        self.ords = _ext_ords(cat)
+        self.rows = _b62_rows(self.ords) if protein else None
+        self._nb_cache: dict = {}
+        if (soft_mask or complexity) and len(gidx):
             # subject-side masking as a window drop filter (F3): the
-            # predicates run on the ORIGINAL subject strings (case is
-            # annotation; self.ext_seqs may be case-folded), vectorized
-            # per subject in the same (si asc, pos asc) enumeration
-            # order as the window arrays above
-            parts = []
-            for _, s in self.subjects:
-                nw = max(len(s) - k + 1, 0)
-                if nw == 0:
-                    continue
-                codes = np.frombuffer(s.encode("utf-32-le"),
-                                      dtype="<u4").astype(np.int64)
-                m = np.zeros(nw, dtype=bool)
-                if soft_mask:
-                    low = _islower_np(codes).astype(np.int64)
-                    c = np.concatenate(([0], np.cumsum(low)))
-                    m |= (c[k:] - c[:-k]) > 0
-                if complexity:
-                    m |= _low_complexity_windows_np(codes, k, protein)
-                parts.append(m)
-            keep_w = ~np.concatenate(parts)
-            si_arr, pos_arr = si_arr[keep_w], pos_arr[keep_w]
-            gidx = gidx[keep_w]
-        # empty gidx -> empty hash set (NOT the raw h: when every
-        # subject is shorter than k, h still holds separator-spanning
-        # windows that must never become buckets)
-        hv = h[gidx.astype(np.int64)]
+            # predicates see the ORIGINAL casing (case is annotation;
+            # self.ext_seqs may be case-folded)
+            raw = (_concat([s for _, s in subjects], k)[0] if fold_case
+                   else cat)
+            drop = np.zeros(len(gidx), dtype=bool)
+            if soft_mask:
+                drop |= _lower_windows(raw, gidx, k)
+            if complexity:
+                drop |= _low_complexity_windows_np(raw, k, protein)[gidx]
+            si_arr, pos_arr, gidx = si_arr[~drop], pos_arr[~drop], gidx[~drop]
+        hv = _window_hashes(cat, k)[gidx]
         # group by hash: stable sort keeps (si asc, pos asc) bucket
         # order — identical iteration order to the dict build
         order = np.argsort(hv, kind="stable")
-        hs, sis, poss = hv[order], si_arr[order], pos_arr[order]
+        hs = hv[order]
         bounds = np.flatnonzero(hs[1:] != hs[:-1]) + 1
-        starts = np.concatenate(([0], bounds)) if len(hs) else np.empty(0, int)
-        ends = np.concatenate((bounds, [len(hs)])) if len(hs) else np.empty(0, int)
+        starts = np.concatenate(([0], bounds)) if len(hs) else bounds
+        ends = np.concatenate((bounds, [len(hs)])) if len(hs) else bounds
         keep = (ends - starts) <= self.max_kmer_hits
         # sorted-key + bucket-bounds arrays: query words resolve via ONE
         # vectorized searchsorted per query (no dict, no per-bucket
@@ -549,15 +543,12 @@ class SubjectIndex:
         # index unpickle/evict cycle churn ~600 MB of small objects per
         # worker — 32 concurrent workers degraded cold-start unpickles
         # from <1 s to 80+ s (kernel-mode CPU storm) at the synthesized
-        # sf1.0. Flat int64 buffers pickle/unpickle as raw bytes and
-        # double as the batched path's views with zero copies.
-        self._ukeys = hs[starts[keep]] if len(hs) else hs
-        self._bstart = (starts[keep].astype(np.int64) if len(hs)
-                        else np.empty(0, dtype=np.int64))
-        self._bend = (ends[keep].astype(np.int64) if len(hs)
-                      else np.empty(0, dtype=np.int64))
-        self._sis = sis.astype(np.int64)
-        self._poss = poss.astype(np.int64)
+        # sf1.0. Flat int64 buffers pickle/unpickle as raw bytes.
+        self._ukeys = hs[starts[keep]]
+        self._bstart = starts[keep]
+        self._bend = ends[keep]
+        self._sis = si_arr[order]
+        self._poss = pos_arr[order]
 
     def seed_words(self) -> list[str]:
         """The distinct words of this index's windows (case as in
@@ -566,9 +557,7 @@ class SubjectIndex:
         only for an unmasked build (soft_mask/complexity drop
         windows); over-frequent words keep their windows even when
         max_kmer_hits drops their bucket."""
-        cp = getattr(self, "_cat_protein", None)
-        cat, offs = (cp[0], cp[2]) if cp is not None else self.cat_nucl
-        return _distinct_words(cat, offs[self.sis_np] + self.poss_np,
+        return _distinct_words(self.ords, self.offs[self._sis] + self._poss,
                                self.word_size)
 
     def buckets_for_hashes(self, qh: np.ndarray) -> np.ndarray:
@@ -583,36 +572,6 @@ class SubjectIndex:
         found = self._ukeys[iic] == qh
         return np.where(found, iic, -1)
 
-    @property
-    def bucket_bounds_np(self) -> tuple[np.ndarray, np.ndarray]:
-        """(bucket start, bucket end) arrays for the batched seeding
-        path (the hashed form's _bstart/_bend as int64 views)."""
-        if getattr(self, "_bounds_np", None) is None:
-            self._bounds_np = (np.asarray(self._bstart, dtype=np.int64),
-                               np.asarray(self._bend, dtype=np.int64))
-        return self._bounds_np
-
-    @property
-    def sis_np(self) -> np.ndarray:
-        if getattr(self, "_sis_np", None) is None:
-            self._sis_np = np.asarray(self._sis, dtype=np.int64)
-        return self._sis_np
-
-    @property
-    def poss_np(self) -> np.ndarray:
-        if getattr(self, "_poss_np", None) is None:
-            self._poss_np = np.asarray(self._poss, dtype=np.int64)
-        return self._poss_np
-
-    @property
-    def sids_np(self) -> np.ndarray:
-        """Subject display ids as an object array (vectorized gather
-        for the batched emission path)."""
-        if getattr(self, "_sids_np", None) is None:
-            self._sids_np = np.array([sid for sid, _ in self.subjects],
-                                     dtype=object)
-        return self._sids_np
-
     def neighborhood_arrays(self, word: str, threshold: int,
                             ) -> tuple[np.ndarray, np.ndarray,
                                        np.ndarray, np.ndarray] | None:
@@ -623,116 +582,30 @@ class SubjectIndex:
         order — or None when there are none. Memoized per (word, T) on
         the index instance (it is cached per worker across query
         blocks, so the neighborhood of a repeated word is computed once
-        per volume, the word-table reuse real BLAST gets)."""
-        cache = getattr(self, "_nb_np_cache", None)
-        if cache is None:
-            cache = self._nb_np_cache = {}
+        per volume, the word-table reuse real BLAST gets). The
+        neighbors run through _exact_seeds stacked end to end, one
+        word per k positions."""
         key = (word, threshold)
-        got = cache.get(key, False)
+        got = self._nb_cache.get(key, False)
         if got is not False:
             return got
-        # cold path, fully vectorized: hash EVERY neighbor word at
-        # once, resolve all buckets in one searchsorted, expand, and
-        # exact-verify against the volume's concatenated ords in k
-        # passes. Expansion is neighbor-major and the verify filter
-        # preserves order, so rows come in neighbor enumeration order,
-        # then bucket (si, spos) order.
         nbrs = neighborhood_words(word, threshold)
         out = None
-        if nbrs and len(self._ukeys):
+        if nbrs:
             k = self.word_size
             wordmat = np.array([[ord(c) for c in w2] for w2, _ in nbrs],
                                dtype=np.int64)
-            h = np.zeros(len(nbrs), dtype=np.uint64)
-            for j in range(k):
-                h = h * _HASH_P + wordmat[:, j].astype(np.uint64)
-            bis = self.buckets_for_hashes(h)
-            live = np.flatnonzero(bis >= 0)
-            if len(live):
-                bstart, bend = self.bucket_bounds_np
-                bb = bis[live]
-                counts = bend[bb] - bstart[bb]
-                total = int(counts.sum())
-                if total:
-                    wi = np.repeat(live, counts)
-                    cum = np.concatenate(([0], np.cumsum(counts)))[:-1]
-                    within = (np.arange(total, dtype=np.int64)
-                              - np.repeat(cum, counts))
-                    flat = np.repeat(bstart[bb], counts) + within
-                    si = self.sis_np[flat]
-                    sp = self.poss_np[flat]
-                    cord, _, offs = self.cat_protein
-                    gpos = offs[si] + sp
-                    ok = np.ones(total, dtype=bool)
-                    for j in range(k):
-                        ok &= cord[gpos + j] == wordmat[wi, j]
-                    wi, si, sp = wi[ok], si[ok], sp[ok]
-                    if len(si):
-                        scs = np.array([sc for _, sc in nbrs],
-                                       dtype=np.int64)[wi]
-                        wo = np.array([ord(c) for c in word],
-                                      dtype=np.int64)
-                        idvec = (wordmat == wo[None, :]).sum(axis=1)
-                        out = (si, sp, scs, idvec[wi])
-        cache[key] = out
+            hits = _exact_seeds(self, wordmat.ravel(),
+                                np.arange(len(nbrs), dtype=np.int64) * k, k)
+            if hits is not None:
+                wp, si, sp = hits
+                wi = wp // k
+                scs = np.array([sc for _, sc in nbrs], dtype=np.int64)[wi]
+                wo = np.array([ord(c) for c in word], dtype=np.int64)
+                idvec = (wordmat == wo[None, :]).sum(axis=1)
+                out = (si, sp, scs, idvec[wi])
+        self._nb_cache[key] = out
         return out
-
-    @property
-    def cat_protein(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """Whole-volume concatenated protein encoding for the batched
-        extension path: (ord array, BLOSUM row-index array, subject
-        start offsets), with ONE boundary sentinel between subjects
-        (ord -1 never matches a real character; row index _B62_SENT
-        scores the huge negative that X-drop-stops any extension at a
-        subject boundary — the batched analog of per-subject array
-        bounds). Built lazily once per volume, cached like the index."""
-        if getattr(self, "_cat_protein", None) is None:
-            ords, rows = [], []
-            offs = np.empty(len(self.ext_seqs), dtype=np.int64)
-            sep_o = np.array([-1], dtype=np.int32)
-            sep_r = np.array([_B62_SENT], dtype=np.intp)
-            cursor = 0
-            for i, s in enumerate(self.ext_seqs):
-                o, r = encode_protein(s)
-                offs[i] = cursor
-                ords.append(o)
-                rows.append(r)
-                ords.append(sep_o)
-                rows.append(sep_r)
-                cursor += len(o) + 1
-            cat_o = (np.concatenate(ords) if ords
-                     else np.empty(0, dtype=np.int32))
-            cat_r = (np.concatenate(rows) if rows
-                     else np.empty(0, dtype=np.intp))
-            self._cat_protein = (cat_o, cat_r, offs)
-        return self._cat_protein
-
-    @property
-    def cat_nucl(self) -> tuple[np.ndarray, np.ndarray]:
-        """Whole-volume concatenated codepoint encoding for the
-        batched nucleotide extension path: (ord array, subject start
-        offsets) with a -1 separator between subjects (no real
-        codepoint is negative, and the rp scorer gives separators
-        _B62_NEG — the batched analog of per-subject bounds). Built
-        lazily once per volume, cached like the index; getattr-guarded
-        so indexes unpickled from older disk-cache entries grow it on
-        first touch."""
-        if getattr(self, "_cat_nucl", None) is None:
-            ords = []
-            offs = np.empty(len(self.ext_seqs), dtype=np.int64)
-            sep = np.array([-1], dtype=np.int32)
-            cursor = 0
-            for i, s in enumerate(self.ext_seqs):
-                o = np.frombuffer(s.encode("utf-32-le"),
-                                  dtype="<u4").astype(np.int32)
-                offs[i] = cursor
-                ords.append(o)
-                ords.append(sep)
-                cursor += len(o) + 1
-            cat_o = (np.concatenate(ords) if ords
-                     else np.empty(0, dtype=np.int32))
-            self._cat_nucl = (cat_o, offs)
-        return self._cat_nucl
 
 
 def index_cache_key(cache_key: str, word_size: int, max_kmer_hits: int,
@@ -788,16 +661,15 @@ def _publish_index(idx: SubjectIndex, path: str) -> None:
 def ensure_index_on_disk(cache_key: str, loader, word_size: int,
                          max_kmer_hits: int, soft_mask: bool = False,
                          complexity: bool = False, protein: bool = False,
-                         fold_case: bool = False) -> bool:
+                         fold_case: bool = False) -> SubjectIndex | None:
     """The makeblastdb analog, explicit: build ONE volume's index and
     publish the content-keyed pickle — called by the format pass (one
     task per missing volume) BEFORE the kernel stage, so search tasks
     only ever unpickle. Without this, a cold run had every worker that
     first touched a volume build it concurrently (the publish race is
     harmless for correctness but quadratic in wall: workers x O(volume)
-    builds — measured 277 s vs ~30 s at the synthesized sf1.0). Lazy
-    derived arrays (protein concat encoding, bucket-bound views) are
-    materialized before publishing so loaders skip those rebuilds too.
+    builds — measured 277 s vs ~30 s at the synthesized sf1.0). The
+    index is plain arrays built eagerly, so a loader rebuilds nothing.
     Does NOT touch the capacity-1 resident cache. Returns the index it
     built, or None if the pickle already existed (or no usable cache
     dir)."""
@@ -809,11 +681,6 @@ def ensure_index_on_disk(cache_key: str, loader, word_size: int,
     idx = SubjectIndex(loader(), word_size, max_kmer_hits,
                        soft_mask=soft_mask, complexity=complexity,
                        protein=protein, fold_case=fold_case)
-    if protein:
-        idx.cat_protein
-    else:
-        idx.cat_nucl
-    idx.bucket_bounds_np, idx.sis_np, idx.poss_np
     _publish_index(idx, path)
     return idx
 
@@ -865,16 +732,12 @@ def get_subject_index_lazy(cache_key: str, loader, word_size: int,
     return idx
 
 
-_B62_IDX_NP = _B62_IDX.astype(np.intp)
-
-
 def encode_protein(seq: str) -> tuple[np.ndarray, np.ndarray]:
     """(raw ord array, BLOSUM row-index array) for vectorized scoring.
     Chars outside Latin-1 map to the X row (ord kept raw so identity
     counting still compares the actual characters)."""
     ords = np.fromiter(map(ord, seq), dtype=np.int32, count=len(seq))
-    safe = np.where(ords < 256, ords, ord("X"))
-    return ords, _B62_IDX_NP[safe]
+    return ords, _b62_rows(ords)
 
 
 # Seed-tile width for _extend_batch: keeps each 2D temporary around
@@ -891,15 +754,16 @@ def _extend_batch(qrow: np.ndarray | None, qord: np.ndarray,
                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """One direction of X-drop extension for N seeds AT ONCE.
 
-    qrow/qord: the query's BLOSUM row-index and ord arrays;
-    crow/cord: the whole volume's concatenated arrays (cat_protein);
+    qrow/qord: the query block's BLOSUM row-index and ord arrays;
+    crow/cord: the whole volume's (SubjectIndex.rows/.ords), both in
+    the _concat layout with -1 ords / _B62_SENT rows at separators;
     q0/g0: each seed's first query/volume position in this direction;
     sign: +1 (rightward) or -1 (leftward).
 
     rp=(reward, penalty) switches to nucleotide match/mismatch
-    scoring on the ord arrays (qrow/crow unused, cat_nucl form): score
-    = reward when ords are equal, penalty otherwise, _B62_NEG at
-    out-of-range or subject-separator positions.
+    scoring on the ord arrays (qrow/crow unused): score = reward when
+    ords are equal, penalty otherwise, _B62_NEG at out-of-range or
+    separator positions.
 
     Semantics are exactly the sequential walk's (the per-seed X-drop
     loops of the test oracle): running best with first-maximum
@@ -1001,7 +865,7 @@ def _extend_batch(qrow: np.ndarray | None, qord: np.ndarray,
 
 
 def _batched_core(index: SubjectIndex, cfg: BlastConfig, k: int,
-                  sq, ssi, ssp, gpos, seed_sc_all, seed_id_all, ext_args,
+                  sq, ssi, ssp, seed_sc_all, seed_id_all, ext_args,
                   qoffs: np.ndarray, q_strs: list[str],
                   narrow: bool = False):
     """Shared batched stage for one strand of a query block: group
@@ -1014,15 +878,15 @@ def _batched_core(index: SubjectIndex, cfg: BlastConfig, k: int,
     (qrow, qord, crow, cord, rp) selects BLOSUM (rp=None) or
     reward/penalty scoring for the extension batches.
 
-    The query side is the whole BLOCK's concatenation
-    (sentinel-separated, exactly like the volume's
-    cat_protein/cat_nucl): ``sq`` carries GLOBAL positions and
-    ``qoffs`` each query's start in it. Diagonals are taken in
+    The query side is the whole BLOCK's concatenation (the _concat
+    layout the volume's arrays share): ``sq`` carries GLOBAL positions
+    and ``qoffs`` each query's start in it. Diagonals are taken in
     query-local coordinates, so two queries never share a coverage
     group, and the gapped stage slices each HSP's own query string
     (``q_strs``) back out. Returned q coords stay GLOBAL; callers map
     them back per row."""
     qrow, qord, crow, cord, rp = ext_args
+    gpos = index.offs[ssi] + ssp
     # --- group by (query, subject, diagonal); within a group qpos
     # ascends (collection order is global-qpos-major, bucket order
     # si/spos asc) ---
@@ -1221,8 +1085,9 @@ def _raw_cols_from_core_block(core, index: SubjectIndex,
     """RAW_HITS columns from a _batched_core result: each
     row's query is recovered from its global start offset, coords map
     back to that query's local (and, for the minus strand, forward)
-    orientation. Also returns the per-row query index so the blastn
-    caller can restore per-query strand-major emission order."""
+    orientation. Also returns the per-row query index so
+    _align_block_cols can restore per-query strand-major emission
+    order."""
     r_si, r_sc, al, r_id, gp, r_qs, r_qe, r_ss, r_se = core
     qidx = np.searchsorted(qoffs, r_qs, side="right") - 1
     off = qoffs[qidx]
@@ -1235,7 +1100,7 @@ def _raw_cols_from_core_block(core, index: SubjectIndex,
     i32 = np.int32
     cols = {
         "qid": qids_np[qidx],
-        "sid": index.sids_np[r_si],
+        "sid": index.sids[r_si],
         "score": r_sc.astype(i32),
         "align_len": al.astype(i32),
         "ident_count": r_id.astype(i32),
@@ -1251,223 +1116,117 @@ def _raw_cols_from_core_block(core, index: SubjectIndex,
     return cols, qidx
 
 
-def _expand_buckets(index: SubjectIndex, qpos_list: np.ndarray,
-                    bis: np.ndarray):
-    """Expand bucket ids into per-seed (global qpos, subject idx,
-    subject pos) arrays — the shared seed-expansion step of every
-    batched path."""
-    bstart, bend = index.bucket_bounds_np
-    counts = bend[bis] - bstart[bis]
+def _exact_seeds(index: SubjectIndex, codes: np.ndarray, qpos: np.ndarray,
+                 k: int):
+    """The seed stage: the length-k windows of ``codes`` starting at
+    ``qpos`` are hashed, resolved to buckets in one searchsorted,
+    expanded to every (subject, position) of their bucket and
+    exact-verified against the volume's ords (a hash collision only
+    routes, never seeds). Returns (qpos, si, spos) per hit, qpos-major
+    then bucket (si, spos) order, or None when nothing hits."""
+    bis = index.buckets_for_hashes(_window_hashes(codes, k)[qpos])
+    live = bis >= 0
+    qpos, bis = qpos[live], bis[live]
+    counts = index._bend[bis] - index._bstart[bis]
     total = int(counts.sum())
     if total == 0:
         return None
-    sq = np.repeat(qpos_list, counts)
-    cum = np.concatenate(([0], np.cumsum(counts)))[:-1]
-    within = np.arange(total, dtype=np.int64) - np.repeat(cum, counts)
-    flat = np.repeat(bstart[bis], counts) + within
-    return sq, index.sis_np[flat], index.poss_np[flat]
+    sq = np.repeat(qpos, counts)
+    flat = (np.repeat(index._bstart[bis] - (np.cumsum(counts) - counts),
+                      counts) + np.arange(total, dtype=np.int64))
+    si, sp = index._sis[flat], index._poss[flat]
+    gpos = index.offs[si] + sp
+    ok = np.ones(total, dtype=bool)
+    for j in range(k):
+        ok &= index.ords[gpos + j] == codes[sq + j]
+    if not ok.any():
+        return None
+    return sq[ok], si[ok], sp[ok]
 
 
-def _align_block_protein_batched(items: list[tuple[int, str]],
-                                 index: SubjectIndex, cfg: BlastConfig,
-                                 ) -> dict[str, np.ndarray]:
-    """Block-level blastp batching: the WHOLE query block is
-    concatenated into one sentinel-separated encoding (the query-side
-    mirror of the volume's cat_protein), so seed collection, exact-word
-    verification, the coverage-dedupe rounds and the X-drop extension
-    batches each run ONCE per (block, volume) task instead of once per
-    query. Rows are identical to the sequential oracle's per query,
-    concatenated in block order (pinned by test_batched_parity)."""
+def _neighborhood_seeds(index: SubjectIndex, q_strs: list[str],
+                        qoffs: np.ndarray, win: np.ndarray, k: int,
+                        threshold: int):
+    """-threshold seeding of a query block: the (memoized) neighborhood
+    hits of every query word at ``win``, as (qpos, si, spos,
+    seed_score, seed_ident) in global-qpos-major order, or None."""
+    offs = qoffs.tolist()
+    qn_of = np.searchsorted(qoffs, win, side="right") - 1
+    parts = []
+    for gp, qn in zip(win.tolist(), qn_of.tolist()):
+        lp = gp - offs[qn]
+        arrs = index.neighborhood_arrays(q_strs[qn][lp:lp + k], threshold)
+        if arrs is not None:
+            parts.append((np.full(len(arrs[0]), gp, dtype=np.int64),) + arrs)
+    if not parts:
+        return None
+    return tuple(np.concatenate(col) for col in zip(*parts))
+
+
+def _align_block_cols(items: list[tuple[int, str]], index: SubjectIndex,
+                      cfg: BlastConfig) -> dict[str, np.ndarray]:
+    """Block-level batching for both alphabets: per query strand (plus
+    only for blastp, plus and minus for blastn) the WHOLE block is laid
+    out once by _concat, seeded, and run through _batched_core, so seed
+    collection, the coverage-dedupe rounds and the X-drop extension
+    batches each run once per (block, volume) task instead of once per
+    query. The alphabet decides only the scoring: the seed score
+    (BLOSUM self-score vs k*reward), the extension's BLOSUM rows vs
+    (reward, penalty), and -threshold neighborhood seeding (blastp).
+    Rows are restored to the sequential per-query strand-major order
+    (every query's plus rows, then its minus rows) by a stable sort on
+    the per-row query index over [plus; minus]."""
     k = cfg.word_size
-    fold = index.fold_case
-    sepw = max(k - 1, 1)
-    sep_o = np.full(sepw, -1, dtype=np.int32)
-    sep_r = np.full(sepw, _B62_SENT, dtype=np.intp)
-    sep_c = np.full(sepw, _HASH_SEP, dtype=np.uint32)
-    qids, qlens, qoffs, q_strs = [], [], [], []
-    ords, rows, codes = [], [], []
-    masked_parts: list[np.ndarray] = []
-    cursor = 0
-    for qid, seq in items:
-        q_ext = fold_case_str(seq) if fold else seq
-        qids.append(int(qid))
-        qlens.append(len(seq))
-        qoffs.append(cursor)
-        q_strs.append(q_ext)
-        o, r = encode_protein(q_ext)
-        ords += [o, sep_o]
-        rows += [r, sep_r]
-        codes += [np.frombuffer(q_ext.encode("utf-32-le"),
-                                dtype="<u4"), sep_c]
-        nw = len(seq) - k + 1
-        if nw > 0:
-            v = cursor + np.arange(nw, dtype=np.int64)
-            if cfg.lcase_masking:
-                # the original casing decides (q_strs may be folded)
-                low = np.array([ch.islower() for ch in seq],
-                               dtype=np.int32)
-                lowc = np.concatenate(([0], np.cumsum(low)))
-                v = v[(lowc[k:] - lowc[:-k]) == 0]
-            masked_parts.append(v)
-        cursor += len(o) + sepw
-    if not qids or not masked_parts:
-        return _empty_raw_cols()
-    qo = np.concatenate(ords)
-    qi_arr = np.concatenate(rows)
-    qc = np.concatenate(codes)
-    qoffs_np = np.asarray(qoffs, dtype=np.int64)
-    qlens_np = np.asarray(qlens, dtype=np.int64)
-    qids_np = np.asarray(qids, dtype=np.int64)
-    valid = np.concatenate(masked_parts)
-    cord, crow, offs = index.cat_protein
-    nb_threshold = cfg.threshold
-    if nb_threshold is not None:
-        # neighborhood probes stay a (memoized) per-word loop, but now
-        # over the block's positions at once; every seed joins ONE
-        # shared extension batch. Visit order = global qpos-major =
-        # per-query sequential order concatenated.
-        qn_of = np.searchsorted(qoffs_np, valid, side="right") - 1
-        qp_parts: list[np.ndarray] = []
-        parts: list[tuple[np.ndarray, ...]] = []
-        for gp, qn in zip(valid.tolist(), qn_of.tolist()):
-            lp = gp - qoffs[qn]
-            arrs = index.neighborhood_arrays(
-                q_strs[qn][lp:lp + k], nb_threshold)
-            if arrs is None:
-                continue
-            qp_parts.append(np.full(len(arrs[0]), gp, dtype=np.int64))
-            parts.append(arrs)
-        if not parts:
-            return _empty_raw_cols()
-        sq = np.concatenate(qp_parts)
-        ssi = np.concatenate([a[0] for a in parts])
-        ssp = np.concatenate([a[1] for a in parts])
-        gpos = offs[ssi] + ssp
-        seed_sc_all = np.concatenate([a[2] for a in parts])
-        seed_id_all = np.concatenate([a[3] for a in parts])
-    else:
-        h = _window_hashes(qc, k)
-        qb = index.buckets_for_hashes(h[valid])
-        live = qb >= 0
-        qpos_list = valid[live]
-        if not len(qpos_list):
-            return _empty_raw_cols()
-        expanded = _expand_buckets(index, qpos_list, qb[live])
-        if expanded is None:
-            return _empty_raw_cols()
-        sq, ssi, ssp = expanded
-        gpos = offs[ssi] + ssp
-        ok = np.ones(len(sq), dtype=bool)
-        for j in range(k):
-            ok &= cord[gpos + j] == qo[sq + j]
-        if not ok.all():
-            sq, ssi, ssp, gpos = sq[ok], ssi[ok], ssp[ok], gpos[ok]
-        if not len(sq):
-            return _empty_raw_cols()
-        # self-score prefix over the cat: _B62E so sentinel rows are
-        # indexable (valid windows never include one)
-        prefnp = np.concatenate(([0], np.cumsum(
-            _B62E[qi_arr, qi_arr], dtype=np.int64)))
-        seed_sc_all = prefnp[sq + k] - prefnp[sq]
-        seed_id_all = np.full(len(sq), k, dtype=np.int64)
-    core = _batched_core(index, cfg, k, sq, ssi, ssp, gpos,
-                         seed_sc_all, seed_id_all,
-                         (qi_arr, qo, crow, cord, None),
-                         narrow=nb_threshold is not None,
-                         qoffs=qoffs_np, q_strs=q_strs)
-    if core is None:
-        return _empty_raw_cols()
-    cols, _ = _raw_cols_from_core_block(core, index, qoffs_np, qids_np,
-                                        qlens_np, qstrand=1)
-    return cols
-
-
-def _align_block_nucl_batched(items: list[tuple[int, str]],
-                              index: SubjectIndex, cfg: BlastConfig,
-                              ) -> dict[str, np.ndarray]:
-    """Block-level blastn batching: per strand, all of the block's
-    (strand-oriented) queries concatenate into one sentinel-separated
-    codepoint array and run the shared batched stages once. Final rows
-    are restored to the sequential per-query strand-major order (every
-    query's plus rows, then its minus rows) by a stable sort on the
-    per-row query index over [plus; minus]."""
-    k = cfg.word_size
-    fold = index.fold_case
-    sepw = max(k - 1, 1)
-    sep_o = np.full(sepw, -1, dtype=np.int32)
-    sep_c = np.full(sepw, _HASH_SEP, dtype=np.uint32)
-    cord, offs = index.cat_nucl
-    if not items:
-        return _empty_raw_cols()
-    qids_np = np.asarray([q for q, _ in items], dtype=np.int64)
-    qlens_np = np.asarray([len(s) for _, s in items], dtype=np.int64)
-    strand_parts: list[tuple[dict[str, np.ndarray], np.ndarray]] = []
-    for qstrand in (1, -1):
+    protein = cfg.task == "blastp"
+    neighborhood = protein and cfg.threshold is not None
+    qids = np.array([q for q, _ in items], dtype=np.int64)
+    qlens = np.array([len(s) for _, s in items], dtype=np.int64)
+    parts: list[tuple[dict[str, np.ndarray], np.ndarray]] = []
+    for qstrand in ((1,) if protein else (1, -1)):
         seqs = [s if qstrand == 1 else revcomp(s) for _, s in items]
-        ords, codes, qoffs, q_strs = [], [], [], []
-        masked_parts: list[np.ndarray] = []
-        cursor = 0
-        for s in seqs:
-            q_ext = fold_case_str(s) if fold else s
-            q_strs.append(q_ext)
-            c = np.frombuffer(q_ext.encode("utf-32-le"), dtype="<u4")
-            qoffs.append(cursor)
-            ords += [c.astype(np.int32), sep_o]
-            codes += [c, sep_c]
-            nw = len(s) - k + 1
-            if nw > 0:
-                v = cursor + np.arange(nw, dtype=np.int64)
-                if cfg.lcase_masking:
-                    low = np.array([ch.islower() for ch in s],
-                                   dtype=np.int32)
-                    lowc = np.concatenate(([0], np.cumsum(low)))
-                    v = v[(lowc[k:] - lowc[:-k]) == 0]
-                masked_parts.append(v)
-            cursor += len(c) + sepw
-        if not masked_parts:
+        q_strs = ([fold_case_str(s) for s in seqs] if index.fold_case
+                  else seqs)
+        cat, qoffs, _, _, win = _concat(q_strs, k)
+        if cfg.lcase_masking:
+            # the original casing decides (q_strs may be folded)
+            raw = _concat(seqs, k)[0] if index.fold_case else cat
+            win = win[~_lower_windows(raw, win, k)]
+        qords = _ext_ords(cat)
+        if protein:
+            qrows = _b62_rows(qords)
+            ext_args = (qrows, qords, index.rows, index.ords, None)
+        else:
+            ext_args = (None, qords, None, index.ords,
+                        (cfg.reward, cfg.penalty))
+        if neighborhood:
+            seeds = _neighborhood_seeds(index, q_strs, qoffs, win, k,
+                                        cfg.threshold)
+        else:
+            seeds = _exact_seeds(index, qords, win, k)
+            if seeds is not None:
+                sq = seeds[0]
+                if protein:
+                    # self-score prefix over the block: _B62E so
+                    # separator rows are indexable (seeds never hold one)
+                    pref = np.concatenate(([0], np.cumsum(
+                        _B62E[qrows, qrows], dtype=np.int64)))
+                    seed_sc = pref[sq + k] - pref[sq]
+                else:
+                    seed_sc = np.full(len(sq), k * cfg.reward, dtype=np.int64)
+                seeds += (seed_sc, np.full(len(sq), k, dtype=np.int64))
+        if seeds is None:
             continue
-        qo = np.concatenate(ords)
-        qc = np.concatenate(codes)
-        qoffs_np = np.asarray(qoffs, dtype=np.int64)
-        valid = np.concatenate(masked_parts)
-        h = _window_hashes(qc, k)
-        qb = index.buckets_for_hashes(h[valid])
-        live = qb >= 0
-        qpos_list = valid[live]
-        if not len(qpos_list):
-            continue
-        expanded = _expand_buckets(index, qpos_list, qb[live])
-        if expanded is None:
-            continue
-        sq, ssi, ssp = expanded
-        gpos = offs[ssi] + ssp
-        ok = np.ones(len(sq), dtype=bool)
-        for j in range(k):
-            ok &= cord[gpos + j] == qo[sq + j]
-        if not ok.all():
-            sq, ssi, ssp, gpos = sq[ok], ssi[ok], ssp[ok], gpos[ok]
-        if not len(sq):
-            continue
-        seed_sc_all = np.full(len(sq), k * cfg.reward, dtype=np.int64)
-        seed_id_all = np.full(len(sq), k, dtype=np.int64)
-        core = _batched_core(index, cfg, k, sq, ssi, ssp, gpos,
-                             seed_sc_all, seed_id_all,
-                             (None, qo, None, cord,
-                              (cfg.reward, cfg.penalty)),
-                             qoffs=qoffs_np, q_strs=q_strs)
-        if core is None:
-            continue
-        strand_parts.append(_raw_cols_from_core_block(
-            core, index, qoffs_np, qids_np, qlens_np, qstrand))
-    if not strand_parts:
+        core = _batched_core(index, cfg, k, *seeds, ext_args,
+                             qoffs=qoffs, q_strs=q_strs,
+                             narrow=neighborhood)
+        if core is not None:
+            parts.append(_raw_cols_from_core_block(
+                core, index, qoffs, qids, qlens, qstrand))
+    if not parts:
         return _empty_raw_cols()
-    names = [f.name for f in RAW_HITS.fields]
-    if len(strand_parts) == 1:
-        return strand_parts[0][0]
-    qidx_all = np.concatenate([p[1] for p in strand_parts])
-    emit = np.argsort(qidx_all, kind="stable")
-    return {nm: np.concatenate([p[0][nm] for p in strand_parts])[emit]
-            for nm in names}
+    emit = np.argsort(np.concatenate([p[1] for p in parts]), kind="stable")
+    return {f.name: np.concatenate([p[0][f.name] for p in parts])[emit]
+            for f in RAW_HITS.fields}
 
 
 # tile cap on gotoh_local_batch's (B, M+1, N+1) pointer cells: 3 bytes
@@ -1547,13 +1306,12 @@ def _gotoh_batch_tile(pairs, protein, reward, penalty, gap_open,
     # residue codes plus a code x code score table: BLOSUM62 rows for
     # protein, reward on the diagonal / penalty elsewhere for
     # nucleotides (codes are the distinct code points of the tile)
-    seqs = [s for pair in pairs for s in pair]
+    cps = [np.frombuffer(s.encode("utf-32-le"), dtype="<u4")
+           for pair in pairs for s in pair]
     if protein:
         table = _B62
-        codes = [encode_protein(s)[1] for s in seqs]
+        codes = [_b62_rows(c) for c in cps]
     else:
-        cps = [np.frombuffer(s.encode("utf-32-le"), dtype="<u4")
-               for s in seqs]
         alpha, inv = np.unique(np.concatenate(cps), return_inverse=True)
         table = np.where(np.eye(len(alpha), dtype=bool),
                          np.int32(reward), np.int32(penalty))
@@ -1727,11 +1485,8 @@ def align_block(items, index: SubjectIndex, cfg: BlastConfig,
             f"config word_size={cfg.word_size} does not match the subject "
             f"index's word_size={index.word_size}; rebuild the index with "
             f"the config's k (stage gen keys on word_size for this reason)")
-    qitems = [(int(qid), seq) for qid, seq in items]
-    if cfg.task == "blastp":
-        cols = _align_block_protein_batched(qitems, index, cfg)
-    else:
-        cols = _align_block_nucl_batched(qitems, index, cfg)
+    cols = _align_block_cols([(int(qid), seq) for qid, seq in items],
+                             index, cfg)
     return pd.DataFrame(cols, columns=[f.name for f in RAW_HITS.fields])
 
 

@@ -62,15 +62,6 @@ from mr_mpi_blast_spark.operators.topk import top_hits, topk_per_key
 _BROADCAST_GEN = itertools.count()
 
 
-def effective_dbsize(subjects: DataFrame, cfg: BlastConfig) -> int:
-    """S8 (mrblast.cpp:404-433): total residue length of the WHOLE
-    database, so per-partition e-values are comparable. -dbsize
-    override wins when set."""
-    if cfg.dbsize is not None:
-        return cfg.dbsize
-    return int(subjects.agg(F.sum(F.length("seq"))).first()[0])
-
-
 _STAGE_META = "_stage_meta.json"
 
 
@@ -439,12 +430,13 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
                    scratch_dir: str | None = None,
                    log_dir: str | None = None,
                    cache_key: str | None = None,
-                   seed_prune: bool = True) -> tuple[DataFrame, int]:
+                   seed_prune: bool = True) -> tuple[DataFrame, int, int]:
     """The kernel stage alone: (raw RAW_HITS DataFrame, whole-db residue
-    count). Split from run_search so the relational tail (P3-P9 + F1 +
-    O2/O3) can be re-derived — and oracle-checked — from persisted raw
-    output. RAW_HITS is all integers/strings, so persisting it is
-    lossless across engines.
+    count, whole-db sequence count), the two counts after any
+    cfg.dbsize / cfg.n_seqs override. Split from run_search so the
+    relational tail (P3-P9 + F1 + O2/O3) can be re-derived — and
+    oracle-checked — from persisted raw output. RAW_HITS is all
+    integers/strings, so persisting it is lossless across engines.
 
     ``cache_key`` flows to stage_volumes (makeblastdb-style volume
     reuse) and keys the per-worker subject-index cache on CONTENT

@@ -125,7 +125,7 @@ def test_batched_extension_parity(seed):
     q = _mutate(rng, subjects[1][1][10:130], 0.1)
     k = 4
     idx = SubjectIndex(subjects, k, 4096, protein=True)
-    cord, crow, offs = idx.cat_protein
+    cord, crow, offs = idx.ords, idx.rows, idx.offs
     qo, qi_arr = encode_protein(q)
 
     # exact-word seeds, found by scanning (independent of the index)

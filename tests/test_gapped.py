@@ -364,21 +364,85 @@ def _sibling_dna() -> tuple[str, str]:
     return a, b
 
 
-def test_align_block_gapped_blastn_golden():
-    """Pinned md5 of align_block's RAW_HITS frame for an all-vs-all of
-    two sibling sequences under gapped blastn (+2/-3, gaps 5/2): the
-    gapped DP's scores, coordinates, ident/gaps/align_len and the
-    emission/dedupe order must not move."""
+def _sibling_protein() -> tuple[str, str]:
+    """Two 300-residue copies of one random ancestor: scattered
+    substitutions in both, and in the second a 6-residue insertion and
+    a 4-residue deletion."""
+    rng = np.random.default_rng(7)
+    base = "".join(rng.choice(list(RES), size=300))
+
+    def mutate(s, sites):
+        s = list(s)
+        for p in sites:
+            s[p] = RES[(RES.index(s[p]) + 7) % 20]
+        return "".join(s)
+    a = mutate(base, range(11, 300, 23))
+    b = mutate(base, range(17, 300, 29))
+    b = b[:90] + "WWPCHM" + b[90:200] + b[204:]
+    return a, b
+
+
+def _golden_case(name: str):
+    """(cfg, subjects, queries) of one pinned kernel shape: all-vs-all
+    of two siblings; the lcase case lowercases a stretch of each query,
+    searches the reverse complement of the second sibling, so
+    minus-strand rows are emitted, and joins a plus and a minus piece
+    in a third query, so one query emits rows on both strands."""
+    if name.startswith("blastn"):
+        a, b = _sibling_dna()
+        subjects = [("a", a), ("b", b)]
+        if name == "blastn-gapped":
+            cfg = BlastConfig(task="blastn", reward=2, penalty=-3,
+                              gapped=True, gap_open=5, gap_extend=2,
+                              word_size=11)
+            return cfg, subjects, [(1, a), (2, b)]
+        cfg = BlastConfig(task="blastn", word_size=11, lcase_masking=True)
+        from kernel_oracle import revcomp
+        rb = revcomp(b)
+        queries = [(1, a[:200] + a[200:320].lower() + a[320:]),
+                   (2, rb[:100] + rb[100:160].lower() + rb[160:]),
+                   (3, a[:150] + rb[:150])]
+        return cfg, subjects, queries
+    a, b = _sibling_protein()
+    opts = {"blastp-exact": {},
+            "blastp-threshold": {"threshold": 11, "window_size": 40},
+            "blastp-gapped": {"gapped": True}}[name]
+    cfg = BlastConfig(task="blastp", word_size=3, **opts)
+    return cfg, [("a", a), ("b", b)], [(1, a), (2, b)]
+
+
+@pytest.mark.parametrize("name, n_rows, md5", [
+    pytest.param("blastn-gapped", 8, "c35025f70e237b4be3790d8d935519e0",
+                 id="blastn-gapped"),
+    pytest.param("blastn-lcase", 17, "3f87fc6f76852a7c84d4dcae91ca9671",
+                 id="blastn-lcase"),
+    pytest.param("blastp-exact", 16, "27e6a4ede7751df02470ae968e53cf55",
+                 id="blastp-exact"),
+    pytest.param("blastp-threshold", 518, "de16722e016617799d2ea5ff4ed2e696",
+                 id="blastp-threshold"),
+    pytest.param("blastp-gapped", 8, "fa84d25a95d79a3028016d565a6c1c16",
+                 id="blastp-gapped"),
+])
+def test_align_block_golden(name, n_rows, md5):
+    """Pinned md5 of align_block's RAW_HITS frame per kernel shape:
+    gapped blastn (+2/-3, gaps 5/2), ungapped blastn with lowercase
+    query masking on both strands, blastp exact seeding, blastp
+    neighborhood seeding with two-hit windows, and gapped blastp.
+    Scores, coordinates, ident/gaps/align_len and the emission order
+    must not move."""
     import hashlib
     from mr_mpi_blast_spark.kernel.builtin import align_block
-    a, b = _sibling_dna()
-    cfg = BlastConfig(task="blastn", reward=2, penalty=-3, gapped=True,
-                      gap_open=5, gap_extend=2, word_size=11)
-    idx = SubjectIndex([("a", a), ("b", b)], cfg.word_size, cfg.max_kmer_hits)
-    df = align_block([(1, a), (2, b)], idx, cfg)
-    assert len(df) == 8 and df["gaps"].max() == 15
-    assert hashlib.md5(df.to_csv(index=False).encode()).hexdigest() \
-        == "c35025f70e237b4be3790d8d935519e0"
+    cfg, subjects, queries = _golden_case(name)
+    idx = SubjectIndex(subjects, cfg.word_size, cfg.max_kmer_hits,
+                       protein=cfg.task == "blastp",
+                       fold_case=cfg.mask_fold_case)
+    df = align_block(queries, idx, cfg)
+    assert len(df) == n_rows
+    if name.endswith("gapped"):
+        assert df["gaps"].max() == (15 if name == "blastn-gapped" else 10)
+    if name == "blastn-lcase":
+        assert set(df[df["qid"] == 3]["qstrand"]) == {1, -1}
+    assert hashlib.md5(df.to_csv(index=False).encode()).hexdigest() == md5
 
 
 @pytest.mark.parametrize("opt", ["-gapopen", "-gapextend"])

@@ -9,6 +9,7 @@ identity, e-value normalization against WHOLE dbsize)."""
 import math
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -180,23 +181,37 @@ def test_max_target_seqs_cap(spark):
     assert capped.select("sid").distinct().count() == 1
 
 
-def test_disk_index_cache_roundtrip(tmp_path, monkeypatch):
+@pytest.mark.parametrize("task", ["blastn", "blastp"])
+def test_disk_index_cache_roundtrip(tmp_path, monkeypatch, task):
     """makeblastdb analog: a content-keyed built index persists to
     scratch disk and a fresh in-memory cache loads it WITHOUT invoking
-    the subject loader; a corrupt pickle rebuilds silently."""
+    the subject loader — every array the aligner reads (for blastp the
+    BLOSUM rows too) comes back equal; a corrupt pickle rebuilds
+    silently."""
     from mr_mpi_blast_spark.kernel import builtin as B
 
     monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
-    subjects = [("s1", "ACGTACGTACGTACGTAC"), ("s2", "TTTTACGTACGTACGTAAAA")]
+    protein = task == "blastp"
+    if protein:
+        subjects = [("s1", "MKTAYIAKQRQISFVKSHFSRQ"),
+                    ("s2", "GGMKTAYIAKQRQISFVKSHWW")]
+        q, k = "MKTAYIAKQRQISFVK", 3
+    else:
+        subjects = [("s1", "ACGTACGTACGTACGTAC"),
+                    ("s2", "TTTTACGTACGTACGTAAAA")]
+        q, k = "ACGTACGTACGTACGT", 8
     calls = {"n": 0}
 
     def loader():
         calls["n"] += 1
         return list(subjects)
 
+    def lazy(key):
+        return B.get_subject_index_lazy(key, loader, k, 64, protein=protein,
+                                        disk_cache=True)
+
     B._DB_CACHE.clear()
-    idx1 = B.get_subject_index_lazy("ck:v0:content", loader, 8, 64,
-                                    disk_cache=True)
+    idx1 = lazy("ck:v0:content")
     assert calls["n"] == 1
     import os as _os
     cache_dir = tmp_path / f"spark_graft_idx_cache_{_os.getuid()}"
@@ -204,13 +219,17 @@ def test_disk_index_cache_roundtrip(tmp_path, monkeypatch):
     assert len(pkls) == 1
 
     # fresh process simulation: empty in-memory cache -> disk hit,
-    # loader NOT invoked, identical search results
+    # loader NOT invoked, identical arrays and search results
     B._DB_CACHE.clear()
-    idx2 = B.get_subject_index_lazy("ck:v0:content", loader, 8, 64,
-                                    disk_cache=True)
-    assert calls["n"] == 1
-    cfg = B.BlastConfig(word_size=8)   # must match the index's k
-    q = ("ACGTACGTACGTACGT")
+    idx2 = lazy("ck:v0:content")
+    assert calls["n"] == 1 and idx2 is not idx1
+    for name in ("ords", "offs", "sids", "_ukeys", "_bstart", "_bend",
+                 "_sis", "_poss"):
+        assert np.array_equal(getattr(idx2, name), getattr(idx1, name)), name
+    assert (idx2.rows is None) == (not protein)
+    if protein:
+        assert np.array_equal(idx2.rows, idx1.rows)
+    cfg = B.BlastConfig(task=task, word_size=k)   # must match the index's k
     h1 = B.align_query(1, q, idx1, cfg)
     h2 = B.align_query(1, q, idx2, cfg)
     assert [tuple(r) for r in h1] == [tuple(r) for r in h2]
@@ -219,15 +238,14 @@ def test_disk_index_cache_roundtrip(tmp_path, monkeypatch):
     # corrupt pickle -> silent rebuild (cache is never a failure mode)
     pkls[0].write_bytes(b"not a pickle")
     B._DB_CACHE.clear()
-    idx3 = B.get_subject_index_lazy("ck:v0:content", loader, 8, 64,
-                                    disk_cache=True)
+    idx3 = lazy("ck:v0:content")
     assert calls["n"] == 2
     assert [tuple(r) for r in B.align_query(1, q, idx3, cfg)] == \
         [tuple(r) for r in h1]
 
     # nonce-keyed callers never touch disk
     B._DB_CACHE.clear()
-    B.get_subject_index_lazy("ck:v0:nonce", loader, 8, 64,
+    B.get_subject_index_lazy("ck:v0:nonce", loader, k, 64, protein=protein,
                              disk_cache=False)
     assert sorted(cache_dir.glob("*.pkl")) == pkls
     B._DB_CACHE.clear()
