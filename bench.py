@@ -75,10 +75,8 @@ def _clear_raw_cache(sf_dir: str) -> None:
     """Delete the persisted raw-hits cache for this sf so the first
     blast_pipeline rep is a deterministic cold kernel run."""
     try:
-        from mr_mpi_blast_spark.entry_queries import (_blast_raw_cache_dir,
-                                                      _blast_raw_key)
-        shutil.rmtree(_blast_raw_cache_dir(_blast_raw_key(sf_dir)),
-                      ignore_errors=True)
+        from mr_mpi_blast_spark.entry_queries import _blast_raw_path
+        shutil.rmtree(_blast_raw_path(sf_dir), ignore_errors=True)
     except Exception as ex:
         # a failed clear would silently mislabel rep 1 as "cold" — the
         # exact ambiguity the methodology exists to remove; make it loud

@@ -63,7 +63,7 @@ def _equal_count_packing(hist: dict[int, tuple[int, int]], target: int,
 # A wrong key would corrupt results (the offsets must match the actual
 # rows), so the contract is strict: the key must change whenever the
 # input rows OR the value derivation change — derive it from source
-# identity the way entry_queries._blast_volume_key does.
+# identity the way entry_queries._src_key does.
 _HIST_CACHE: dict = {}
 
 

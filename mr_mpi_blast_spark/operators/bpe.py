@@ -29,10 +29,11 @@ the GPT-2/Llama tokenizers are BPE fits over exactly this loop):
 
 100 TB shape: the corpus is scanned once for the word-count table
 (hash agg on the word — map-side-combinable; the caller should stage
-it to parquet, the _embedding_pairs store discipline, which the
-registered query does); each of the n_merges iterations then runs
-against a MATERIALIZED re-tokenization of that table (localCheckpoint
-by default — one merge applied per materialization), so per-iteration
+it to parquet through the catalog's artifact store,
+entry_queries._staged, as the registered query does); each of the
+n_merges iterations then runs against a MATERIALIZED re-tokenization
+of that table (localCheckpoint by default — one merge applied per
+materialization), so per-iteration
 work, Catalyst expression depth, and plan-analysis cost are all O(1)
 in the merge count: a 32k-vocabulary fit is 32k × (one map-side-
 combinable pair aggregate + one single-fold re-tokenize job), total

@@ -195,8 +195,8 @@ def lm_tf_table(docs: DataFrame, *, text_col: str = "text",
     """The stageable corpus table for ``bigram_lm_score``: per-(doc,
     bigram) occurrence counts (doc_id, bigram, w1, tf) — the ONE
     corpus-sized aggregate of the operator. A deployment scoring the
-    same corpus repeatedly writes this to parquet once (the
-    entry-layer content-addressed store discipline) and passes the
+    same corpus repeatedly writes this to parquet once (the catalog's
+    artifact store, entry_queries._staged) and passes the
     re-read frame as ``tf_table=``; the model count tables then
     derive from the staged table (cheap columnar re-scans, no
     lambda-bearing subtree, map-side combined) instead of re-exploding

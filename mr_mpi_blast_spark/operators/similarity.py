@@ -987,8 +987,8 @@ def semdedup(vectors: DataFrame, centroids, tau: float,
     the final kept-flag join. The assignment projection is recomputed
     per consumer rather than persisted — it is scan-bound and
     stateless, and at scale a caller dedup-ing repeatedly should
-    materialize the assignment once (the _embedding_pairs store
-    discipline).
+    materialize the assignment once (the catalog's artifact store,
+    entry_queries._staged).
 
     Determinism: cent_cos is floor-rounded to 1e-6 BEFORE the keep
     order compares it (round6_xengine — identical in Spark and

@@ -8,8 +8,9 @@ qId (load_csv.py:104-142) and printing floats as ``%.3g``
 
 Spark-first translation:
 
-- the defline merge-join becomes a broadcast hash join (the ``.def``
-  stream is a small dimension);
+- the defline merge-join becomes a hash join
+  (``plans.pipeline.attach_deflines``, the optimizer picks broadcast or
+  sort-merge);
 - CSV/parquet writes are distributed, one file per task ≙ one file per
   rank;
 - single-file database sinks (SQLite/DuckDB) are inherently
@@ -34,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from mr_mpi_blast_spark.config import BlastConfig
+from mr_mpi_blast_spark.plans.pipeline import attach_deflines
 
 _FLOAT_COLS = ("ident", "evalue", "bitscore", "perc_ident", "perc_cover")
 
@@ -46,18 +48,6 @@ def _g3():
         return col.map(
             lambda v: None if v is None or pd.isna(v) else "%.3g" % v)
     return g3
-
-
-def attach_deflines(hits: DataFrame, deflines: DataFrame) -> DataFrame:
-    """J3: re-attach query deflines. The reference does an ordered
-    sequential merge of two sorted streams (load_csv.py:104-142); here
-    the defline table is a broadcast dimension."""
-    dim = deflines.select(F.col("qid").alias("_dqid"),
-                          F.col("defline").alias("_ddef"))
-    return (hits.drop("qdef")
-            .join(F.broadcast(dim), F.col("qid") == F.col("_dqid"), "left")
-            .withColumn("qdef", F.col("_ddef"))
-            .drop("_dqid", "_ddef"))
 
 
 def write_csv(hits: DataFrame, path: str, *, deflines: DataFrame | None = None,
@@ -199,9 +189,8 @@ _HD5_SRC = {"qId": "qid", "qIdDef": "qdef", "sId": "sid", "dIdent": "ident",
 def write_hdf5(hits: DataFrame, path: str, *, table: str = "blhitstab",
                classifier: bool = False, batch_rows: int = 65536) -> int:
     """W4: HDF5 sink — one .hd5 file with the converter's PyTables
-    layout ``/blhits/blhitstab`` (load_hd5.py:62-92). Uses PyTables
-    when importable; otherwise the built-in spec-level writer
-    (sinks/hdf5_minimal.py) produces the same classic-format file.
+    layout ``/blhits/blhitstab`` (load_hd5.py:62-92), written by the
+    built-in spec-level writer (sinks/hdf5_minimal.py).
 
     Like the reference converter this is a single-file export: rows
     stream to the driver in batches (toLocalIterator), so driver
@@ -223,11 +212,6 @@ def write_hdf5(hits: DataFrame, path: str, *, table: str = "blhitstab",
         if c in ("ident", "evalue", "bitscore", "perc_ident", "perc_cover")
         else F.col(c) for c in cols])
 
-    try:
-        import tables as t
-    except ImportError:
-        t = None
-
     n_rows = proj.count()
     np_dtype = np.dtype([(f[0], f"S{f[2]}" if f[1] == "S" else f"<{f[1]}")
                          for f in fields])
@@ -241,19 +225,6 @@ def write_hdf5(hits: DataFrame, path: str, *, table: str = "blhitstab",
                 buf.clear()
         if buf:
             yield np.array(buf, dtype=np_dtype).tobytes()
-
-    if t is not None:                                # pragma: no cover
-        h5 = t.open_file(path, mode="w", title="BLAST hits")
-        try:
-            grp = h5.create_group(h5.root, "blhits", "blhits")
-            tbl = h5.create_table(grp, table, description=np_dtype,
-                                  title=table)
-            for chunk in batches():
-                tbl.append(np.frombuffer(chunk, dtype=np_dtype))
-            tbl.flush()
-        finally:
-            h5.close()
-        return n_rows
 
     from mr_mpi_blast_spark.sinks.hdf5_minimal import write_compound_hdf5
     return write_compound_hdf5(path, "blhits", table, fields,

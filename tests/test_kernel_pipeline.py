@@ -252,38 +252,36 @@ def test_disk_index_cache_roundtrip(tmp_path, monkeypatch, task):
 
 
 def test_raw_cache_keys_distinct_per_config_and_subset():
-    """The persisted-raw cache must key on the FULL config and the
-    query-subset modulus: the flagship, the gapped variant, and a
-    different qmod may never share a cache dir (a collision would
-    serve one config's hits as another's)."""
+    """The persisted-raw store must key on the FULL config, the
+    query-subset modulus and the input variant: the flagship, the
+    gapped variant, a different qmod and the dna variant may never
+    share a store path (a collision would serve one config's hits as
+    another's)."""
     from mr_mpi_blast_spark.entry_queries import (_blast_cfg,
                                                   _blast_gapped_cfg,
-                                                  _blast_raw_cache_dir,
-                                                  _blast_raw_key)
+                                                  _blast_nucl_cfg,
+                                                  _blast_raw_path)
     sf = "/root/testdata/sf0.001"
-    keys = {
-        "flagship": _blast_raw_key(sf),
-        "explicit-default": _blast_raw_key(sf, _blast_cfg(), 25),
-        "gapped": _blast_raw_key(sf, _blast_gapped_cfg(), 100),
-        "gapped-q25": _blast_raw_key(sf, _blast_gapped_cfg(), 25),
-        "flagship-q100": _blast_raw_key(sf, _blast_cfg(), 100),
+    paths = {
+        "flagship": _blast_raw_path(sf),
+        "explicit-default": _blast_raw_path(sf, _blast_cfg(), 25),
+        "gapped": _blast_raw_path(sf, _blast_gapped_cfg(), 100),
+        "gapped-q25": _blast_raw_path(sf, _blast_gapped_cfg(), 25),
+        "flagship-q100": _blast_raw_path(sf, _blast_cfg(), 100),
+        "nucl": _blast_raw_path(sf, _blast_nucl_cfg(), 100),
+        "nucl-dna": _blast_raw_path(sf, _blast_nucl_cfg(), 100, "dna"),
     }
-    assert keys["flagship"] == keys["explicit-default"]
-    distinct = {k: v for k, v in keys.items() if k != "explicit-default"}
+    assert paths["flagship"] == paths["explicit-default"]
+    distinct = {k: v for k, v in paths.items() if k != "explicit-default"}
     assert len(set(distinct.values())) == len(distinct)
-    dirs = {_blast_raw_cache_dir(v) for v in distinct.values()}
-    assert len(dirs) == len(distinct)
 
 
 def test_gapped_nucl_tail_exercises_strand_swap_and_gaps(spark):
     """The gapped-blastn tail must actually produce the evidence it
     exists for: rows from the GAPPED nucleotide kernel (nonzero gaps)
     and MINUS-strand hits flowing through the P4 coordinate swap
-    (sstart > send after the swap). Also: the dna variant may never
-    share a raw-hits cache key with the text variant."""
+    (sstart > send after the swap)."""
     import __spark_entry__ as e
-    from mr_mpi_blast_spark.entry_queries import (_blast_nucl_cfg,
-                                                  _blast_raw_key)
     sf = "/root/testdata/sf0.001"
     p = e.queries()["blast_gapped_nucl_tail"](spark, sf).toPandas()
     assert len(p) > 0
@@ -294,8 +292,6 @@ def test_gapped_nucl_tail_exercises_strand_swap_and_gaps(spark):
     assert len(plus) > 0
     # revcomp'd queries (odd doc_id/qmod) are where minus hits live
     assert set((minus["qid"] // 100) % 2) == {1}
-    assert _blast_raw_key(sf, _blast_nucl_cfg(), 100, "dna") \
-        != _blast_raw_key(sf, _blast_nucl_cfg(), 100)
 
 
 def test_apply_max_target_seqs_matches_reference(spark):
@@ -387,14 +383,15 @@ def test_flagship_tail_plan_single_exchange(spark):
 def test_seed_prune_value_identical_on_fixtures(spark, hits):
     """r11 runtime filter: seed_prune must never change the hit table
     (one-sided pruning — a pair with any exact shared word always
-    survives). Same fixtures, same cfg, pruned vs unpruned."""
+    survives). Same fixtures, same cfg: the ``hits`` fixture runs with
+    the default seed_prune=True, the reference with it off."""
     cfg = BlastConfig(evalue=1e-6, block_size=400, word_size=11)
-    pruned = run_search(_queries(spark), _subjects(spark), cfg,
-                        seed_prune=True)
+    unpruned = run_search(_queries(spark), _subjects(spark), cfg,
+                          seed_prune=False)
     cols = ["qid", "sid", "qstart", "qend", "sstart", "send",
             "bitscore", "evalue"]
-    got = sorted(tuple(r) for r in pruned.select(*cols).collect())
-    want = sorted(tuple(r) for r in hits.select(*cols).collect())
+    got = sorted(tuple(r) for r in hits.select(*cols).collect())
+    want = sorted(tuple(r) for r in unpruned.select(*cols).collect())
     assert got == want and len(got) > 0
 
 
@@ -436,7 +433,7 @@ def test_seed_prune_skips_disjoint_volume(spark, tmp_path):
     assert ("vol.at", 0) in kept
     assert all(p != "vol.gc" for p, _ in kept), kept  # volume skipped
 
-    base = run_search(queries, subs, cfg)
+    base = run_search(queries, subs, cfg, seed_prune=False)
     pruned = run_search(queries, subs, cfg, seed_prune=True)
     cols = ["qid", "sid", "qstart", "qend", "bitscore"]
     assert sorted(map(tuple, pruned.select(*cols).collect())) \
@@ -463,7 +460,7 @@ def test_seed_prune_keeps_minus_strand_only_block(spark):
         "sid string, defline string, db_part string, seq string, "
         "length int")
     cfg = BlastConfig(evalue=1e-3, block_size=400, word_size=11)
-    base = run_search(queries, subs, cfg)
+    base = run_search(queries, subs, cfg, seed_prune=False)
     pruned = run_search(queries, subs, cfg, seed_prune=True)
     cols = ["qid", "sid", "qstart", "qend", "sstart", "send",
             "bitscore"]
