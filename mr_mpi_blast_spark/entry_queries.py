@@ -7,6 +7,7 @@ file:line it re-expresses.
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import math
@@ -1617,7 +1618,7 @@ def q_ann_ivf_topk(spark, sf_dir):
 # Trained-centroid artifact: the engine trains centroids (seeded
 # numpy k-means, deterministic) and persists them as ONE parquet file
 # the static oracle SQL replays the downstream relational computation
-# from — the blast_tail architecture (engine materializes an
+# from — the kernel tails' architecture (engine materializes an
 # intermediate, the oracle reads it back). Because the oracle SQL is
 # a static string, it reads a FIXED symlink; the engine publishes a
 # content-keyed real file in the artifact store and repoints the link
@@ -2008,7 +2009,6 @@ def _blast_raw_path(sf_dir: str, cfg=None, qmod: int = 25,
     stale raw hits to a fresh process. Scale factors, configs and
     kernel versions persist side by side, so a warmup at sf0.001 never
     evicts the sf0.1 raw hits — the round-4 bench's cold-run trap."""
-    import dataclasses
     from mr_mpi_blast_spark.kernel.builtin import KERNEL_SPEC
     if cfg is None:
         cfg = _blast_cfg()
@@ -2058,67 +2058,150 @@ def _blast_raw(spark, sf_dir, cfg=None, qmod: int = 25,
             int(meta["dbsize"]), int(meta["n_seqs"]))
 
 
-# The raw kernel output is persisted under this fixed link (repointed
-# atomically per scale factor by _blast_raw) so the DuckDB oracles —
-# the flagship's production-tail replay below and blast_tail's
-# log-space twin — can re-derive the relational tail from the SAME
-# rows. RAW_HITS is all integers/strings — the persist is lossless,
-# and every float is derived from identical integers on both engines
+# The raw kernel output of each config is persisted under a fixed
+# link (repointed atomically per scale factor by _blast_raw) so its
+# DuckDB oracle re-derives the relational tail from the SAME rows.
+# RAW_HITS is all integers/strings — the persist is lossless, and
+# every float is derived from identical integers on both engines
 # (libm ulp differences are absorbed by floor-form 1e-4 rounding).
 _BLAST_RAW_PATH = "/tmp/spark_graft_blast_raw_current.parquet"
+_BLAST_RAW_GAPPED_PATH = "/tmp/spark_graft_blast_raw_gapped_current.parquet"
+_BLAST_RAW_NUCL_PATH = "/tmp/spark_graft_blast_raw_nucl_current.parquet"
 
-# blastp scoring constants shared verbatim with the Spark side
-# (kernel/builtin.py KA_BLOSUM62) so both engines derive identical
-# statistics from the persisted integer scores.
-from mr_mpi_blast_spark.kernel.builtin import KA_BLOSUM62 as _KAP  # noqa: E402
 
-_LAM, _KAP_K, _KAP_H = _KAP
+def _blast_gapped_cfg():
+    return dataclasses.replace(_blast_cfg(), gapped=True)
+
+
+# Gapped blastn — the reference's actual DEFAULT mode (nucleotide
+# search, gapped unless told otherwise, doc/USERGUIDE:46-50). The
+# documents corpus is text, so a deterministic LENGTH-PRESERVING
+# per-char fold maps it onto the DNA alphabet (codepoint mod 4 over
+# printable ASCII via translate — pure JVM expression, no UDF): length
+# preservation keeps dbsize == sum(length(text)), so the shared tail
+# oracle applies verbatim with the blastn (2,-3) reward/penalty +
+# (5,2) gap-cost Karlin-Altschul row — the corrected KA_GAPPED_NUCL
+# entry (blast_stat.c blastn_values_2_3, validated by kernel/ka_sim).
+# Near-duplicate documents fold to near-duplicate DNA, so both-strand
+# seeding, gapped Gotoh extension, and strand coordinate swap are all
+# genuinely exercised.
+_DNA_FROM = "".join(chr(i) for i in range(32, 127))
+_DNA_TO = "".join("ACGT"[i % 4] for i in range(32, 127))
+
+
+def _blast_nucl_cfg():
+    from mr_mpi_blast_spark.config import BlastConfig
+    # word_size 16 (not blastn's 11): the mod-4 fold of English text is
+    # far from uniform over ACGT, so 11-mers collide at random much
+    # more often than on real DNA; 16 keeps seeding selective while
+    # near-duplicate documents still share long exact runs
+    return BlastConfig(task="blastn", word_size=16, reward=2, penalty=-3,
+                       gapped=True, evalue=1e-3, block_size=20000,
+                       num_hit_cutoff=10, max_kmer_hits=128)
+
+
+def _blast_nucl_inputs(spark, sf_dir, qmod: int = 100):
+    """_blast_inputs' nucleotide variant: same query subset and
+    bucketing (shared projection), seq folded onto ACGT
+    (length-preserving translate). Every SECOND query is the reverse
+    complement of its document: a deterministic fold can never produce
+    natural minus-strand homology, and without it the strand-swap
+    projection (P4) would go value-unchecked — the revcomp'd queries
+    can only hit their near-duplicates on the minus strand."""
+    dna = F.translate(F.col("text"), _DNA_FROM, _DNA_TO)
+    qseq = F.when((F.col("doc_id") / qmod).cast("long") % 2 == 1,
+                  F.reverse(F.translate(dna, "ACGT", "TGCA"))).otherwise(dna)
+    return _blast_inputs(spark, sf_dir, qmod, seq_expr=dna, qseq_expr=qseq)
+
+
+def _blast_hits(spark, sf_dir, cfg, qmod: int = 25,
+                link: str = _BLAST_RAW_PATH, variant: str = "text"):
+    """The shipped tail (plans.pipeline.search_from_raw under ``cfg``)
+    over the kernel's persisted raw hits, full HITS schema. The kernel
+    runs, and its raw store is keyed, with ``cfg`` minus the F2 cap:
+    the cap is a tail-only field, so a capped config shares its
+    uncapped twin's raw hits (one kernel run)."""
+    from mr_mpi_blast_spark.plans.pipeline import search_from_raw
+
+    raw, dbsize, n_seqs = _blast_raw(
+        spark, sf_dir, dataclasses.replace(cfg, max_target_seqs=0), qmod,
+        link, variant)
+    return search_from_raw(raw, dbsize, n_seqs, cfg)
 
 
 def _blast_pipeline_full(spark, sf_dir):
     """The production flagship, full schema: documents-as-sequences run
     through blocks -> per-DB-partition kernel -> projections -> e-value
     filter -> per-query top-k. Every 25th document is a query; all
-    documents form the database, bucketed into 4 partitions. The
-    kernel's raw output is persisted and shared with blast_tail (one
-    kernel run per scale factor per process — the reference's
-    hit-files-then-convert architecture). Raw-float columns (evalue,
-    bitscore, ident) — downstream sinks and the golden-hash test
-    consume this form; the registered blast_pipeline query projects it
-    into the rounded cross-engine basis for the value oracle."""
-    from mr_mpi_blast_spark.plans.pipeline import search_from_raw
-
-    raw, dbsize, n_seqs = _blast_raw(spark, sf_dir)
-    return search_from_raw(raw, dbsize, n_seqs, _blast_cfg())
+    documents form the database, bucketed into 4 partitions. Raw-float
+    columns (evalue, bitscore, ident) — downstream sinks and the
+    golden-hash test consume this form; the registered blast_pipeline
+    query projects it into the rounded cross-engine basis."""
+    return _blast_hits(spark, sf_dir, _blast_cfg())
 
 
-def _pipe_oracle_sql() -> str:
-    """DuckDB replay of the PRODUCTION tail (plans.pipeline.search_from_raw
-    over the persisted raw hits): functions/projections.py project_hits'
-    exact expression shapes — ident as (i/a)*100, bitscore with the
-    DRIVER-computed ln(K)/ln(2) literals project_hits folds in, evalue
-    as m_eff*n_eff*2^-bit — then the raw-double F1 filter (evalue <=
-    1e-3, mrblast.cpp:1043) and operators/topk.hit_order's six-key
-    ranking. Distinct from _tail_oracle_sql (blast_tail), which checks
-    a log-space twin; THIS one replays the shipped code path. All
+def _round_hits(full):
+    """HITS projected into a basis that hashes equal across
+    engines: ident/bitscore/log10-evalue floor-rounded at 1e-4, counts
+    as longs. log10_evalue clamps at -280.0 (well above double
+    underflow) so a subnormal-vs-zero pow divergence at extreme scores
+    can never split the engines."""
+    def r4(c):
+        return F.floor(c * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)
+
+    return full.select(
+        "qid", "sid",
+        r4(F.col("ident")).alias("ident"),
+        *[F.col(c).cast("long").alias(c)
+          for c in ("align_len", "mismatches", "gaps",
+                    "qstart", "qend", "sstart", "send")],
+        F.when(F.col("evalue") > F.lit(1e-280),
+               r4(F.log10(F.col("evalue"))))
+         .otherwise(F.lit(-280.0)).alias("log10_evalue"),
+        r4(F.col("bitscore")).alias("bitscore"))
+
+
+def _blast_oracle_sql(link: str, cfg) -> str:
+    """DuckDB replay of plans.pipeline.search_from_raw under ``cfg``
+    over the raw hits at ``link``, in _round_hits' basis — the one
+    oracle of every kernel catalog query. project_hits' exact
+    expression shapes: ident as (i/a)*100, bitscore with the
+    Python-computed ln(K)/ln(2) literals project_hits folds in, evalue
+    as m_eff*n_eff*2^-bit with the length adjustment; (lambda, K, H)
+    from kernel.builtin.scoring_params(cfg). Then the raw-double F1
+    filter (evalue <= cfg.evalue, mrblast.cpp:1043), the F2 subject
+    cap when cfg.max_target_seqs > 0 (apply_max_target_seqs: best HSP
+    per subject by min(evalue, -bitscore), subjects ranked evalue asc,
+    bitscore desc, sid; every HSP of a kept subject stays) and
+    operators/topk.hit_order's six-key top cfg.num_hit_cutoff. All
     tiebreak doubles (identr) are pure IEEE mul/div of integers —
     bit-identical across engines; libm ulp noise lives only in
-    ln/pow/log10, absorbed by the floor-1e-4 output rounding and
-    impotent for ordering (evalue/bit are strictly monotone in the
-    integer score within a qid). log10_evalue clamps at -280.0 (well
-    above double underflow) so a subnormal-vs-zero pow divergence at
-    extreme scores can never split the engines; the clamp is continuous
-    (log10 -> -280.0 exactly at the boundary after rounding)."""
+    ln/pow/log10, absorbed by the floor-1e-4 output rounding."""
+    from mr_mpi_blast_spark.kernel.builtin import scoring_params
+
     # DuckDB parses short numeric literals as DECIMAL; CAST every
     # constant to DOUBLE so the arithmetic is IEEE binary64 end to end
     # (matching Spark's literal doubles exactly)
-    lam = f"CAST({_LAM!r} AS DOUBLE)"
-    kk = f"CAST({_KAP_K!r} AS DOUBLE)"
-    hh = f"CAST({_KAP_H!r} AS DOUBLE)"
-    lnk = f"CAST({math.log(_KAP_K)!r} AS DOUBLE)"
-    ln2 = f"CAST({math.log(2.0)!r} AS DOUBLE)"
+    def dbl(v):
+        return f"CAST({float(v)!r} AS DOUBLE)"
+
+    lam, kappa, h = scoring_params(cfg)
+    ell = f"floor(ln({dbl(kappa)} * qlen_d * db.dbsize) / {dbl(h)})"
+    cap, src = cfg.max_target_seqs, "filt"
+    cap_sql = ""
+    if cap > 0:
+        src = "capped"
+        cap_sql = f"""
+best AS (SELECT qid, sid, min(struct_pack(e := evalue, nb := -bit)) AS b
+         FROM filt GROUP BY qid, sid),
+subj AS (SELECT qid, sid FROM (
+  SELECT qid, sid, row_number() OVER (PARTITION BY qid
+    ORDER BY b.e ASC, b.nb ASC, sid ASC) AS sr FROM best) WHERE sr <= {cap}),
+capped AS (SELECT f.* FROM filt f SEMI JOIN subj USING (qid, sid)),"""
+    top = (f"WHERE r <= {cfg.num_hit_cutoff}" if cfg.num_hit_cutoff > 0
+           else "")
     return f"""
-WITH raw AS (SELECT * FROM read_parquet('{_BLAST_RAW_PATH}/*.parquet')),
+WITH raw AS (SELECT * FROM read_parquet('{link}/*.parquet')),
 db AS (SELECT CAST(sum(length(text)) AS DOUBLE) AS dbsize,
               CAST(count(*) AS DOUBLE) AS nseqs FROM documents),
 proj AS (
@@ -2129,21 +2212,20 @@ proj AS (
          qstart0 + 1 AS qstart, qend0 + 1 AS qend,
          CASE WHEN qstrand != sstrand THEN send0 + 1 ELSE sstart0 + 1 END AS sstart,
          CASE WHEN qstrand != sstrand THEN sstart0 + 1 ELSE send0 + 1 END AS send,
-         ({lam} * score - {lnk}) / {ln2} AS bit,
+         ({dbl(lam)} * score - {dbl(math.log(kappa))}) / {dbl(math.log(2.0))} AS bit,
          CAST(qlen AS DOUBLE) AS qlen_d
   FROM raw),
 adj AS (
   SELECT p.*,
-         greatest(qlen_d - floor(ln({kk} * qlen_d * db.dbsize) / {hh}), 1.0) AS m_eff,
-         greatest(db.dbsize
-                  - db.nseqs * floor(ln({kk} * qlen_d * db.dbsize) / {hh}), 1.0) AS n_eff
+         greatest(qlen_d - {ell}, 1.0) AS m_eff,
+         greatest(db.dbsize - db.nseqs * {ell}, 1.0) AS n_eff
   FROM proj p, db),
 scored AS (SELECT a.*, m_eff * n_eff * pow(2.0, -bit) AS evalue FROM adj a),
-filt AS (SELECT * FROM scored WHERE evalue <= 1e-3),
+filt AS (SELECT * FROM scored WHERE evalue <= {dbl(cfg.evalue)}),{cap_sql}
 ranked AS (
   SELECT *, row_number() OVER (PARTITION BY qid
     ORDER BY evalue ASC, bit DESC, identr DESC, sid ASC, qstart ASC, sstart ASC) AS r
-  FROM filt)
+  FROM {src})
 SELECT qid, sid,
        floor(identr * 1e4 + 0.5) / 1e4 AS ident,
        CAST(align_len AS BIGINT) AS align_len,
@@ -2155,43 +2237,55 @@ SELECT qid, sid,
             THEN floor(log10(evalue) * 1e4 + 0.5) / 1e4
             ELSE -280.0 END AS log10_evalue,
        floor(bit * 1e4 + 0.5) / 1e4 AS bitscore
-FROM ranked WHERE r <= 10
+FROM ranked {top}
 """
 
 
-@query("blast_pipeline", _pipe_oracle_sql())
-def q_blast_pipeline(spark, sf_dir):
-    """The flagship, value-oracled end-to-end from the persisted raw
-    hits: the PRODUCTION composition (plans.pipeline.search_from_raw =
-    project_hits -> F1 raw-evalue filter -> top_hits/hit_order), with
-    the float outputs projected into the rounded basis the driver can
-    hash across engines (ident/bitscore/log10-evalue at 1e-4, counts
-    as longs). The oracle replays the same derivation in DuckDB —
-    unlike blast_tail's log-space twin, this checks the shipped tail
-    path itself, so a regression in project_hits, the F1 threshold
-    direction, the F2/O3 ordering keys, or top_hits' cutoff fails the
-    driver row, not just in-repo tests. The unrounded production frame
-    stays available as _blast_pipeline_full (golden-hash pinned in
-    tests/test_kernel_pipeline.py)."""
-    full = _blast_pipeline_full(spark, sf_dir)
+def _kernel_query(name: str, cfg, qmod: int = 25,
+                  link: str = _BLAST_RAW_PATH, variant: str = "text"):
+    """Register one kernel catalog query: _blast_hits under ``cfg``,
+    rounded by _round_hits, oracle-checked by _blast_oracle_sql of the
+    same ``cfg`` — one config drives both engines."""
+    def run(spark, sf_dir):
+        return _round_hits(_blast_hits(spark, sf_dir, cfg, qmod, link,
+                                       variant))
+    return query(name, _blast_oracle_sql(link, cfg))(run)
 
-    def r4(c):
-        return F.floor(c * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)
 
-    return full.select(
-        "qid", "sid",
-        r4(F.col("ident")).alias("ident"),
-        F.col("align_len").cast("long").alias("align_len"),
-        F.col("mismatches").cast("long").alias("mismatches"),
-        F.col("gaps").cast("long").alias("gaps"),
-        F.col("qstart").cast("long").alias("qstart"),
-        F.col("qend").cast("long").alias("qend"),
-        F.col("sstart").cast("long").alias("sstart"),
-        F.col("send").cast("long").alias("send"),
-        F.when(F.col("evalue") > F.lit(1e-280),
-               r4(F.log10(F.col("evalue"))))
-         .otherwise(F.lit(-280.0)).alias("log10_evalue"),
-        r4(F.col("bitscore")).alias("bitscore"))
+# The flagship, value-oracled end-to-end from the persisted raw hits
+# through the PRODUCTION tail, so a regression in project_hits, the F1
+# threshold direction, the O3 ordering keys or top_hits' cutoff fails
+# the recorded oracle row, not just in-repo tests. Its plan (one qid
+# exchange over a map-side WindowGroupLimit) is pinned in
+# tests/test_kernel_pipeline.py.
+q_blast_pipeline = _kernel_query("blast_pipeline", _blast_cfg())
+
+# Gapped blastp: same flagship shape but gapped=True (the reference's
+# actual default — NCBI BLAST is gapped unless told otherwise,
+# doc/USERGUIDE:47-50), scored with the BLOSUM62 (11,1) gapped row.
+# The query subset is bounded (every 100th document) because the
+# gapped DP makes this a kernel-heavy run; it is CORRECTNESS-ONLY in
+# bench.py — its value is the hash-checked row over rows the GAPPED
+# kernel produced (nonzero gaps, gap-aware mismatches, (11,1)
+# e-values). Shares staged volumes and subject indexes with the
+# flagship; only the raw output is config-keyed.
+_kernel_query("blast_gapped_tail", _blast_gapped_cfg(), qmod=100,
+              link=_BLAST_RAW_GAPPED_PATH)
+
+# Gapped blastn over the DNA-folded corpus (mrblast.cpp:929 option
+# contract, doc/USERGUIDE:46-66): both-strand seeding, (2,-3) scoring,
+# (5,2) gapped Gotoh and the KA_GAPPED_NUCL row. Minus-strand hits
+# value-check the P4 qstrand != sstrand coordinate swap, which the
+# blastp flagship cannot.
+_kernel_query("blast_gapped_nucl_tail", _blast_nucl_cfg(), qmod=100,
+              link=_BLAST_RAW_NUCL_PATH, variant="dna")
+
+# F2 (-max_target_seqs 3, doc/USERGUIDE:48-50,357-371) over the
+# flagship's raw hits (zero extra kernel cost), so the cap is the ONLY
+# difference from blast_pipeline — a wrong cap breaks the hash even
+# though every surviving row also appears there.
+_kernel_query("blast_capped_tail",
+              dataclasses.replace(_blast_cfg(), max_target_seqs=3))
 
 
 @query("salted_part_revenue", """
@@ -2488,255 +2582,6 @@ def q_multivalue_sort(spark, sf_dir):
             .agg(F.array_join(F.sort_array(F.collect_list("o_orderkey")), ",")
                  .alias("okeys"),
                  F.count(F.lit(1)).alias("n")))
-
-
-# (_BLAST_RAW_PATH and the KA_BLOSUM62 constants are defined above
-# q_blast_pipeline, which shares them.)
-
-def _tail_oracle_sql(raw_path: str, lam: float, kk: float,
-                     hh: float, max_target_seqs: int | None = None) -> str:
-    """The relational-tail oracle SQL, templated on the persisted raw
-    path and the Karlin-Altschul constants so the flagship (ungapped
-    BLOSUM62) and gapped (BLOSUM62 11,1 / blastn 2,-3 5,2) pipelines
-    share one derivation verbatim. ``max_target_seqs`` inserts the F2
-    subject cap between the e-value filter and the per-query ranking:
-    subjects ranked per query by their best HSP (score desc == evalue
-    asc within a query, sid tiebreak), every HSP of a surviving
-    subject kept — the BLAST option contract (doc/USERGUIDE:48-50)."""
-    cap_sql = "" if max_target_seqs is None else f"""
-best AS (SELECT qid, sid, max(score) AS best_score FROM filt GROUP BY qid, sid),
-subj AS (SELECT qid, sid FROM (
-  SELECT qid, sid, row_number() OVER (PARTITION BY qid
-    ORDER BY best_score DESC, sid) AS sr FROM best) WHERE sr <= {max_target_seqs}),
-capped AS (SELECT f.* FROM filt f JOIN subj USING (qid, sid)),"""
-    rank_src = "filt" if max_target_seqs is None else "capped"
-    return f"""
-WITH raw AS (SELECT * FROM read_parquet('{raw_path}/*.parquet')),
-db AS (SELECT CAST(sum(length(text)) AS DOUBLE) AS dbsize,
-              CAST(count(*) AS DOUBLE) AS nseqs FROM documents),
-proj AS (
-  SELECT qid, sid,
-         CASE WHEN align_len > 0 THEN ident_count * 100.0 / align_len ELSE 0.0 END AS identr,
-         align_len, align_len - ident_count - gaps AS mismatches, gaps,
-         qstart0 + 1 AS qstart, qend0 + 1 AS qend,
-         CASE WHEN qstrand != sstrand THEN send0 + 1 ELSE sstart0 + 1 END AS sstart,
-         CASE WHEN qstrand != sstrand THEN sstart0 + 1 ELSE send0 + 1 END AS send,
-         ({lam} * score - ln({kk})) / ln(2.0) AS bit,
-         score, qstart0, send0, sstart0, qend0, ident_count, qlen
-  FROM raw),
-adj AS (
-  SELECT p.*,
-         greatest(CAST(qlen AS DOUBLE)
-                  - floor(ln({kk} * qlen * db.dbsize) / {hh}), 1.0) AS m_eff,
-         greatest(db.dbsize
-                  - db.nseqs * floor(ln({kk} * qlen * db.dbsize) / {hh}), 1.0) AS n_eff
-  FROM proj p, db),
-scored AS (
-  SELECT a.*, floor((log10(m_eff) + log10(n_eff)
-                     - bit * log10(2.0)) * 1e4 + 0.5) / 1e4 AS log10_evalue
-  FROM adj a),
-filt AS (SELECT * FROM scored WHERE log10_evalue <= -3.0),{cap_sql}
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY qid
-    ORDER BY score DESC, sid, qstart0, send0, sstart0, qend0, ident_count) AS rank
-  FROM {rank_src})
-SELECT qid, sid,
-       floor(identr * 1e4 + 0.5) / 1e4 AS ident,
-       CAST(align_len AS BIGINT) AS align_len,
-       CAST(mismatches AS BIGINT) AS mismatches,
-       CAST(gaps AS BIGINT) AS gaps,
-       CAST(qstart AS BIGINT) AS qstart, CAST(qend AS BIGINT) AS qend,
-       CAST(sstart AS BIGINT) AS sstart, CAST(send AS BIGINT) AS send,
-       log10_evalue,
-       floor(bit * 1e4 + 0.5) / 1e4 AS bitscore,
-       CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 10
-"""
-
-
-_BLAST_TAIL_ORACLE = _tail_oracle_sql(_BLAST_RAW_PATH, _LAM, _KAP_K, _KAP_H)
-
-def _tail_from_raw(rawdf, dbsize, n_seqs, lam, kk, hh,
-                   max_target_seqs: int | None = None):
-    """Shared Spark-side relational tail (P3-P9 + F1 + O2/O3, plus the
-    F2 subject cap when ``max_target_seqs`` is set) over a persisted
-    RAW_HITS frame — the exact twin of _tail_oracle_sql, parameterized
-    the same way on the Karlin-Altschul constants."""
-
-    def r4(c):
-        return F.floor(c * F.lit(1e4) + F.lit(0.5)) / F.lit(1e4)
-
-    qlen_d = F.col("qlen").cast("double")
-    bit = (F.lit(lam) * F.col("score") - F.log(F.lit(kk))) / F.log(F.lit(2.0))
-    ell = F.floor(F.log(F.lit(kk) * qlen_d * F.lit(float(dbsize)))
-                  / F.lit(hh))
-    m_eff = F.greatest(qlen_d - ell, F.lit(1.0))
-    n_eff = F.greatest(F.lit(float(dbsize)) - F.lit(float(n_seqs)) * ell,
-                       F.lit(1.0))
-    log10e = r4(F.log10(m_eff) + F.log10(n_eff) - bit * F.log10(F.lit(2.0)))
-    strands_differ = F.col("qstrand") != F.col("sstrand")
-    proj = rawdf.select(
-        "qid", "sid",
-        r4(F.when(F.col("align_len") > 0,
-                  F.col("ident_count") * 100.0 / F.col("align_len"))
-           .otherwise(F.lit(0.0))).alias("ident"),
-        F.col("align_len").cast("long").alias("align_len"),
-        (F.col("align_len") - F.col("ident_count") - F.col("gaps"))
-        .cast("long").alias("mismatches"),
-        F.col("gaps").cast("long").alias("gaps"),
-        (F.col("qstart0") + 1).cast("long").alias("qstart"),
-        (F.col("qend0") + 1).cast("long").alias("qend"),
-        F.when(strands_differ, F.col("send0") + 1)
-         .otherwise(F.col("sstart0") + 1).cast("long").alias("sstart"),
-        F.when(strands_differ, F.col("sstart0") + 1)
-         .otherwise(F.col("send0") + 1).cast("long").alias("send"),
-        log10e.alias("log10_evalue"),
-        r4(bit).alias("bitscore"),
-        "score", "qstart0", "send0", "sstart0", "qend0", "ident_count")
-    filt = proj.filter(F.col("log10_evalue") <= -3.0)
-    if max_target_seqs is not None:
-        # F2 through the PRODUCTION implementation (the oracle then
-        # checks the shipped cap path, not a local twin): ranking on
-        # log10_evalue asc == score desc within a query, matching the
-        # oracle SQL's best_score DESC
-        from mr_mpi_blast_spark.plans.pipeline import apply_max_target_seqs
-        filt = apply_max_target_seqs(filt, max_target_seqs,
-                                     evalue_col="log10_evalue")
-    w = Window.partitionBy("qid").orderBy(
-        F.col("score").desc(), F.col("sid").asc(), F.col("qstart0").asc(),
-        F.col("send0").asc(), F.col("sstart0").asc(), F.col("qend0").asc(),
-        F.col("ident_count").asc())
-    return (filt.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= 10)
-            .select("qid", "sid", "ident", "align_len", "mismatches", "gaps",
-                    "qstart", "qend", "sstart", "send", "log10_evalue",
-                    "bitscore", "rank"))
-
-
-@query("blast_tail", _BLAST_TAIL_ORACLE)
-def q_blast_tail(spark, sf_dir):
-    """The pipeline's relational tail (P3-P9 + F1 + O2/O3) oracle-
-    checked end-to-end: the kernel runs once, its raw output (pure
-    integers) is persisted, and BOTH engines derive projections,
-    Karlin-Altschul statistics with length adjustment
-    (mrblast.cpp:1039; blastp BLOSUM62 constants KA_BLOSUM62), the
-    e-value threshold, and the per-query top-10 from the same rows.
-    E-values are compared in log10 space (magnitude-independent
-    rounding); ranking uses integer keys only (score desc == evalue
-    asc within a query, since qlen and the length adjustment are
-    constant per qid), so cross-engine order is exact."""
-    rawdf, dbsize, n_seqs = _blast_raw(spark, sf_dir)
-    return _tail_from_raw(rawdf, dbsize, n_seqs, _LAM, _KAP_K, _KAP_H)
-
-
-# Gapped pipeline coverage: same flagship shape but gapped=True (the
-# reference's actual default — NCBI BLAST is gapped unless told
-# otherwise, doc/USERGUIDE:47-50), with BLOSUM62 (11,1) gapped
-# Karlin-Altschul statistics on both engines. The query subset is
-# bounded (every 100th document) because the gapped DP makes this a
-# kernel-heavy run; it is CORRECTNESS-ONLY in bench.py — its value is
-# the hash-checked oracle row over rows the GAPPED kernel produced
-# (nonzero gaps column, gap-aware mismatches, (11,1) e-values), the
-# evidence the ungapped flagship cannot provide.
-_BLAST_RAW_GAPPED_PATH = "/tmp/spark_graft_blast_raw_gapped_current.parquet"
-from mr_mpi_blast_spark.kernel.builtin import KA_GAPPED_BLOSUM62  # noqa: E402
-_GLAM, _GK, _GH = KA_GAPPED_BLOSUM62[(11, 1)]
-
-
-def _blast_gapped_cfg():
-    import dataclasses
-    return dataclasses.replace(_blast_cfg(), gapped=True)
-
-
-@query("blast_gapped_tail", _tail_oracle_sql(_BLAST_RAW_GAPPED_PATH,
-                                             _GLAM, _GK, _GH))
-def q_blast_gapped_tail(spark, sf_dir):
-    """blast_tail's gapped twin: the gapped kernel (batched Gotoh
-    stage-2) persists its raw hits under a second fixed link and both
-    engines replay the identical tail derivation with the gapped
-    (11,1) constants. Shares staged volumes and disk-cached subject
-    indexes with the flagship; only the raw output is config-keyed."""
-    rawdf, dbsize, n_seqs = _blast_raw(
-        spark, sf_dir, cfg=_blast_gapped_cfg(), qmod=100,
-        link=_BLAST_RAW_GAPPED_PATH)
-    return _tail_from_raw(rawdf, dbsize, n_seqs, _GLAM, _GK, _GH)
-
-
-# Gapped blastn — the reference's actual DEFAULT mode (nucleotide
-# search, gapped unless told otherwise, doc/USERGUIDE:46-50). The
-# documents corpus is text, so a deterministic LENGTH-PRESERVING
-# per-char fold maps it onto the DNA alphabet (codepoint mod 4 over
-# printable ASCII via translate — pure JVM expression, no UDF): length
-# preservation keeps dbsize == sum(length(text)), so the shared tail
-# oracle applies verbatim with the blastn (2,-3) reward/penalty +
-# (5,2) gap-cost Karlin-Altschul row — the corrected KA_GAPPED_NUCL
-# entry (blast_stat.c blastn_values_2_3, validated by kernel/ka_sim).
-# Near-duplicate documents fold to near-duplicate DNA, so both-strand
-# seeding, gapped Gotoh extension, and strand coordinate swap are all
-# genuinely exercised.
-_BLAST_RAW_NUCL_PATH = "/tmp/spark_graft_blast_raw_nucl_current.parquet"
-from mr_mpi_blast_spark.kernel.builtin import KA_GAPPED_NUCL as _KAN  # noqa: E402
-_NLAM, _NK, _NH = _KAN[(2, -3, 5, 2)]
-
-_DNA_FROM = "".join(chr(i) for i in range(32, 127))
-_DNA_TO = "".join("ACGT"[i % 4] for i in range(32, 127))
-
-
-def _blast_nucl_cfg():
-    from mr_mpi_blast_spark.config import BlastConfig
-    # word_size 16 (not blastn's 11): the mod-4 fold of English text is
-    # far from uniform over ACGT, so 11-mers collide at random much
-    # more often than on real DNA; 16 keeps seeding selective while
-    # near-duplicate documents still share long exact runs
-    return BlastConfig(task="blastn", word_size=16, reward=2, penalty=-3,
-                       gapped=True, evalue=1e-3, block_size=20000,
-                       num_hit_cutoff=10, max_kmer_hits=128)
-
-
-def _blast_nucl_inputs(spark, sf_dir, qmod: int = 100):
-    """_blast_inputs' nucleotide variant: same query subset and
-    bucketing (shared projection), seq folded onto ACGT
-    (length-preserving translate). Every SECOND query is the reverse
-    complement of its document: a deterministic fold can never produce
-    natural minus-strand homology, and without it the strand-swap
-    projection (P4) would go value-unchecked — the revcomp'd queries
-    can only hit their near-duplicates on the minus strand."""
-    dna = F.translate(F.col("text"), _DNA_FROM, _DNA_TO)
-    qseq = F.when((F.col("doc_id") / qmod).cast("long") % 2 == 1,
-                  F.reverse(F.translate(dna, "ACGT", "TGCA"))).otherwise(dna)
-    return _blast_inputs(spark, sf_dir, qmod, seq_expr=dna, qseq_expr=qseq)
-
-
-@query("blast_gapped_nucl_tail", _tail_oracle_sql(_BLAST_RAW_NUCL_PATH,
-                                                  _NLAM, _NK, _NH))
-def q_blast_gapped_nucl_tail(spark, sf_dir):
-    """blast_tail's gapped-NUCLEOTIDE twin — the reference's default
-    operating mode (gapped blastn, mrblast.cpp:929 option contract
-    doc/USERGUIDE:46-66): both-strand seeding over the DNA-folded
-    corpus, (2,-3) scoring, gapped Gotoh stage with (5,2) costs, and
-    the KA_GAPPED_NUCL statistics row on both engines. Strand swap
-    (P4) is value-checked here in a way the blastp flagship cannot:
-    minus-strand hits flow through the qstrand != sstrand coordinate
-    exchange in the shared tail derivation."""
-    rawdf, dbsize, n_seqs = _blast_raw(
-        spark, sf_dir, cfg=_blast_nucl_cfg(), qmod=100,
-        link=_BLAST_RAW_NUCL_PATH, variant="dna")
-    return _tail_from_raw(rawdf, dbsize, n_seqs, _NLAM, _NK, _NH)
-
-
-@query("blast_capped_tail", _tail_oracle_sql(_BLAST_RAW_PATH, _LAM, _KAP_K,
-                                             _KAP_H, max_target_seqs=3))
-def q_blast_capped_tail(spark, sf_dir):
-    """F2 value oracle: -max_target_seqs as both engines rank it —
-    subjects ordered per query by best-HSP score (== evalue asc
-    within a query), every HSP of the top 3 subjects kept, then the
-    usual per-query top-10 (doc/USERGUIDE:48-50,357-371). Shares the
-    flagship's persisted raw hits (zero extra kernel cost) so the cap
-    is the ONLY difference from blast_tail — a wrong cap breaks the
-    hash even though every surviving row also appears there."""
-    rawdf, dbsize, n_seqs = _blast_raw(spark, sf_dir)
-    return _tail_from_raw(rawdf, dbsize, n_seqs, _LAM, _KAP_K, _KAP_H,
-                          max_target_seqs=3)
 
 
 _PII_EMAIL = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
@@ -5526,8 +5371,10 @@ def q_run_summary(spark, sf_dir):
     log_dir = _store_path(_src_key(sf_dir, "documents", "runlog"))
     shutil.rmtree(log_dir, ignore_errors=True)
     os.makedirs(log_dir, exist_ok=True)
-    cfg = _blast_cfg()
-    run_search(queries_df, subjects, cfg, log_dir=log_dir) \
+    # the database is content-keyed: staged once, not into a fresh
+    # dir per call that nothing removes
+    run_search(queries_df, subjects, _blast_cfg(), log_dir=log_dir,
+               cache_key=_src_key(sf_dir, "documents", "runlog_db")) \
         .write.format("noop").mode("overwrite").save()
     per_rank = run_summary(read_run_logs(spark, log_dir))
     return per_rank.agg(
@@ -5552,16 +5399,17 @@ def q_run_summary(spark, sf_dir):
 #
 # Composition contract (pinned by tests/test_facade_oracles.py::
 # test_recorded_window_contract): exactly 50 names, all value-oracled
-# (run_summary's rows-only check would waste a slot), the five kernel
+# (run_summary's rows-only check would waste a slot), the four kernel
 # tails always present (the reference-parity flagships re-record every
 # round by charter).
 # ---------------------------------------------------------------------------
 
 RECORDED_WINDOW = [
     # kernel tails: the reference's own operator surface, re-recorded
-    # every round by charter
-    "blast_pipeline", "blast_tail", "blast_gapped_tail",
-    "blast_gapped_nucl_tail", "blast_capped_tail",
+    # every round by charter; all four run the shipped
+    # search_from_raw under their own config
+    "blast_pipeline", "blast_gapped_tail", "blast_gapped_nucl_tail",
+    "blast_capped_tail",
     # r11 verdict item 1: the ONE oracled query never driver-recorded
     # (registered after the r11 window froze) — recording it closes
     # the evidence ledger: every value-oracled query then has at
@@ -5599,6 +5447,10 @@ RECORDED_WINDOW = [
     # global sketch (displacing dedup_substr_remove, r10 evidence
     # persists)
     "orders_hll_by_status",
+    # the slot of the retired blast_tail (it returned blast_pipeline's
+    # rows once both ran the shipped tail): the value-oracled SemDeDup
+    # query displaced in r12
+    "embedding_semdedup",
     # dropped vs r11 (recorded evidence persists in CORRECTNESS_r11):
     # the r11 window's sketch/layout/format/text/r3-facade slots —
     # all recorded green in r11.

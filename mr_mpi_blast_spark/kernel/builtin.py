@@ -503,7 +503,6 @@ class SubjectIndex:
                  max_kmer_hits: int, soft_mask: bool = False,
                  complexity: bool = False, protein: bool = False,
                  fold_case: bool = False):
-        self.subjects = subjects
         self.word_size = k = word_size
         self.fold_case = fold_case
         self.max_kmer_hits = max_kmer_hits

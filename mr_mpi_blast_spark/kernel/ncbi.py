@@ -22,8 +22,8 @@ Faithful semantics:
 
 from __future__ import annotations
 
+import hashlib
 import io
-import itertools
 import os
 import shutil
 import subprocess
@@ -60,12 +60,6 @@ NCBI_HITS = StructType([
 ])
 
 _DB_CACHE: dict = {}
-
-# monotone id appended to cache_key: a same-named db_part from a later
-# run with different subject content must not hit a stale makeblastdb
-# result (mirrors pipeline.py's _BROADCAST_GEN guard for the builtin
-# kernel's index cache).
-_NCBI_GEN = itertools.count()
 
 
 def available(task: str = "blastn") -> bool:
@@ -205,8 +199,11 @@ def run_search_ncbi(queries: DataFrame, subjects: DataFrame,
     db_dir, residues, _n_seqs = stage_volumes(subjects)
     dbsize = cfg.dbsize if cfg.dbsize is not None else residues
     work = blocked.crossJoin(F.broadcast(staged_parts(queries.sparkSession, db_dir)))
-    kernel = make_ncbi_block_kernel(
-        db_dir, cfg, gen=str(next(_NCBI_GEN)), dbsize=dbsize)
+    # the makeblastdb cache keys on the staging identity (a fresh dir
+    # per call, so a later run's same-named db_part never hits a stale
+    # result) and the database type, as run_kernel_raw's gen does
+    gen = hashlib.md5(f"{db_dir}|{cfg.task}".encode()).hexdigest()[:12]
+    kernel = make_ncbi_block_kernel(db_dir, cfg, gen=gen, dbsize=dbsize)
     raw = work.groupBy("block_id", "db_part").applyInPandas(
         kernel, schema=NCBI_HITS)
     hits = to_canonical(raw, classifier=cfg.is_classifier)

@@ -34,14 +34,13 @@ reference's work-item model (mrblast.cpp:199-222). The database moves
 driver-free: one distributed partitionBy write, then each executor
 reads only the volumes its groups touch (page-cache/local-disk warm on
 re-reads, bounded to one resident index per worker). On a cluster,
-``scratch_dir`` must point at shared storage (HDFS/S3/NFS); default is
-a driver-local temp dir, correct for local[*].
+$SPARK_GRAFT_SCRATCH must point at shared storage (HDFS/S3/NFS);
+default is a local temp dir, correct for local[*].
 """
 
 from __future__ import annotations
 
 import hashlib
-import itertools
 import json
 import os
 import tempfile
@@ -57,12 +56,11 @@ from mr_mpi_blast_spark.kernel.builtin import RAW_HITS, make_lazy_block_kernel
 from mr_mpi_blast_spark.operators.blocks import assign_blocks
 from mr_mpi_blast_spark.operators.topk import top_hits, topk_per_key
 
-# monotone id so executor-side index caches key on partition CONTENT
-# (a same-named partition from a different run must not hit a stale index)
-_BROADCAST_GEN = itertools.count()
-
-
 _STAGE_META = "_stage_meta.json"
+
+
+def _scratch_root() -> str:
+    return os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
 
 
 def staged_volume_dir(cache_key: str) -> str:
@@ -72,9 +70,7 @@ def staged_volume_dir(cache_key: str) -> str:
     formatted once and every search reuses them
     (doc/USERGUIDE:224-264)."""
     digest = hashlib.md5(cache_key.encode()).hexdigest()[:16]
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir()),
-        "spark_graft_volumes", digest)
+    return os.path.join(_scratch_root(), "spark_graft_volumes", digest)
 
 
 def _stage_meta(db_dir: str) -> dict | None:
@@ -90,7 +86,7 @@ def _stage_meta(db_dir: str) -> dict | None:
     return meta if "volumes" in meta else None
 
 
-def stage_volumes(subjects: DataFrame, scratch_dir: str | None = None,
+def stage_volumes(subjects: DataFrame,
                   cache_key: str | None = None) -> tuple[str, int, int]:
     """Distributed write of the database as one directory per db_part
     (the reference's makeblastdb volume staging, doc/USERGUIDE:224-264).
@@ -107,18 +103,18 @@ def stage_volumes(subjects: DataFrame, scratch_dir: str | None = None,
     reuse — if the key's volume dir is already fully staged (_SUCCESS
     + meta sidecar with its volume list present), the write is skipped
     entirely. The reference never re-formats volumes per search;
-    neither do we."""
+    neither do we. Without a key every call stages a fresh
+    ``blast_db_<uuid>`` dir under $SPARK_GRAFT_SCRATCH."""
     from pyspark.sql import Observation
 
-    if cache_key is not None and scratch_dir is None:
+    if cache_key is not None:
         db_dir = staged_volume_dir(cache_key)
         meta = _stage_meta(db_dir)
         if meta is not None:
             return db_dir, int(meta["residues"]), int(meta["n_seqs"])
     else:
-        db_dir = scratch_dir or os.path.join(
-            os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir()),
-            f"blast_db_{uuid.uuid4().hex[:12]}")
+        db_dir = os.path.join(_scratch_root(),
+                              f"blast_db_{uuid.uuid4().hex[:12]}")
 
     obs = Observation("dbsize")
     # one writer task per volume: volumes are sized ~1 GB by the caller
@@ -427,7 +423,6 @@ def _format_volumes(spark, db_dir: str, index: tuple[str, dict] | None,
 
 def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
                    cfg: BlastConfig | None = None,
-                   scratch_dir: str | None = None,
                    log_dir: str | None = None,
                    cache_key: str | None = None,
                    seed_prune: bool = True) -> tuple[DataFrame, int, int]:
@@ -452,8 +447,7 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
 
     blocked = assign_blocks(queries, cfg.block_size).select("block_id", "qid", "seq")
 
-    db_dir, residues, count = stage_volumes(subjects, scratch_dir,
-                                            cache_key=cache_key)
+    db_dir, residues, count = stage_volumes(subjects, cache_key=cache_key)
     dbsize = cfg.dbsize if cfg.dbsize is not None else residues
     n_seqs = cfg.n_seqs if cfg.n_seqs is not None else count
     spark = blocked.sparkSession
@@ -461,17 +455,15 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
     # partition NAMES cross the driver (the volume list stage_volumes
     # recorded); broadcast keeps the blocked side's partitioning.
     work = blocked.crossJoin(F.broadcast(staged_parts(spark, db_dir)))
-    if cache_key is not None:
-        # content-addressed volumes are immutable, so the index cache
-        # can key on (volume content, index-shaping cfg fields) and hit
-        # across independent jobs in the same session. Only the fields
-        # that change the built index participate.
-        gen = hashlib.md5("|".join(map(str, (
-            cache_key, cfg.word_size, cfg.max_kmer_hits,
-            cfg.subject_soft_mask, cfg.complexity_filter, cfg.task,
-            cfg.mask_fold_case))).encode()).hexdigest()[:12]
-    else:
-        gen = str(next(_BROADCAST_GEN))
+    # the index cache keys on the staging identity (the content key,
+    # or the fresh per-call dir) and the fields that shape the built
+    # index: content-addressed volumes are immutable, so a keyed
+    # database hits across independent jobs in the session, and a
+    # fresh dir can never hit a stale index
+    gen = hashlib.md5("|".join(map(str, (
+        cache_key or db_dir, cfg.word_size, cfg.max_kmer_hits,
+        cfg.subject_soft_mask, cfg.complexity_filter, cfg.task,
+        cfg.mask_fold_case))).encode()).hexdigest()[:12]
     # the runtime filter (see module section above) keeps only (block,
     # volume) pairs with possible exact-seed overlap. Silently a no-op
     # under blastp -threshold (neighborhood seeding makes exact-k-mer
@@ -483,7 +475,7 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
                  cfg.word_size, SEED_PRUNE_BITS)
     # ONE format job builds what each volume lacks: the index pickle
     # (only for a content-addressed gen — the makeblastdb analog; a
-    # nonce gen can never be hit again) and the seed-Bloom sidecar
+    # fresh dir's gen can never be hit again) and the seed-Bloom sidecar
     index = (gen, _index_kw(cfg)) if cache_key is not None else None
     fills = (_format_volumes(spark, db_dir, index, bloom)
              if index or bloom else {})
@@ -550,35 +542,28 @@ def search_from_raw(raw: DataFrame, dbsize: int, n_seqs: int,
     return top_hits(hits, cfg.num_hit_cutoff)                # O2+O3
 
 
-def apply_max_target_seqs(hits: DataFrame, cap: int,
-                          evalue_col: str = "evalue") -> DataFrame:
+def apply_max_target_seqs(hits: DataFrame, cap: int) -> DataFrame:
     """F2 (-max_target_seqs, doc/USERGUIDE:48-50,357-371): rank
     subjects per query by their best HSP (evalue asc, bitscore desc,
     sid tiebreak) and keep EVERY HSP of the top ``cap`` subjects.
-
-    THE single implementation of the cap — search_from_raw (production
-    tail) and the oracle-checked blast_capped_tail both call it, so
-    the value oracle exercises the shipped code path, not a twin that
-    could drift. ``evalue_col`` lets callers rank on any
-    monotone-equivalent column (the tail twin passes its floor-rounded
-    log10_evalue; within a query both orderings equal score desc,
-    since the length adjustment is constant per qid)."""
+    search_from_raw's F2 step; the catalog's blast_capped_tail
+    value-checks it through that tail."""
     # best HSP per subject by HASH AGGREGATE, not a rank window: only
     # (evalue, bitscore) of the best HSP matter for the subject
     # ranking, and min(struct(evalue, -bitscore)) == ORDER BY evalue
     # ASC, bitscore DESC — partial aggregation combines map-side, so
-    # the full hit table is never sort-shuffled (bitscore is floor-
-    # rounded and never -0.0, so its negation stays order-exact)
+    # the full hit table is never sort-shuffled (negation is exact, so
+    # the order is too)
     best_per_subject = (
         hits.groupBy("qid", "sid")
-        .agg(F.min(F.struct(F.col(evalue_col).alias("be"),
+        .agg(F.min(F.struct(F.col("evalue").alias("be"),
                             (-F.col("bitscore")).alias("nb"))).alias("b"))
-        .select("qid", "sid", F.col("b.be").alias(evalue_col),
+        .select("qid", "sid", F.col("b.be").alias("evalue"),
                 (-F.col("b.nb")).alias("bitscore")))
     subj_rank = topk_per_key(
         best_per_subject,
         ["qid"],
-        [F.col(evalue_col).asc(), F.col("bitscore").desc(),
+        [F.col("evalue").asc(), F.col("bitscore").desc(),
          F.col("sid").asc()],
         cap, rank_col="_tr").select("qid", "sid")
     return hits.join(subj_rank, ["qid", "sid"], "left_semi")
@@ -586,7 +571,6 @@ def apply_max_target_seqs(hits: DataFrame, cap: int,
 
 def run_search(queries: DataFrame, subjects: DataFrame,
                cfg: BlastConfig | None = None,
-               scratch_dir: str | None = None,
                log_dir: str | None = None,
                cache_key: str | None = None,
                seed_prune: bool = True) -> DataFrame:
@@ -601,7 +585,7 @@ def run_search(queries: DataFrame, subjects: DataFrame,
     force the full work-item set (the escape hatch, e.g. for an A/B
     parity replay)."""
     cfg = cfg or BlastConfig()
-    raw, dbsize, n_seqs = run_kernel_raw(queries, subjects, cfg, scratch_dir,
+    raw, dbsize, n_seqs = run_kernel_raw(queries, subjects, cfg,
                                          log_dir=log_dir, cache_key=cache_key,
                                          seed_prune=seed_prune)
     return search_from_raw(raw, dbsize, n_seqs, cfg)

@@ -111,7 +111,7 @@ def main() -> None:
             .withColumn("length", F.length("seq").cast("int"))
         blocked = assign_blocks(queries, cfg.block_size) \
             .select("block_id", "qid", "seq")
-        db_dir, _res, _cnt = stage_volumes(subs, None, cache_key=key)
+        db_dir, _res, _cnt = stage_volumes(subs, cache_key=key)
         parts = staged_parts(spark, db_dir)
         items_total = blocked.select("block_id").distinct().count() \
             * parts.count()

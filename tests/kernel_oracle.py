@@ -503,7 +503,7 @@ def _align_query_sequential(qid: int, seq: str, index: SubjectIndex,
                     if qstrand == -1:
                         # map coords back to the forward query orientation
                         qs, qe = qlen - qe - 1, qlen - qs - 1
-                    out.append((qid, index.subjects[si][0], score,
+                    out.append((qid, index.sids[si], score,
                                 align_len, ident, gaps_n,
                                 qs, qe, ss, se, qstrand, 1, qlen))
     return out

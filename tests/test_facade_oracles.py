@@ -94,7 +94,7 @@ def test_recorded_window_contract():
     """The driver records the first 50 queries() entries; the window
     list is the contract. Invariants: exactly the RECORDED_WINDOW
     names, in its order; every windowed query value-oracled (a
-    rows-only entry would waste a recorded slot); the five kernel
+    rows-only entry would waste a recorded slot); the four kernel
     tails present every round (reference-parity flagships); nothing
     rows-only inside; and the catalog's no-oracle set is exactly
     TAIL_NO_ORACLE, registered in the tail."""
@@ -102,7 +102,7 @@ def test_recorded_window_contract():
     assert names[:50] == RECORDED_WINDOW
     oracles = entry.oracle_sql()
     assert all(n in oracles for n in RECORDED_WINDOW)
-    for tail_name in ["blast_pipeline", "blast_tail", "blast_gapped_tail",
+    for tail_name in ["blast_pipeline", "blast_gapped_tail",
                       "blast_gapped_nucl_tail", "blast_capped_tail"]:
         assert tail_name in RECORDED_WINDOW
     no_oracle = [n for n in names if n not in oracles]

@@ -294,6 +294,47 @@ def test_gapped_nucl_tail_exercises_strand_swap_and_gaps(spark):
     assert set((minus["qid"] // 100) % 2) == {1}
 
 
+def test_kernel_queries_run_the_shipped_tail(spark, monkeypatch):
+    """Every kernel catalog query is the shipped relational tail: each
+    calls plans.pipeline.search_from_raw once, with its own config,
+    and its oracle is _blast_oracle_sql of that same config over its
+    raw link — no second tail, no second oracle."""
+    import dataclasses
+
+    import __spark_entry__ as e
+    import mr_mpi_blast_spark.entry_queries as eq
+    import mr_mpi_blast_spark.plans.pipeline as pl
+
+    flagship = eq._blast_cfg()
+    want = {
+        "blast_pipeline": (flagship, eq._BLAST_RAW_PATH),
+        "blast_gapped_tail": (dataclasses.replace(flagship, gapped=True),
+                              eq._BLAST_RAW_GAPPED_PATH),
+        "blast_gapped_nucl_tail": (eq._blast_nucl_cfg(),
+                                   eq._BLAST_RAW_NUCL_PATH),
+        "blast_capped_tail": (dataclasses.replace(flagship,
+                                                  max_target_seqs=3),
+                              eq._BLAST_RAW_PATH),
+    }
+    oracles = e.oracle_sql()
+    assert sorted(n for n, sql in oracles.items()
+                  if "spark_graft_blast_raw" in sql) == sorted(want)
+
+    calls = []
+    shipped = pl.search_from_raw
+
+    def recorder(raw, dbsize, n_seqs, cfg=None):
+        calls.append(cfg)
+        return shipped(raw, dbsize, n_seqs, cfg)
+
+    monkeypatch.setattr(pl, "search_from_raw", recorder)
+    for name, (cfg, link) in want.items():
+        calls.clear()
+        e.queries()[name](spark, "/root/testdata/sf0.001")
+        assert calls == [cfg], name
+        assert oracles[name] == eq._blast_oracle_sql(link, cfg), name
+
+
 def test_apply_max_target_seqs_matches_reference(spark):
     """Property check of the single shared F2 implementation: for a
     randomized hit table, the kept rows equal the brute-force
@@ -395,7 +436,7 @@ def test_seed_prune_value_identical_on_fixtures(spark, hits):
     assert got == want and len(got) > 0
 
 
-def test_seed_prune_skips_disjoint_volume(spark, tmp_path):
+def test_seed_prune_skips_disjoint_volume(spark, tmp_path, monkeypatch):
     """A volume whose alphabet shares no k-mer with the queries is
     skipped entirely (measured skipped-volume count), and the hit
     table still equals the unpruned run — the fixture the verdict
@@ -424,7 +465,8 @@ def test_seed_prune_skips_disjoint_volume(spark, tmp_path):
     assert not any(q[i:i + 11] in s_gc for i in range(len(q) - 10))
     cfg = BlastConfig(evalue=1e-3, block_size=400, word_size=11)
 
-    db_dir, _, _ = stage_volumes(subs, str(tmp_path / "vols"))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    db_dir, _, _ = stage_volumes(subs)
     blocked = queries.selectExpr("0L AS block_id", "qid", "seq")
     blooms = volume_seed_blooms(spark, db_dir, cfg.word_size)
     kept = {(r.db_part, r.block_id)
@@ -439,6 +481,52 @@ def test_seed_prune_skips_disjoint_volume(spark, tmp_path):
     assert sorted(map(tuple, pruned.select(*cols).collect())) \
         == sorted(map(tuple, base.select(*cols).collect()))
     assert pruned.count() > 0
+
+
+def test_seed_prune_parity_with_two_live_pairs(spark):
+    """Two live (block, volume) pairs that differ in both block and
+    volume: q1 alone in block 0 homologous only to vol.a, q2 alone in
+    block 1 homologous only to vol.b. The probe keeps exactly those
+    two pairs, and the pruned hit table equals the unpruned one with
+    hits from both — so a filter that loses one live pair (not all of
+    them) fails here."""
+    from mr_mpi_blast_spark.operators.blocks import assign_blocks
+    from mr_mpi_blast_spark.plans.pipeline import (prune_work_items,
+                                                   stage_volumes,
+                                                   volume_seed_blooms)
+    q1, q2 = _seq(300, salt=61), _seq(300, salt=62)
+    queries = spark.createDataFrame(
+        [(1, "q1", "q1", q1, len(q1)), (2, "q2", "q2", q2, len(q2))],
+        "qid long, defline string, defline_part string, seq string, "
+        "length int")
+    s_a = _seq(40, salt=63) + q1[30:250] + _seq(40, salt=64)
+    s_b = _seq(40, salt=65) + q2[50:270] + _seq(40, salt=66)
+    subs = spark.createDataFrame(
+        [("s_a", "s_a", "vol.a", s_a, len(s_a)),
+         ("s_b", "s_b", "vol.b", s_b, len(s_b))],
+        "sid string, defline string, db_part string, seq string, "
+        "length int")
+    cfg = BlastConfig(evalue=1e-3, block_size=200, word_size=11)
+
+    blocked = assign_blocks(queries, cfg.block_size)
+    assert {(r.qid, r.block_id) for r in blocked.collect()} == {(1, 0),
+                                                               (2, 1)}
+    db_dir, _, _ = stage_volumes(subs)
+    kept = {(r.db_part, r.block_id) for r in prune_work_items(
+        blocked.select("block_id", "seq"),
+        volume_seed_blooms(spark, db_dir, cfg.word_size),
+        cfg.word_size).collect()}
+    assert kept == {("vol.a", 0), ("vol.b", 1)}
+
+    cols = ["qid", "sid", "qstart", "qend", "sstart", "send", "bitscore"]
+    base = sorted(map(tuple, run_search(queries, subs, cfg,
+                                        seed_prune=False)
+                      .select(*cols).collect()))
+    pruned = sorted(map(tuple, run_search(queries, subs, cfg,
+                                          seed_prune=True)
+                        .select(*cols).collect()))
+    assert {r[:2] for r in base} == {(1, "s_a"), (2, "s_b")}
+    assert pruned == base
 
 
 def test_seed_prune_keeps_minus_strand_only_block(spark):
@@ -469,7 +557,8 @@ def test_seed_prune_keeps_minus_strand_only_block(spark):
     assert sorted(map(tuple, pruned.select(*cols).collect())) == want
 
 
-def test_seed_prune_probe_plan_broadcasts_only_the_filter(spark, tmp_path):
+def test_seed_prune_probe_plan_broadcasts_only_the_filter(spark, tmp_path,
+                                                          monkeypatch):
     """The prune probe's plan shape: the volume position table rides a
     BroadcastExchange (bounded at bits rows/volume by construction);
     the query k-mer stream is never shuffled for the membership test
@@ -483,7 +572,8 @@ def test_seed_prune_probe_plan_broadcasts_only_the_filter(spark, tmp_path):
          ("s2", "s2", "v.b", _seq(200, salt=42), 200)],
         "sid string, defline string, db_part string, seq string, "
         "length int")
-    db_dir, _, _ = stage_volumes(subs, str(tmp_path / "v"))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    db_dir, _, _ = stage_volumes(subs)
     blooms = volume_seed_blooms(spark, db_dir, 11)
     blocked = spark.createDataFrame([(0, 1, q)],
                                     "block_id long, qid long, seq string")
@@ -514,7 +604,8 @@ def test_seed_prune_saturation_gate_skips_probe(spark, monkeypatch):
     assert out.count() > 0
 
 
-def test_seed_prune_noop_under_neighborhood_seeding(spark, tmp_path):
+def test_seed_prune_noop_under_neighborhood_seeding(spark, tmp_path,
+                                                    monkeypatch):
     """blastp -threshold seeds on NON-exact word matches, so exact
     k-mer pruning is unsound there — the filter must not even be
     built: no seed-Bloom sidecar is written (documented conservative
@@ -533,16 +624,22 @@ def test_seed_prune_noop_under_neighborhood_seeding(spark, tmp_path):
         "sid string, defline string, db_part string, seq string, "
         "length int")
     base = dict(task="blastp", word_size=3, evalue=10.0, block_size=400)
+
+    def sidecars(root):
+        return glob.glob(str(tmp_path / root / "blast_db_*_seedbloom*"
+                             / "*.parquet"))
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "nb"))
     out = pl.run_search(prot_q, prot_s, BlastConfig(threshold=11, **base),
-                        scratch_dir=str(tmp_path / "nb"), seed_prune=True)
+                        seed_prune=True)
     assert out.count() > 0  # ran the FULL work-item set, filter unused
-    pl.run_kernel_raw(prot_q, prot_s, BlastConfig(**base),
-                      scratch_dir=str(tmp_path / "off"), seed_prune=False)
-    pl.run_kernel_raw(prot_q, prot_s, BlastConfig(**base),
-                      scratch_dir=str(tmp_path / "exact"), seed_prune=True)
-    assert not glob.glob(str(tmp_path / "nb_seedbloom*"))
-    assert not glob.glob(str(tmp_path / "off_seedbloom*"))
-    assert glob.glob(str(tmp_path / "exact_seedbloom*/*.parquet"))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "off"))
+    pl.run_kernel_raw(prot_q, prot_s, BlastConfig(**base), seed_prune=False)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "exact"))
+    pl.run_kernel_raw(prot_q, prot_s, BlastConfig(**base), seed_prune=True)
+    assert not sidecars("nb")
+    assert not sidecars("off")
+    assert sidecars("exact")
 
 
 def test_stage_meta_without_volume_list_restages(spark, tmp_path,
@@ -625,7 +722,7 @@ _BLOOM_VOLUMES = {
 
 
 @pytest.fixture(params=sorted(_BLOOM_VOLUMES), ids=lambda k: f"k{k}")
-def bloom_volumes(spark, tmp_path, request):
+def bloom_volumes(spark, tmp_path, request, monkeypatch):
     from mr_mpi_blast_spark.plans.pipeline import stage_volumes
     k = request.param
     subs = spark.createDataFrame(
@@ -633,7 +730,8 @@ def bloom_volumes(spark, tmp_path, request):
          for sid, part, seq in _BLOOM_VOLUMES[k]],
         "sid string, defline string, db_part string, seq string, "
         "length int")
-    db_dir, _, _ = stage_volumes(subs, str(tmp_path / "vols"))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "vols"))
+    db_dir, _, _ = stage_volumes(subs)
     return k, db_dir
 
 

@@ -131,8 +131,8 @@ def test_ncbi_kernel_subprocess_path_with_fake_blast(spark, tmp_path,
     subj_rows = [("s_near", "ACGT" * 50, "p0"), ("s_rc", "TTGA" * 60, "p0"),
                  ("s_other", "GATTACA" * 20, "p1")]
     subjects = spark.createDataFrame(subj_rows, ["sid", "seq", "db_part"])
-    db_dir, residues, n_seqs = stage_volumes(
-        subjects, scratch_dir=str(tmp_path / "vols"))
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    db_dir, residues, n_seqs = stage_volumes(subjects)
     assert residues == sum(len(s) for _, s, _ in subj_rows)
 
     bin_dir = tmp_path / "bin"

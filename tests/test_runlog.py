@@ -81,3 +81,20 @@ def test_run_search_writes_rank_logs(spark, tmp_path):
     logs = read_run_logs(spark, d)
     ends = logs.filter(logs.event == "blast call ends").count()
     assert ends >= 1
+
+
+def test_run_summary_stages_its_database_once(spark, tmp_path, monkeypatch):
+    """The catalog's run_summary keys its database on the documents
+    table, so repeated calls reuse one staged copy instead of leaving
+    a fresh blast_db_<uuid> dir per call; the call totals (blocks x
+    volumes) are unchanged."""
+    import __spark_entry__ as entry
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    q = entry.queries()["run_summary"]
+    totals = [q(spark, "/root/testdata/sf0.001").collect()[0].n_calls_total
+              for _ in range(2)]
+    assert totals == [2, 2]
+    assert not glob.glob(str(tmp_path / "blast_db_*"))
+    assert len(glob.glob(str(tmp_path / "spark_graft_volumes" / "*"
+                             / "_stage_meta.json"))) == 1
