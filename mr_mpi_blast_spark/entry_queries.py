@@ -13,7 +13,6 @@ import json
 import math
 import os
 import shutil
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -26,6 +25,7 @@ from mr_mpi_blast_spark.operators.sampling import (_BUCKETS as _SAMPLING_BUCKETS
 from mr_mpi_blast_spark.operators.similarity import (ROUND4_SQL,
                                                      round4_xengine)
 from mr_mpi_blast_spark.operators.topk import topk_per_key
+from mr_mpi_blast_spark.plans.pipeline import _scratch_root
 from mr_mpi_blast_spark.session import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -70,10 +70,16 @@ def _src_key(sf_dir: str, table: str, tag: str, *params) -> str:
 def _store_path(key: str, suffix: str = "") -> str:
     """Where the artifact of ``key`` lives: one root under
     $SPARK_GRAFT_SCRATCH, named by the key's md5."""
-    return os.path.join(
-        os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir()),
-        "spark_graft_pairs",
-        hashlib.md5(key.encode()).hexdigest()[:16] + suffix)
+    return os.path.join(_scratch_root(), "spark_graft_pairs",
+                        hashlib.md5(key.encode()).hexdigest()[:16] + suffix)
+
+
+def _oracle_link(name: str) -> str:
+    """A fixed link path a static oracle SQL reads, resolved once at
+    import under the scratch root: processes with different scratch
+    roots never repoint each other's links, so two catalog runs can
+    check at once."""
+    return os.path.join(_scratch_root(), name)
 
 
 def _publish(path: str, write: Callable[[str], object]) -> str:
@@ -121,6 +127,7 @@ def _point_link(link: str, target: str) -> None:
             shutil.rmtree(link)
         else:
             os.unlink(link)
+    os.makedirs(os.path.dirname(link), exist_ok=True)
     tmp = f"{link}.lnk.{os.getpid()}.tmp"
     if os.path.lexists(tmp):
         os.unlink(tmp)
@@ -1625,7 +1632,7 @@ def q_ann_ivf_topk(spark, sf_dir):
 # (_point_link), so concurrent runs of the SAME key are idempotent
 # (training is deterministic) and a run at another sf never tears
 # this one's file mid-read.
-_IVF_CENT_PATH = "/tmp/spark_graft_ivf_centroids.parquet"
+_IVF_CENT_PATH = _oracle_link("spark_graft_ivf_centroids.parquet")
 
 
 # trained-IVF parameters, defined ONCE: both the training call and the
@@ -2036,17 +2043,9 @@ def _blast_raw(spark, sf_dir, cfg=None, qmod: int = 25,
     def write(tmp):
         inputs_fn = _blast_nucl_inputs if variant == "dna" else _blast_inputs
         queries_df, subjects = inputs_fn(spark, sf_dir, qmod)
-        # seed_prune on for every registered kernel run (r11): the
-        # work-item runtime filter is value-identical BY CONTRACT
-        # (plans/pipeline.py; one-sided, both strands probed), so the
-        # driver's hash-checked rows double as end-to-end evidence the
-        # filter never drops a hit. On this corpus (queries drawn from
-        # the subjects) nothing is prunable — the point recorded here
-        # is soundness; the skip payoff is pinned by the
-        # disjoint-volume test.
         raw, dbsize, n_seqs = run_kernel_raw(
             queries_df, subjects, cfg,
-            cache_key=_blast_volume_key(sf_dir, variant), seed_prune=True)
+            cache_key=_blast_volume_key(sf_dir, variant))
         raw.write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, _BLAST_RAW_META), "w") as fh:
             json.dump({"dbsize": dbsize, "n_seqs": n_seqs}, fh)
@@ -2064,9 +2063,11 @@ def _blast_raw(spark, sf_dir, cfg=None, qmod: int = 25,
 # RAW_HITS is all integers/strings — the persist is lossless, and
 # every float is derived from identical integers on both engines
 # (libm ulp differences are absorbed by floor-form 1e-4 rounding).
-_BLAST_RAW_PATH = "/tmp/spark_graft_blast_raw_current.parquet"
-_BLAST_RAW_GAPPED_PATH = "/tmp/spark_graft_blast_raw_gapped_current.parquet"
-_BLAST_RAW_NUCL_PATH = "/tmp/spark_graft_blast_raw_nucl_current.parquet"
+_BLAST_RAW_PATH = _oracle_link("spark_graft_blast_raw_current.parquet")
+_BLAST_RAW_GAPPED_PATH = _oracle_link(
+    "spark_graft_blast_raw_gapped_current.parquet")
+_BLAST_RAW_NUCL_PATH = _oracle_link(
+    "spark_graft_blast_raw_nucl_current.parquet")
 
 
 def _blast_gapped_cfg():

@@ -445,34 +445,6 @@ def _lower_windows(cat: np.ndarray, win: np.ndarray, k: int) -> np.ndarray:
     return (c[win + k] - c[win]) > 0
 
 
-def _distinct_words(cat: np.ndarray, gpos: np.ndarray, k: int) -> list[str]:
-    """One string per run of equal length-k words among the windows
-    starting at ``gpos`` (offsets into ``cat``, ordered so that equal
-    words sit together, e.g. by window hash). Every distinct word is
-    returned; a hash collision that interleaves two words can repeat
-    one, which set-building callers absorb. k vectorized compares, no
-    per-window Python work."""
-    if not len(gpos):
-        return []
-    new = np.ones(len(gpos), dtype=bool)
-    same = np.ones(len(gpos) - 1, dtype=bool)
-    for j in range(k):
-        same &= cat[gpos[1:] + j] == cat[gpos[:-1] + j]
-    new[1:] = ~same
-    words = cat[gpos[new][:, None] + np.arange(k)].astype("<u4")
-    return words.view(f"<U{k}").ravel().tolist()
-
-
-def volume_words(seqs: list[str], k: int) -> list[str]:
-    """The distinct length-k words of a volume (case as stored): every
-    window hashed in k vectorized passes, then sorted once so equal
-    words sit together. SubjectIndex.seed_words reads the same list
-    off an index build without sorting again."""
-    cat, _, _, _, gidx = _concat(seqs, k)
-    h = _window_hashes(cat, k)[gidx]
-    return _distinct_words(cat, gidx[np.argsort(h)], k)
-
-
 class SubjectIndex:
     """k-mer -> [(subject_idx, pos)...] over one DB partition.
 
@@ -548,16 +520,6 @@ class SubjectIndex:
         self._bend = ends[keep]
         self._sis = si_arr[order]
         self._poss = pos_arr[order]
-
-    def seed_words(self) -> list[str]:
-        """The distinct words of this index's windows (case as in
-        ext_seqs), read off the build's hash-sorted window arrays —
-        volume_words without its sort. Covers every word of the volume
-        only for an unmasked build (soft_mask/complexity drop
-        windows); over-frequent words keep their windows even when
-        max_kmer_hits drops their bucket."""
-        return _distinct_words(self.ords, self.offs[self._sis] + self._poss,
-                               self.word_size)
 
     def buckets_for_hashes(self, qh: np.ndarray) -> np.ndarray:
         """Bucket id (-1 = miss) for an arbitrary array of window

@@ -693,28 +693,6 @@ def bloom_positions_duckdb(col_sql: str,
             for i in range(BLOOM_K)]
 
 
-def bloom_positions_py(keys, bits: int | None = None):
-    """Python twin of _bloom_positions_spark, for executor-side builds
-    that hold the keys already (the seed-Bloom format task): a
-    (len(keys), BLOOM_K) int64 array whose column i is
-    pmod(first 32 bits of md5('bloom{i}:' || key), bits) — the same
-    md5 of the same UTF-8 bytes, so a filter built here is probed
-    exactly by the Spark and DuckDB forms (pinned by
-    test_bloom_positions_py_matches_spark). One md5 per key per
-    position, so callers pass DISTINCT keys."""
-    import hashlib
-
-    import numpy as np
-    bits = BLOOM_BITS if bits is None else bits
-    keys = [k.encode() for k in keys]
-    out = np.empty((len(keys), BLOOM_K), dtype=np.int64)
-    for i in range(BLOOM_K):
-        salt = f"bloom{i}:".encode()
-        heads = b"".join(hashlib.md5(salt + k).digest()[:4] for k in keys)
-        out[:, i] = np.frombuffer(heads, dtype=">u4") % bits
-    return out
-
-
 def bloom_build(keys, key_col: str):
     """The set-bit positions of a Bloom filter over ``keys`` — K md5
     positions per key, distinct. Bounded at BLOOM_BITS rows (1 KB-

@@ -13,10 +13,9 @@ Spark translation implemented here:
       row; residues, sequence count and volume names ride the write
       as observed metrics)
   format job: one task per volume               # makeblastdb analog
-     (reads its staged volume once, publishes the content-keyed
-      index pickle, writes the volume's seed-Bloom sidecar, returns
-      the Bloom fill — the only eager job after staging)
-  blocks x db_parts [- seed-Bloom pruned pairs] # J1 work items
+     (reads its staged volume once and publishes the content-keyed
+      index pickle — the only eager job after staging)
+  blocks x db_parts                             # J1 work items
   .groupBy(block_id, db_part).applyInPandas(lazy kernel)   # K1/K2
      (each group lazily reads its staged volume executor-side,
       with per-worker index reuse — S7, mrblast.cpp:838-845)
@@ -45,7 +44,6 @@ import json
 import os
 import tempfile
 import uuid
-from urllib.parse import quote
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -159,32 +157,21 @@ def staged_parts(spark, db_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Seed-overlap runtime filter (r11): skip (block, volume) work items
-# that CANNOT produce a hit. Every hit the builtin kernel emits grows
-# from an exact shared word of length word_size (kernel/builtin.py
-# seed-and-extend; masking/complexity options only DROP seeds), so a
-# block sharing zero k-mers with a volume contributes zero hits — the
-# pair can be skipped before the kernel ever runs. This is the
-# reference's locality/affinity work-item optimization family
-# (mrmpi/mapreduce.cpp:1303-1528) re-expressed as data pruning, and
-# the kernel-path twin of orders_bloom_prune (operators/profile.py).
-#
-# Soundness boundary: blastp NEIGHBORHOOD seeding (-threshold) seeds
-# on non-exact word matches, so exact-k-mer pruning would drop real
-# hits — run_kernel_raw disables the filter (no-op, full work-item
-# set) whenever cfg.threshold is set. Case is folded to upper on both
-# sides (soft-mask lowercase still extends), and the Bloom is
-# one-sided by construction: a volume with a real shared word always
-# survives; a disjoint volume survives only on a K-fold collision.
+# Seed-overlap diagnostic: which (block, volume) work items share at
+# least one exact word. The search does not run it: every work item
+# goes to the kernel, whose exact seed lookup (kernel/builtin.py
+# _exact_seeds) gives a pair that shares no word zero seeds and no
+# extension work — the reference also runs every work item and filters
+# only inside BLAST (doc/USERGUIDE:15-18). Measured with the probe in
+# front of the kernel, it kept every pair on both benchmark workloads
+# and cost 20-25% of a search. Case is folded to upper on both sides,
+# and the Bloom is one-sided by construction: a volume with a real
+# shared word always survives; a disjoint volume survives only on a
+# K-fold collision.
 # ---------------------------------------------------------------------------
 
 
 SEED_PRUNE_BITS = 1 << 20
-# above this per-volume fill the probe can no longer prune any
-# realistically-sized block (see the saturation-gate comment in
-# run_kernel_raw): at f=0.25 a share-nothing volume still passes a
-# 300-k-mer block with ~99% probability, so probing is pure cost
-SEED_PRUNE_MAX_FILL = 0.25
 
 
 def _kmer_explode(seq_col: str, k: int):
@@ -196,57 +183,22 @@ def _kmer_explode(seq_col: str, k: int):
         f"i -> upper(substring({seq_col}, i, {k}))) END")))
 
 
-def _bloom_dir(db_dir: str, word_size: int, bits: int) -> str:
-    """The seed-Bloom sidecar dir of a staged dir: beside the volumes,
-    keyed by everything that shapes the filter (content-addressed
-    volume dirs make it immutable too, the makeblastdb model)."""
-    return f"{db_dir}_seedbloom_k{word_size}_b{bits}_v3"
-
-
-def _bloom_file(bloom_dir: str, part: str) -> str:
-    return os.path.join(bloom_dir, f"{quote(part, safe='')}.parquet")
-
-
-def _bloom_fill(path: str) -> int | None:
-    """Set positions in a published sidecar file (its footer's row
-    count), or None when the file does not exist yet."""
-    if not os.path.exists(path):
-        return None
-    import pyarrow.parquet as pq
-    return pq.ParquetFile(path).metadata.num_rows
-
-
-def _read_blooms(spark, bloom_dir: str) -> DataFrame:
-    # explicit schema: no footer-reading inference job
-    return spark.read.schema("db_part string, pos bigint").parquet(bloom_dir)
-
-
 def volume_seed_blooms(spark, db_dir: str, word_size: int,
                        bits: int = SEED_PRUNE_BITS) -> DataFrame:
     """(db_part, pos) — the set-bit positions of a Bloom filter over
-    each volume's distinct (uppercased) k-mers, one sidecar file per
-    volume beside the staged dir. A missing sidecar is built by the
-    format job's per-volume task (_format_volumes; run_kernel_raw
-    builds them in the same job as the index pickles), so there is one
-    Bloom builder; present ones are reused. Output is bounded at
-    ``bits`` positions per volume regardless of residue count.
-
-    Sizing (r11 review): a SATURATED filter is a conservative no-op —
-    every work item survives, nothing breaks, nothing is saved. The
-    2^20 default stays useful to ~300k distinct k-mers per volume
-    (fill ~0.6); for nucleotide word_size=11 the whole universe is
-    4^11 ≈ 4.2M words, so volumes near-saturating 2^20 are within a
-    factor of a few of containing EVERY word — at which point no
-    exact filter could prune and the honest answer is "this database
-    is not k-mer-sparse; the filter pays off for topically-partitioned
-    volumes (the reference's nt/wgs split) and small alphabets, not
-    for a uniform soup". Position-table rendering costs 8 B/position
-    (worst ~8 MB/volume broadcast when saturated); callers with many
-    dense volumes should lower ``bits`` to cap the broadcast — the
-    filter degrades gracefully toward no-op, never toward wrong."""
-    path = _bloom_dir(db_dir, word_size, bits)
-    _format_volumes(spark, db_dir, None, (path, word_size, bits))
-    return _read_blooms(spark, path)
+    each volume's distinct (uppercased) k-mers: the staged volumes'
+    k-mers exploded, hashed to their Bloom positions and kept
+    distinct. At most ``bits`` rows per volume; a volume whose
+    sequences are all shorter than the word has none. Lazy, and
+    nothing is written."""
+    from mr_mpi_blast_spark.operators.profile import _bloom_positions_spark
+    pos = F.array(*[F.expr(p)
+                    for p in _bloom_positions_spark("kmer", bits)])
+    # explicit schema: no footer-reading inference job, and db_part
+    # stays a string whatever the volume names look like
+    return (spark.read.schema("seq string, db_part string").parquet(db_dir)
+            .select("db_part", _kmer_explode("seq", word_size).alias("kmer"))
+            .select("db_part", F.explode(pos).alias("pos")).distinct())
 
 
 def prune_work_items(blocked: DataFrame, volume_blooms: DataFrame,
@@ -256,21 +208,14 @@ def prune_work_items(blocked: DataFrame, volume_blooms: DataFrame,
     at least one of the block's query k-mers has ALL K of its Bloom
     positions set in the volume's filter. The probe stream is the
     block's DISTINCT k-mers (query-sized); the volume filters are a
-    broadcast of DISTINCT (db_part, pos) rows (<= bits per volume —
-    8 MB/volume worst case at the 2^20 default, KB when sparse); the
-    output is work-item-sized. No subject row is read — the filters
-    were staged with the volumes.
-    ``bits`` MUST match the value the volume filters were built with
-    (volume_seed_blooms bakes it into the sidecar path for exactly
-    this reason).
+    broadcast of DISTINCT (db_part, pos) rows (<= bits per volume);
+    the output is work-item-sized. ``bits`` MUST match the value the
+    volume filters were built with.
 
-    ``both_strands`` (r11 review): the blastn kernel seeds the query
-    on BOTH strands (kernel/builtin.py strands loop runs revcomp(seq)
-    too), so the probe set must include the reverse complement's
-    k-mers — forward-only probing would prune a pair whose only
-    homology is a minus-strand copy, silently losing real hits
-    (pinned by test_seed_prune_keeps_minus_strand_only_block). Pass
-    False only for protein (no strands; run_kernel_raw does)."""
+    ``both_strands``: the blastn kernel seeds the query on BOTH
+    strands, so the probe set includes the reverse complement's
+    k-mers — forward-only probing would drop a pair whose only
+    homology is a minus-strand copy. Pass False only for protein."""
     from mr_mpi_blast_spark.operators.profile import (
         BLOOM_K, _bloom_positions_spark)
     pos = F.array(*[F.expr(p)
@@ -288,10 +233,10 @@ def prune_work_items(blocked: DataFrame, volume_blooms: DataFrame,
     # membership as a POSITION JOIN (the bloom_probe shape), not an
     # array_except over the filter array: near-saturated volume
     # filters are ~500k positions, and ArrayExcept rebuilds its hash
-    # set per row — measured 3 s -> 10+ min on the sf0.1 cold kernel
-    # (r11 review pass). The join probes (block, kmer, pos) rows
-    # against broadcast DISTINCT (db_part, pos) rows; a kmer whose K
-    # (possibly colliding) position rows ALL match a volume passes.
+    # set per row — measured 3 s -> 10+ min on the sf0.1 cold kernel.
+    # The join probes (block, kmer, pos) rows against broadcast
+    # DISTINCT (db_part, pos) rows; a kmer whose K (possibly
+    # colliding) position rows ALL match a volume passes.
     kpos = bk.select("block_id", "kmer", F.explode(pos).alias("pos"))
     hits = (kpos.join(F.broadcast(volume_blooms), "pos")
             .groupBy("block_id", "kmer", "db_part")
@@ -309,123 +254,50 @@ def _index_kw(cfg: BlastConfig) -> dict:
                 protein=cfg.task == "blastp", fold_case=cfg.mask_fold_case)
 
 
-def _format_volume(db_dir: str, part: str, index: tuple[str, dict] | None,
-                   bloom: tuple[str, int, int] | None) -> tuple[str, int]:
-    """One volume's format task. Reads the staged volume at most once,
-    then, each only if missing: publishes the content-keyed index
-    pickle (``index`` = (gen, _index_kw)) and writes the volume's
-    seed-Bloom sidecar (``bloom`` = (sidecar dir, word size, bits)).
-    Returns (volume, set Bloom positions; 0 without ``bloom``).
-
-    The Bloom's word list comes off the index build when this task
-    built an unmasked index of the same word size (its windows are
-    already sorted by hash, SubjectIndex.seed_words), else from one
-    vectorized pass over the volume (volume_words); either way one md5
-    per distinct word and position, never per window."""
-    from functools import cache
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from mr_mpi_blast_spark.kernel.builtin import (ensure_index_on_disk,
-                                                   read_staged_part,
-                                                   volume_words)
-    from mr_mpi_blast_spark.operators.profile import bloom_positions_py
-
-    load = cache(lambda: read_staged_part(db_dir, part))
-    built = None
-    if index is not None:
-        gen, kw = index
-        built = ensure_index_on_disk(f"{db_dir}:{part}:{gen}", load, **kw)
-        if kw["soft_mask"] or kw["complexity"]:
-            built = None        # its windows miss the masked words
-    if bloom is None:
-        return part, 0
-    bloom_dir, k, bits = bloom
-    path = _bloom_file(bloom_dir, part)
-    n = _bloom_fill(path)
-    if n is None:
-        if built is not None and built.word_size == k:
-            words = built.seed_words()
-        else:
-            words = volume_words([seq for _, seq in load()], k)
-        # upper() per distinct word, as the probe side's _kmer_explode
-        # folds case (soft-masked lowercase still extends)
-        pos = np.unique(bloom_positions_py({w.upper() for w in words},
-                                           bits))
-        # stored as DISTINCT (db_part, pos) ROWS, not a per-volume
-        # array: the probe is a position JOIN (see prune_work_items),
-        # and Spark's array_except against a near-saturated filter
-        # array rebuilds a ~500k-element hash set PER PROBE ROW — the
-        # r11 review-pass pathology that turned a 3 s cold kernel run
-        # into 10+ minutes at sf0.1. Dot-prefixed temp name: Spark's
-        # reader skips it.
-        os.makedirs(bloom_dir, exist_ok=True)
-        tmp = os.path.join(bloom_dir,
-                           f".{os.path.basename(path)}.{os.getpid()}")
-        pq.write_table(pa.table({
-            "db_part": pa.array([part] * len(pos), pa.string()),
-            "pos": pa.array(pos, pa.int64())}), tmp)
-        os.replace(tmp, path)
-        n = len(pos)
-    return part, n
-
-
-def _format_volumes(spark, db_dir: str, index: tuple[str, dict] | None,
-                    bloom: tuple[str, int, int] | None) -> dict[str, int]:
-    """The makeblastdb pass: ONE job, one task per volume
-    (_format_volume), that builds whatever the volume is missing — its
-    content-keyed index pickle and its seed-Bloom sidecar — BEFORE the
-    kernel stage, so search tasks only ever unpickle (~1 s) instead of
-    racing O(volume)-cost builds. The reference formats the database
+def _format_volumes(spark, db_dir: str, gen: str, kw: dict) -> None:
+    """The makeblastdb pass: ONE job, one task per volume, that
+    publishes each missing content-keyed index pickle (keyed by ``gen``
+    and the _index_kw fields ``kw``) BEFORE the kernel stage, so search
+    tasks only ever unpickle (~1 s) instead of racing O(volume)-cost
+    builds. The reference formats the database
     once (doc/USERGUIDE:224-264) and every rank opens the preformatted
     volume; without this separation a cold run had every worker that
     first touched a volume build it concurrently — workers x volumes x
     O(volume) wall, measured 277 s -> ~30 s at the synthesized sf1.0
-    (10x documents). Returns {volume: set Bloom positions}, the
-    saturation gate's input; driver traffic is that map and the
-    volume names (stage_volumes recorded them).
+    (10x documents). Driver traffic is the volume names
+    (stage_volumes recorded them).
 
     Warm-run skip: on a local[*] master the driver and the executors
-    share one filesystem, so a driver-side presence sweep (pickles,
-    sidecar footers) can skip the job entirely; on any OTHER master
-    that check is wrong in both directions (driver has the pickle ->
-    formatting skipped and workers race concurrent builds again;
-    driver lacks it -> only the executor that ran the format task is
-    warmed), so the job is ALWAYS submitted over all volumes and each
-    task no-ops executor-locally on what is present — one
-    metadata-cost task per volume on a warm cluster."""
-    from mr_mpi_blast_spark.kernel.builtin import (index_cache_key,
-                                                   index_cache_path)
+    share one filesystem, so a driver-side presence sweep of the
+    pickles can skip the job entirely; on any OTHER master that check
+    is wrong in both directions (driver has the pickle -> formatting
+    skipped and workers race concurrent builds again; driver lacks it
+    -> only the executor that ran the format task is warmed), so the
+    job is ALWAYS submitted over all volumes and each task no-ops
+    executor-locally on what is present — one metadata-cost task per
+    volume on a warm cluster."""
+    from mr_mpi_blast_spark.kernel.builtin import (ensure_index_on_disk,
+                                                   index_cache_key,
+                                                   index_cache_path,
+                                                   read_staged_part)
+
+    def build(p):
+        ensure_index_on_disk(f"{db_dir}:{p}:{gen}",
+                             lambda: read_staged_part(db_dir, p), **kw)
+
     sc = spark.sparkContext
-    missing, fills = staged_volumes(db_dir), {}
+    missing = staged_volumes(db_dir)
     if sc.master.startswith("local"):
-        todo = []
-        for p in missing:
-            ip = None
-            if index is not None:
-                gen, kw = index
-                ip = index_cache_path(index_cache_key(f"{db_dir}:{p}:{gen}",
-                                                      **kw))
-            n = _bloom_fill(_bloom_file(bloom[0], p)) if bloom else 0
-            if n is None or (ip is not None and not os.path.exists(ip)):
-                todo.append(p)
-            else:
-                fills[p] = n
-        missing = todo
+        missing = [p for p in missing if not os.path.exists(index_cache_path(
+            index_cache_key(f"{db_dir}:{p}:{gen}", **kw)))]
     if missing:
-        fills.update(sc.parallelize(missing, len(missing))
-                     .map(lambda p: _format_volume(db_dir, p, index, bloom))
-                     .collect())
-    return fills
+        sc.parallelize(missing, len(missing)).foreach(build)
 
 
 def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
                    cfg: BlastConfig | None = None,
                    log_dir: str | None = None,
-                   cache_key: str | None = None,
-                   seed_prune: bool = True) -> tuple[DataFrame, int, int]:
+                   cache_key: str | None = None) -> tuple[DataFrame, int, int]:
     """The kernel stage alone: (raw RAW_HITS DataFrame, whole-db residue
     count, whole-db sequence count), the two counts after any
     cfg.dbsize / cfg.n_seqs override. Split from run_search so the
@@ -451,7 +323,8 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
     dbsize = cfg.dbsize if cfg.dbsize is not None else residues
     n_seqs = cfg.n_seqs if cfg.n_seqs is not None else count
     spark = blocked.sparkSession
-    # J1 work items: every block against every partition. Only the
+    # J1 work items: every block against every partition, and the
+    # kernel's exact seed lookup is the only filter. Only the
     # partition NAMES cross the driver (the volume list stage_volumes
     # recorded); broadcast keeps the blocked side's partitioning.
     work = blocked.crossJoin(F.broadcast(staged_parts(spark, db_dir)))
@@ -464,35 +337,11 @@ def run_kernel_raw(queries: DataFrame, subjects: DataFrame,
         cache_key or db_dir, cfg.word_size, cfg.max_kmer_hits,
         cfg.subject_soft_mask, cfg.complexity_filter, cfg.task,
         cfg.mask_fold_case))).encode()).hexdigest()[:12]
-    # the runtime filter (see module section above) keeps only (block,
-    # volume) pairs with possible exact-seed overlap. Silently a no-op
-    # under blastp -threshold (neighborhood seeding makes exact-k-mer
-    # pruning unsound — documented boundary, full work-item set is the
-    # conservative answer).
-    bloom = None
-    if seed_prune and cfg.threshold is None:
-        bloom = (_bloom_dir(db_dir, cfg.word_size, SEED_PRUNE_BITS),
-                 cfg.word_size, SEED_PRUNE_BITS)
-    # ONE format job builds what each volume lacks: the index pickle
-    # (only for a content-addressed gen — the makeblastdb analog; a
-    # fresh dir's gen can never be hit again) and the seed-Bloom sidecar
-    index = (gen, _index_kw(cfg)) if cache_key is not None else None
-    fills = (_format_volumes(spark, db_dir, index, bloom)
-             if index or bloom else {})
-    # saturation gate (r11): at per-volume fill f a single k-mer
-    # false-passes with ~f^K, so a block of n k-mers passes a
-    # share-nothing volume with 1-(1-f^K)^n — ~1 for any
-    # realistically-sized block once f >= SEED_PRUNE_MAX_FILL.
-    # Probing then costs (k-mer hash + join per block) without ever
-    # pruning; skip it on the SPARSEST volume's fill, which the format
-    # job returned.
-    if (bloom is not None and fills
-            and min(fills.values()) / SEED_PRUNE_BITS < SEED_PRUNE_MAX_FILL):
-        keep = prune_work_items(blocked, _read_blooms(spark, bloom[0]),
-                                cfg.word_size,
-                                both_strands=cfg.task != "blastp")
-        work = work.join(F.broadcast(keep), ["db_part", "block_id"],
-                         "left_semi")
+    # ONE format job builds each missing index pickle, only for a
+    # content-addressed gen (the makeblastdb analog; a fresh dir's gen
+    # can never be hit again)
+    if cache_key is not None:
+        _format_volumes(spark, db_dir, gen, _index_kw(cfg))
     # The explicit repartition (not the groupBy's own exchange) matters:
     # the shuffle carries only query rows — a few MB even when the
     # kernel stage is hours of compute — so AQE's size-based coalescing
@@ -572,22 +421,13 @@ def apply_max_target_seqs(hits: DataFrame, cap: int) -> DataFrame:
 def run_search(queries: DataFrame, subjects: DataFrame,
                cfg: BlastConfig | None = None,
                log_dir: str | None = None,
-               cache_key: str | None = None,
-               seed_prune: bool = True) -> DataFrame:
+               cache_key: str | None = None) -> DataFrame:
     """queries(qid, seq, ...) x subjects(sid|defline, db_part, seq)
     -> canonical HITS DataFrame. log_dir enables the reference's
-    TIMING per-rank log files (runlog.py). seed_prune (DEFAULT ON,
-    r12) skips work items with zero possible seed overlap —
-    value-identical output by construction (one-sided Bloom, both
-    strands probed), a no-op under saturation and under blastp
-    -threshold, and its cold cost is one sidecar per volume written by
-    the format job that also builds the index pickles; pass False to
-    force the full work-item set (the escape hatch, e.g. for an A/B
-    parity replay)."""
+    TIMING per-rank log files (runlog.py)."""
     cfg = cfg or BlastConfig()
     raw, dbsize, n_seqs = run_kernel_raw(queries, subjects, cfg,
-                                         log_dir=log_dir, cache_key=cache_key,
-                                         seed_prune=seed_prune)
+                                         log_dir=log_dir, cache_key=cache_key)
     return search_from_raw(raw, dbsize, n_seqs, cfg)
 
 

@@ -19,6 +19,7 @@ the reference collects rank logs.
 
 from __future__ import annotations
 
+import glob
 import os
 import resource
 import socket
@@ -86,8 +87,10 @@ def read_run_logs(spark, log_dir: str) -> DataFrame:
     """Load a rank-log directory as (rank, event, wtime, wall_us,
     user_us, sys_us, detail) — the queryable form of the reference's
     per-rank timing files (its docs post-process them with scripts;
-    here the same analysis is one DataFrame away)."""
-    lines = spark.read.text(os.path.join(log_dir, "*.log"))
+    here the same analysis is one DataFrame away). The rank files are
+    listed here and passed by name: a glob path makes Spark's
+    metadata-dir probe log a FileNotFoundException stack trace."""
+    lines = spark.read.text(sorted(glob.glob(os.path.join(log_dir, "*.log"))))
     rank = F.regexp_extract("value", r"^Rank:([^ ]+) ", 1)
     rest = F.regexp_replace("value", r"^Rank:[^ ]+ ", "")
     parts = F.split(rest, ",")

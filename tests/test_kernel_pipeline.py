@@ -421,26 +421,14 @@ def test_flagship_tail_plan_single_exchange(spark):
     assert plan.index("WindowGroupLimit") < plan.index("Exchange")
 
 
-def test_seed_prune_value_identical_on_fixtures(spark, hits):
-    """r11 runtime filter: seed_prune must never change the hit table
-    (one-sided pruning — a pair with any exact shared word always
-    survives). Same fixtures, same cfg: the ``hits`` fixture runs with
-    the default seed_prune=True, the reference with it off."""
-    cfg = BlastConfig(evalue=1e-6, block_size=400, word_size=11)
-    unpruned = run_search(_queries(spark), _subjects(spark), cfg,
-                          seed_prune=False)
-    cols = ["qid", "sid", "qstart", "qend", "sstart", "send",
-            "bitscore", "evalue"]
-    got = sorted(tuple(r) for r in hits.select(*cols).collect())
-    want = sorted(tuple(r) for r in unpruned.select(*cols).collect())
-    assert got == want and len(got) > 0
+def _pairs(hits):
+    return {(r.qid, r.sid) for r in hits.select("qid", "sid").collect()}
 
 
 def test_seed_prune_skips_disjoint_volume(spark, tmp_path, monkeypatch):
     """A volume whose alphabet shares no k-mer with the queries is
-    skipped entirely (measured skipped-volume count), and the hit
-    table still equals the unpruned run — the fixture the verdict
-    asked for."""
+    dropped by the seed-overlap probe, and the search, which runs
+    every work item, finds the planted hit and nothing in it."""
     from mr_mpi_blast_spark.plans.pipeline import (prune_work_items,
                                                    stage_volumes,
                                                    volume_seed_blooms)
@@ -475,21 +463,15 @@ def test_seed_prune_skips_disjoint_volume(spark, tmp_path, monkeypatch):
     assert ("vol.at", 0) in kept
     assert all(p != "vol.gc" for p, _ in kept), kept  # volume skipped
 
-    base = run_search(queries, subs, cfg, seed_prune=False)
-    pruned = run_search(queries, subs, cfg, seed_prune=True)
-    cols = ["qid", "sid", "qstart", "qend", "bitscore"]
-    assert sorted(map(tuple, pruned.select(*cols).collect())) \
-        == sorted(map(tuple, base.select(*cols).collect()))
-    assert pruned.count() > 0
+    assert _pairs(run_search(queries, subs, cfg)) == {(1, "s_hit")}
 
 
 def test_seed_prune_parity_with_two_live_pairs(spark):
     """Two live (block, volume) pairs that differ in both block and
     volume: q1 alone in block 0 homologous only to vol.a, q2 alone in
     block 1 homologous only to vol.b. The probe keeps exactly those
-    two pairs, and the pruned hit table equals the unpruned one with
-    hits from both — so a filter that loses one live pair (not all of
-    them) fails here."""
+    two pairs, and the search finds exactly their two hits — so a
+    probe that loses one live pair (not all of them) fails here."""
     from mr_mpi_blast_spark.operators.blocks import assign_blocks
     from mr_mpi_blast_spark.plans.pipeline import (prune_work_items,
                                                    stage_volumes,
@@ -518,23 +500,20 @@ def test_seed_prune_parity_with_two_live_pairs(spark):
         cfg.word_size).collect()}
     assert kept == {("vol.a", 0), ("vol.b", 1)}
 
-    cols = ["qid", "sid", "qstart", "qend", "sstart", "send", "bitscore"]
-    base = sorted(map(tuple, run_search(queries, subs, cfg,
-                                        seed_prune=False)
-                      .select(*cols).collect()))
-    pruned = sorted(map(tuple, run_search(queries, subs, cfg,
-                                          seed_prune=True)
-                        .select(*cols).collect()))
-    assert {r[:2] for r in base} == {(1, "s_a"), (2, "s_b")}
-    assert pruned == base
+    assert _pairs(run_search(queries, subs, cfg)) == {(1, "s_a"),
+                                                      (2, "s_b")}
 
 
-def test_seed_prune_keeps_minus_strand_only_block(spark):
-    """r11 review regression: blastn seeds the query on BOTH strands,
-    so a (block, volume) pair whose ONLY homology is a reverse-
-    complement copy must survive pruning. The query sits alone in its
-    block (no forward-hit sibling to mask a forward-only probe — the
-    hole the original parity test left)."""
+def test_seed_prune_keeps_minus_strand_only_block(spark, tmp_path,
+                                                  monkeypatch):
+    """blastn seeds the query on BOTH strands: a (block, volume) pair
+    whose ONLY homology is a reverse-complement copy gives a
+    minus-strand hit, and the both-strand probe keeps the pair (a
+    forward-only probe drops it). The query sits alone in its block,
+    so no forward-hit sibling can keep the pair."""
+    from mr_mpi_blast_spark.plans.pipeline import (prune_work_items,
+                                                   stage_volumes,
+                                                   volume_seed_blooms)
     q = _seq(300, salt=31)
     queries = spark.createDataFrame(
         [(1, "q1", "q1", q, len(q))],
@@ -548,21 +527,30 @@ def test_seed_prune_keeps_minus_strand_only_block(spark):
         "sid string, defline string, db_part string, seq string, "
         "length int")
     cfg = BlastConfig(evalue=1e-3, block_size=400, word_size=11)
-    base = run_search(queries, subs, cfg, seed_prune=False)
-    pruned = run_search(queries, subs, cfg, seed_prune=True)
-    cols = ["qid", "sid", "qstart", "qend", "sstart", "send",
-            "bitscore"]
-    want = sorted(map(tuple, base.select(*cols).collect()))
-    assert len(want) > 0, "fixture must produce a minus-strand hit"
-    assert sorted(map(tuple, pruned.select(*cols).collect())) == want
+    got = run_search(queries, subs, cfg).collect()
+    assert {(r.qid, r.sid) for r in got} == {(1, "s_rc")}
+    assert all(r.sstart > r.send for r in got)      # minus strand
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    db_dir, _, _ = stage_volumes(subs)
+    blooms = volume_seed_blooms(spark, db_dir, cfg.word_size)
+    blocked = queries.selectExpr("0L AS block_id", "qid", "seq")
+
+    def kept(both_strands):
+        return {(r.db_part, r.block_id) for r in prune_work_items(
+            blocked, blooms, cfg.word_size,
+            both_strands=both_strands).collect()}
+    assert kept(True) == {("vol.rc", 0)}
+    assert kept(False) == set()
 
 
 def test_seed_prune_probe_plan_broadcasts_only_the_filter(spark, tmp_path,
                                                           monkeypatch):
-    """The prune probe's plan shape: the volume position table rides a
+    """The probe's plan shape: the volume position table rides a
     BroadcastExchange (bounded at bits rows/volume by construction);
     the query k-mer stream is never shuffled for the membership test
-    (the groupBy that follows is kmer-keyed and map-side-combinable)."""
+    (the groupBy that follows is kmer-keyed and map-side-combinable).
+    The search over the same volumes finds the planted hit only."""
     from mr_mpi_blast_spark.plans.pipeline import (prune_work_items,
                                                    stage_volumes,
                                                    volume_seed_blooms)
@@ -585,61 +573,12 @@ def test_seed_prune_probe_plan_broadcasts_only_the_filter(spark, tmp_path,
     assert join_lines and all("Broadcast" in ln for ln in join_lines), \
         join_lines
 
-
-def test_seed_prune_saturation_gate_skips_probe(spark, monkeypatch):
-    """When every volume's filter fill exceeds the gate, the probe is
-    skipped entirely (saturated filters cannot prune — probing is
-    pure cost) and the result is the plain full-work-item run."""
-    import mr_mpi_blast_spark.plans.pipeline as pl
-
-    monkeypatch.setattr(pl, "SEED_PRUNE_MAX_FILL", 0.0)
-
-    def boom(*a, **k):
-        raise AssertionError("probe ran despite the saturation gate")
-
-    monkeypatch.setattr(pl, "prune_work_items", boom)
-    cfg = BlastConfig(evalue=1e-6, block_size=400, word_size=11)
-    out = pl.run_search(_queries(spark), _subjects(spark), cfg,
-                        seed_prune=True)
-    assert out.count() > 0
-
-
-def test_seed_prune_noop_under_neighborhood_seeding(spark, tmp_path,
-                                                    monkeypatch):
-    """blastp -threshold seeds on NON-exact word matches, so exact
-    k-mer pruning is unsound there — the filter must not even be
-    built: no seed-Bloom sidecar is written (documented conservative
-    no-op). Neither with seed_prune=False. The same search with exact
-    seeding writes one, so the sidecar path checked here is live."""
-    import glob
-
-    import mr_mpi_blast_spark.plans.pipeline as pl
-
-    prot_q = spark.createDataFrame(
-        [(1, "p1", "p1", "MKVLAAGGVLSRT" * 5, 65)],
+    queries = spark.createDataFrame(
+        [(1, "q1", "q1", q, len(q))],
         "qid long, defline string, defline_part string, seq string, "
         "length int")
-    prot_s = spark.createDataFrame(
-        [("sp1", "sp1", "db.00", "MKVLAAGGVLSRT" * 5 + "AAAA", 69)],
-        "sid string, defline string, db_part string, seq string, "
-        "length int")
-    base = dict(task="blastp", word_size=3, evalue=10.0, block_size=400)
-
-    def sidecars(root):
-        return glob.glob(str(tmp_path / root / "blast_db_*_seedbloom*"
-                             / "*.parquet"))
-
-    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "nb"))
-    out = pl.run_search(prot_q, prot_s, BlastConfig(threshold=11, **base),
-                        seed_prune=True)
-    assert out.count() > 0  # ran the FULL work-item set, filter unused
-    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "off"))
-    pl.run_kernel_raw(prot_q, prot_s, BlastConfig(**base), seed_prune=False)
-    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "exact"))
-    pl.run_kernel_raw(prot_q, prot_s, BlastConfig(**base), seed_prune=True)
-    assert not sidecars("nb")
-    assert not sidecars("off")
-    assert sidecars("exact")
+    cfg = BlastConfig(evalue=1e-3, block_size=400, word_size=11)
+    assert _pairs(run_search(queries, subs, cfg)) == {(1, "s1")}
 
 
 def test_stage_meta_without_volume_list_restages(spark, tmp_path,
@@ -667,28 +606,27 @@ def test_stage_meta_without_volume_list_restages(spark, tmp_path,
                   .collect()) == ["db.00", "db.01"]
 
 
-def _spark_sql_blooms(spark, db_dir, k, bits):
-    """The reference seed-Bloom build: every volume's distinct
-    uppercased k-mers exploded and hashed by the Spark-SQL md5
-    positions — the production build before the per-volume format
-    task replaced it."""
-    import mr_mpi_blast_spark.plans.pipeline as pl
-    from mr_mpi_blast_spark.operators.profile import _bloom_positions_spark
-    pos = F.array(*[F.expr(p) for p in _bloom_positions_spark("kmer", bits)])
-    rows = (spark.read.parquet(db_dir)
-            .select("db_part", pl._kmer_explode("seq", k).alias("kmer"))
-            .select("db_part", F.explode(pos).alias("pos")).distinct()
-            .collect())
-    return {(r.db_part, r.pos) for r in rows}
+def bloom_positions_py(keys, bits):
+    """Pure-Python oracle of operators.profile._bloom_positions_spark:
+    a (len(keys), BLOOM_K) array whose column i is pmod(first 32 bits
+    of md5('bloom{i}:' || key), bits), over the keys' UTF-8 bytes."""
+    import hashlib
+
+    from mr_mpi_blast_spark.operators.profile import BLOOM_K
+    keys = [k.encode() for k in keys]
+    out = np.empty((len(keys), BLOOM_K), dtype=np.int64)
+    for i in range(BLOOM_K):
+        salt = f"bloom{i}:".encode()
+        heads = b"".join(hashlib.md5(salt + k).digest()[:4] for k in keys)
+        out[:, i] = np.frombuffer(heads, dtype=">u4") % bits
+    return out
 
 
 def test_bloom_positions_py_matches_spark(spark):
-    """The Python twin hashes the same UTF-8 bytes as the Spark form:
+    """The Python oracle hashes the same UTF-8 bytes as the Spark form:
     lowercase, non-ASCII and empty keys included, at two widths."""
-    import numpy as np
-
-    from mr_mpi_blast_spark.operators.profile import (
-        BLOOM_K, _bloom_positions_spark, bloom_positions_py)
+    from mr_mpi_blast_spark.operators.profile import (BLOOM_K,
+                                                      _bloom_positions_spark)
     keys = ["ACGTACGTACG", "acgtNNNNacg", "MKV", "XBZ", "ÉSSé", "", "ß"]
     df = spark.createDataFrame([(k,) for k in keys], "key string")
     for bits in (8192, 1 << 20):
@@ -735,70 +673,35 @@ def bloom_volumes(spark, tmp_path, request, monkeypatch):
     return k, db_dir
 
 
-def test_seed_bloom_sidecars_match_spark_sql(spark, bloom_volumes):
-    """volume_seed_blooms (the format job's Bloom-only run) writes one
-    sidecar per volume, an empty volume's included, holding exactly
-    the positions the Spark-SQL explode build computes."""
+def test_volume_seed_blooms_match_python_oracle(spark, bloom_volumes):
+    """volume_seed_blooms holds exactly the Bloom positions of each
+    volume's distinct uppercased k-mers, as the pure-Python oracle
+    hashes them; the volume whose sequences are all shorter than the
+    word has none, and the build writes nothing."""
     from mr_mpi_blast_spark.plans.pipeline import (SEED_PRUNE_BITS,
-                                                   _bloom_dir,
                                                    volume_seed_blooms)
     k, db_dir = bloom_volumes
-    want = _spark_sql_blooms(spark, db_dir, k, SEED_PRUNE_BITS)
+    want = set()
+    for _, part, seq in _BLOOM_VOLUMES[k]:
+        words = sorted({seq[i:i + k].upper()
+                        for i in range(len(seq) - k + 1)})
+        want |= {(part, int(p)) for row in
+                 bloom_positions_py(words, SEED_PRUNE_BITS) for p in row}
+    scratch = os.path.dirname(db_dir)
+    before = sorted(os.listdir(scratch))
     got = volume_seed_blooms(spark, db_dir, k).collect()
     assert len(got) == len(want) > 0
-    assert len(os.listdir(_bloom_dir(db_dir, k, SEED_PRUNE_BITS))) == 3
     assert {(r.db_part, r.pos) for r in got} == want
-
-
-@pytest.mark.parametrize("route", ["index", "folded_index", "masked_index",
-                                   "no_index"])
-def test_format_task_bloom_routes_match_spark_sql(spark, bloom_volumes,
-                                                  tmp_path, monkeypatch,
-                                                  route):
-    """Every word-list route of the per-volume format task gives the
-    Spark-SQL positions: read off a freshly built unmasked index, as
-    stored or case-folded (SubjectIndex.seed_words, no second sort),
-    or from a pass of its
-    own when the index is masked (its windows miss masked words) or
-    not built at all. Each task also reports its set-position count,
-    the saturation gate's input."""
-    import mr_mpi_blast_spark.plans.pipeline as pl
-    from mr_mpi_blast_spark.kernel import builtin as B
-
-    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
-    k, db_dir = bloom_volumes
-    cfg = BlastConfig(task="blastp" if k == 3 else "blastn", word_size=k,
-                      lcase_masking=route == "folded_index",
-                      soft_masking=route == "masked_index")
-    assert pl._index_kw(cfg)["fold_case"] == (route in ("folded_index",
-                                                        "masked_index"))
-    index = None if route == "no_index" else (route, pl._index_kw(cfg))
-    bloom_dir = str(tmp_path / f"bloom_{route}")
-    seen = {}
-    for part in pl.staged_volumes(db_dir):
-        B._DB_CACHE.clear()
-        got = pl._format_volume(db_dir, part, index,
-                                (bloom_dir, k, pl.SEED_PRUNE_BITS))
-        assert got[0] == part
-        seen[part] = got[1]
-    if index is not None:     # the same task published the pickles
-        assert len(list((tmp_path / "scratch").glob("*/*.pkl"))) == len(seen)
-    rows = pl._read_blooms(spark, bloom_dir).collect()
-    want = _spark_sql_blooms(spark, db_dir, k, pl.SEED_PRUNE_BITS)
-    assert {(r.db_part, r.pos) for r in rows} == want
-    assert seen == {p: sum(1 for q, _ in want if q == p) for p in seen}
-    # a present sidecar is a no-op that still reports its count
-    assert pl._format_volume(db_dir, part, None,
-                             (bloom_dir, k, pl.SEED_PRUNE_BITS)) \
-        == (part, seen[part])
+    assert len({p for p, _ in want}) == 2      # one volume is empty
+    assert sorted(os.listdir(scratch)) == before
 
 
 def test_cold_kernel_build_submits_one_format_job(spark):
     """Eager Spark jobs of a cold content-keyed run_kernel_raw, before
     the kernel action: the block histogram (4), the staging write (2)
-    and ONE format job that builds every volume's index pickle and
-    seed-Bloom sidecar and returns the Bloom fills. The warm rerun
-    finds everything present and submits only the block jobs."""
+    and ONE format job that builds every volume's index pickle. The
+    warm rerun finds everything present and submits only the block
+    jobs."""
     import uuid
 
     from mr_mpi_blast_spark.plans.pipeline import run_kernel_raw
@@ -817,3 +720,32 @@ def test_cold_kernel_build_submits_one_format_job(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     assert counts == [7, 4], counts
+
+
+def test_cold_search_jobs_and_no_bloom_sidecars(spark, tmp_path,
+                                                monkeypatch):
+    """A cold content-keyed run_search(...).count() submits 13 Spark
+    jobs: the 7 eager ones of
+    test_cold_kernel_build_submits_one_format_job, then 6 for the
+    count. Every work item goes to the kernel, so no probe job runs. No
+    seed-Bloom sidecar appears under the scratch root after a search,
+    with a cache key or without."""
+    import glob
+    import uuid
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path))
+    sc = spark.sparkContext
+    cfg = BlastConfig(evalue=1e-6, block_size=400, word_size=11)
+    group = f"cold-search-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        n = run_search(_queries(spark), _subjects(spark), cfg,
+                       cache_key=f"cold-search:{uuid.uuid4().hex}").count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n > 0
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert run_search(_queries(spark), _subjects(spark), cfg).count() == n
+    assert not glob.glob(str(tmp_path / "**" / "*seedbloom*"),
+                         recursive=True)
+    assert jobs == 13, jobs

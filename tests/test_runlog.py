@@ -98,3 +98,31 @@ def test_run_summary_stages_its_database_once(spark, tmp_path, monkeypatch):
     assert not glob.glob(str(tmp_path / "blast_db_*"))
     assert len(glob.glob(str(tmp_path / "spark_graft_volumes" / "*"
                              / "_stage_meta.json"))) == 1
+
+
+def test_read_run_logs_logs_no_java_stack_trace(tmp_path, capfd):
+    """read_run_logs hands Spark the listed rank files, not a glob, so
+    Spark's metadata-dir probe logs no FileNotFoundException. The JVM
+    writes its log to the stderr it was started with, so the calls run
+    in a fresh process whose stderr is the captured one."""
+    import subprocess
+    import sys
+
+    d = str(tmp_path / "logs")
+    wrapped = timed_kernel(lambda pdf: pd.DataFrame({"x": [0]}), d)
+    wrapped(pd.DataFrame({"db_part": ["p0"], "block_id": [1],
+                          "qid": [1], "seq": ["ACGT"]}))
+    code = ("import sys\n"
+            "from mr_mpi_blast_spark.runlog import read_run_logs, run_summary\n"
+            "from mr_mpi_blast_spark.session import get_spark\n"
+            "spark = get_spark('runlog', shuffle_partitions=1)\n"
+            "rows = run_summary(read_run_logs(spark, sys.argv[1])).collect()\n"
+            "print(len(rows), rows[0].n_calls)\n"
+            "spark.stop()\n")
+    capfd.readouterr()
+    subprocess.run([sys.executable, "-c", code, d], check=True,
+                   cwd=os.path.dirname(os.path.dirname(
+                       os.path.abspath(__file__))))
+    out, err = capfd.readouterr()
+    assert out.split() == ["1", "1"]
+    assert "FileNotFoundException" not in err, err

@@ -136,3 +136,32 @@ def test_point_link_replaces_link_dir_and_file(tmp_path):
     EQ._point_link(link, str(b))
     assert os.path.islink(link) and os.readlink(link) == str(b)
     assert sorted(os.listdir(tmp_path)) == ["a", "b", "current.parquet"]
+
+
+def test_oracle_links_resolve_under_the_import_scratch_root(tmp_path):
+    """The four oracle links are resolved at import under
+    $SPARK_GRAFT_SCRATCH, and the static oracle SQL reads the resolved
+    path: two processes with different scratch roots get disjoint
+    links, so neither repoints what the other checks against."""
+    import json
+    import subprocess
+    import sys
+
+    code = ("import json; from mr_mpi_blast_spark import entry_queries as e; "
+            "print(json.dumps([[e._BLAST_RAW_PATH, e._BLAST_RAW_GAPPED_PATH, "
+            "e._BLAST_RAW_NUCL_PATH, e._IVF_CENT_PATH], "
+            "e.ORACLES['blast_pipeline'], e.ORACLES['ann_ivf_recall']]))")
+    got = {}
+    for root in ("a", "b"):
+        scratch = str(tmp_path / root)
+        env = dict(os.environ, SPARK_GRAFT_SCRATCH=scratch)
+        out = subprocess.run([sys.executable, "-c", code], env=env,
+                             check=True, capture_output=True, text=True,
+                             cwd=os.path.dirname(os.path.dirname(
+                                 os.path.abspath(__file__))))
+        links, flagship_sql, ivf_sql = json.loads(out.stdout.splitlines()[-1])
+        assert len(set(links)) == 4
+        assert all(os.path.dirname(p) == scratch for p in links), links
+        assert links[0] in flagship_sql and links[3] in ivf_sql
+        got[root] = set(links)
+    assert not got["a"] & got["b"]
